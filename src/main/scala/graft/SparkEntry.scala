@@ -541,7 +541,7 @@ object SparkEntry {
 
 
     // S2+A1 end-to-end through the REAL csv_expert parse path: commented
-    // preamble (300 '#' lines — exercises sniffHeader's widening probe),
+    // preamble (300 '#' lines — sniffHeader streams the whole preamble),
     // `;`-separated, corrupt lines, a 15-min outage; sniff header → comment
     // scan → lenient interval parse → 10-min resample. The DuckDB oracle
     // re-reads the same file with skip/all_varchar + TRY_CAST.

@@ -5,7 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -25,7 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * What makes this engine-grade rather than a parser wrapper:
   *  - schema inference happens once on the driver from the first file's
-  *    header (the bounded widening sniff);
+  *    header ([[CamsExpertCsv.sniffHeader]]: a bounded streaming read
+  *    that starts no Spark job);
   *  - column pruning is pushed INTO the reader
   *    (`SupportsPushDownRequiredColumns`): a projection of 2 columns
   *    splits each line and parses only those 2 fields — the V2 analogue
@@ -64,47 +65,13 @@ class CamsDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val first = paths(options).headOption
       .getOrElse(throw new IllegalArgumentException("cams source: no files matched"))
-    CamsSchemas.fromHeader(CamsSchemas.sniffHeaderHadoop(first,
-      SparkSession.active.sessionState.newHadoopConf()))
+    CamsExpertCsv.schemaFor(CamsExpertCsv.sniffHeader(SparkSession.active, first.toString))
   }
 
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     CamsTable(schema, paths(new CaseInsensitiveStringMap(properties)))
-}
-
-private[io] object CamsSchemas {
-
-  /** Schema from header names: observation period string, rest doubles —
-    * [[CamsExpertCsv]]'s typing rule.
-    */
-  def fromHeader(names: Seq[String]): StructType =
-    StructType(names.map { n =>
-      if (n == "Observation period") StructField(n, StringType)
-      else StructField(n, DoubleType)
-    })
-
-  /** Driver-side header sniff over Hadoop FS (works for any scheme, not
-    * just local files): stream lines, collect the `#` prefix, stop at
-    * the first data line.
-    */
-  def sniffHeaderHadoop(path: Path, conf: Configuration): Seq[String] = {
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    try {
-      val reader = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-      var last: String = null
-      var line = reader.readLine()
-      while (line != null && line.startsWith("#")) {
-        last = line
-        line = reader.readLine()
-      }
-      require(last != null, s"no '#' header found in $path")
-      last.dropWhile(_ == '#').trim.split(";").map(_.trim).toSeq
-    } finally in.close()
-  }
 }
 
 private[io] case class CamsTable(tableSchema: StructType, files: Seq[Path])

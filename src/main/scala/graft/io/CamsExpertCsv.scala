@@ -1,5 +1,10 @@
 package graft.io
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -25,23 +30,30 @@ object CamsExpertCsv {
   private val stringCols = Set("Observation period")
 
   /** Driver-side header sniff: last `#`-prefixed line before data.
-    * Probes geometrically from `initialProbe` lines, so an arbitrarily
-    * long commented preamble still resolves — each probe reads only the
-    * top of the file (a bounded driver-side read at any file size).
+    * Streams the first file `path` matches, by path (a glob, or a
+    * directory's visible files), through Hadoop `FileSystem` (any scheme,
+    * codecs by extension) and stops at the first data line: the cost is
+    * the preamble's at any file size, and no Spark job starts.
     */
-  def sniffHeader(spark: SparkSession, path: String, initialProbe: Int = 256): Seq[String] = {
-    val lines = spark.read.textFile(path)
-    @annotation.tailrec
-    def probe(limit: Int): Seq[String] = {
-      val head = lines.head(limit)
-      val commented = head.takeWhile(_.startsWith("#"))
-      // Every fetched line commented and the probe full: the preamble may
-      // continue past the window — widen and retry.
-      if (commented.length == limit) probe(limit * 4) else commented
-    }
-    val commented = probe(initialProbe.max(1))
-    require(commented.nonEmpty, s"no '#' header found in $path")
-    commented.last.dropWhile(_ == '#').trim.split(";").map(_.trim).toSeq
+  def sniffHeader(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val glob = new Path(path)
+    val fs = glob.getFileSystem(conf)
+    val file = Option(fs.globStatus(glob)).toSeq.flatten
+      .flatMap(s => if (!s.isDirectory) Seq(s) else fs.listStatus(s.getPath).toSeq
+        .filter(c => c.isFile && !Seq("_", ".").exists(c.getPath.getName.startsWith)))
+      .map(_.getPath).minByOption(_.toString)
+      .getOrElse(throw new IllegalArgumentException(s"no csv_expert file matches $path"))
+    val raw = fs.open(file)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(file))
+      .fold[InputStream](raw)(_.createInputStream(raw))
+    val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    val header =
+      try Iterator.continually(reader.readLine())
+        .takeWhile(l => l != null && l.startsWith("#")).reduceOption((_, l) => l)
+      finally in.close()
+    require(header.isDefined, s"no '#' header found in $path")
+    header.get.dropWhile(_ == '#').trim.split(";").map(_.trim).toSeq
   }
 
   def schemaFor(columns: Seq[String]): StructType =

@@ -19,10 +19,13 @@ object Sinks {
 
   /** S7: single-header CSV, time-ordered, for small summary outputs only
     * (`coalesce(1)` is deliberate — never use for large data).
+    * The one task sorts locally: a global `orderBy` would add a sampling
+    * job and a range exchange to order what one partition orders alone.
     */
   def writeCsv(df: DataFrame, path: String, orderCol: Option[String] = None): Unit = {
-    val ordered = orderCol.fold(df)(c => df.orderBy(col(c)))
-    ordered.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+    val one = df.coalesce(1)
+    orderCol.fold(one)(c => one.sortWithinPartitions(col(c)))
+      .write.mode("overwrite").option("header", "true").csv(path)
   }
 
   /** CF-style global attributes from the reference compile step

@@ -25,8 +25,8 @@ object VerifyFixtures {
 
   // ----------------------------------------------------------- csv_expert
   /** Number of `#` lines atop the CAMS fixture (metadata + header) — the
-    * DuckDB oracle skips exactly this many. Over 256 on purpose: the
-    * driver path then exercises sniffHeader's widening probe too.
+    * DuckDB oracle skips exactly this many. A long preamble on purpose:
+    * the driver path then proves sniffHeader reads past any fixed window.
     */
   val camsPreambleLines = 300
 

@@ -10,11 +10,13 @@ import org.apache.spark.sql.types.NumericType
   * `/root/reference/code/get-cams-solrad-ts.py:93-94` — left-closed,
   * left-labeled bins over all numeric columns, mean skipping NaN.
   *
-  * Spark mapping: `groupBy(window(ts, width))` + `avg` per numeric column.
-  * `window()` buckets are epoch-aligned and left-closed/left-labeled,
-  * matching pandas' defaults; `avg` skips nulls, matching `mean()`.
-  * One shuffle keyed by (window, extra keys) with map-side partial
-  * aggregation — scales linearly with input at any SF.
+  * Spark mapping: `groupBy(us - pmod(us, width))` over `unix_micros(ts)`
+  * + `avg` per numeric column. The exact long bucket is epoch-aligned and
+  * left-closed/left-labeled (also before 1970), matching pandas' defaults
+  * and `window(ts, width).start`, and keeps the aggregate on Spark's fast
+  * hash map, which `window()`'s struct key does not; `avg` skips nulls,
+  * matching `mean()`. One shuffle keyed by (bucket, extra keys) with
+  * map-side partial aggregation — scales linearly with input at any SF.
   *
   * pandas also emits *empty* bins as NaN rows over the full min→max span;
   * that is [[densify]] — kept separate because most consumers (the inner
@@ -30,8 +32,9 @@ object Resample {
 
   /** Tumbling mean of `valueCols` (default: all numeric columns except
     * keys) bucketed on `timeCol` every `minutes`, optionally keyed by
-    * `extraKeys` (e.g. station). Output: `time` = bucket start timestamp,
-    * extra keys, one mean per value column (same name), plus `n_rows`.
+    * `extraKeys` (e.g. station); null times drop, as in `window()`.
+    * Output: `time` = bucket start timestamp, extra keys, one mean per
+    * value column (same name), plus `n_rows`.
     */
   def tumblingMean(
       df: DataFrame,
@@ -42,11 +45,15 @@ object Resample {
     val vals =
       if (valueCols.nonEmpty) valueCols
       else numericColumns(df).filterNot(c => c == timeCol || extraKeys.contains(c))
-    val keyCols = window(col(timeCol), s"$minutes minutes").as("w") +: extraKeys.map(col)
+    val us = unix_micros(col(timeCol))
+    val width = lit(minutes * 60L * 1000000L)
+    val keyCols = (us - pmod(us, width)).as("__bucket_us") +: extraKeys.map(col)
     val aggs = vals.map(c => avg(col(c)).as(c)) :+ count(lit(1)).as("n_rows")
-    df.groupBy(keyCols: _*)
+    df.where(col(timeCol).isNotNull)
+      .groupBy(keyCols: _*)
       .agg(aggs.head, aggs.tail: _*)
-      .select(col("w.start").as("time") +: (extraKeys ++ vals :+ "n_rows").map(col): _*)
+      .select(timestamp_micros(col("__bucket_us")).as("time") +:
+        (extraKeys ++ vals :+ "n_rows").map(col): _*)
   }
 
   /** R1: densify a bucketed series to the full cartesian grid

@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object TimeOps {
 
-  /** F1: take the start of an ISO interval string `"start/end"`. */
-  def intervalStart(c: Column): Column = split(c, "/").getItem(0)
+  /** F1: the start of an ISO interval `"start/end"` (the whole value
+    * without a `/`); byte-level, unlike `split`'s String + regex.
+    */
+  def intervalStart(c: Column): Column = substring_index(c, "/", 1)
 
   /** F1+F2+F3: parse the start of an ISO interval to a timestamp.
     * `try_to_timestamp` yields null on parse failure even under ANSI mode

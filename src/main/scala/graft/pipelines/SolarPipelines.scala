@@ -20,6 +20,9 @@ object SolarPipelines {
   /** Entry point 1 (`get-cams-solrad-ts.py:47-96`): raw 1-minute
     * csv_expert → parse interval start → numeric projection → tumbling
     * 10-min mean. Returns the processed series with a `time` column.
+    * Through `Sinks.writeCsv(…, Some("time"))` a file is two Spark jobs:
+    * scan + partial aggregation, then one task that does the final
+    * aggregation, the sort and the write (the header sniff starts none).
     */
   def resampleRaw(spark: SparkSession, rawPath: String, minutes: Int = 10): DataFrame = {
     val raw = CamsExpertCsv.read(spark, rawPath)

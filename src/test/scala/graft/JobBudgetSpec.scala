@@ -1,0 +1,25 @@
+package graft
+
+import java.nio.file.Files
+
+import graft.io.{Sinks, VerifyFixtures}
+import graft.pipelines.SolarPipelines
+
+/** Job-count guardrail for the station-year ingest path (entry point 1:
+  * csv_expert → 10-min resample → ordered CSV), beside [[PlanBudgetSpec]]'s
+  * shuffle pins. Each job pays Spark's fixed scheduling cost once per
+  * file, so a spelling that adds one (a Spark-side header probe, a range
+  * sort's sampling job) fails here, not only in `perfbench`'s timings.
+  */
+class JobBudgetSpec extends SparkTestBase {
+
+  test("resampleRaw + writeCsv of one csv_expert file starts exactly 2 jobs") {
+    val path = VerifyFixtures.camsExpertFixture()
+    val out = Files.createTempDirectory("graft-job-budget").resolve("out").toString
+    // job 1: scan + partial aggregation; job 2: final aggregation, sort
+    // and write in the one coalesced task. The sniff runs on the driver.
+    val (_, jobs) = JobCounter(spark)(
+      Sinks.writeCsv(SolarPipelines.resampleRaw(spark, path), out, Some("time")))
+    assert(jobs === 2)
+  }
+}

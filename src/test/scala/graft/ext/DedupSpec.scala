@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.SparkTestBase
+import graft.{JobCounter, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkTestBase {
@@ -117,21 +117,13 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("wordJaccardPairs with maxDocFreq builds its plan without running a job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val frame = Dedup.wordJaccardPairs(docs, "doc_id", "text", 0.5, maxDocFreq = 0.9)
-      assert(frame.columns.toSeq === Seq("id_a", "id_b", "jaccard"))
-      Thread.sleep(1000) // let any listener events flush
-      assert(jobs.get() === 0, "operator construction must not run a Spark job")
-      // and the pruned plan still finds the exact dup when materialized
-      val keys = frame.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(keys.contains((1L, 2L)))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (frame, jobs) = JobCounter(spark)(
+      Dedup.wordJaccardPairs(docs, "doc_id", "text", 0.5, maxDocFreq = 0.9))
+    assert(frame.columns.toSeq === Seq("id_a", "id_b", "jaccard"))
+    assert(jobs === 0, "operator construction must not run a Spark job")
+    // and the pruned plan still finds the exact dup when materialized
+    val keys = frame.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(keys.contains((1L, 2L)))
   }
 
   test("minHashPairs drops degenerate hot buckets instead of going quadratic") {

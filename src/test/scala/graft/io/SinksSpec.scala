@@ -1,6 +1,8 @@
 package graft.io
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
@@ -25,12 +27,46 @@ class SinksSpec extends SparkTestBase {
     assert(pruned.select("time_epoch").as[Long].head() === 1704067200L)
   }
 
+  /** Visible files of a sink directory with their lines (`part-` names
+    * cut to the prefix, checksums skipped).
+    */
+  private def listing(out: String): Seq[(String, Seq[String])] =
+    Files.list(Paths.get(out)).iterator().asScala.toSeq
+      .filterNot(_.getFileName.toString.startsWith("."))
+      .map { p =>
+        val n = p.getFileName.toString
+        (if (n.startsWith("part-")) "part" else n, Files.readAllLines(p).asScala.toSeq)
+      }
+      .sortBy(_._1)
+
   test("writeCsv orders by the requested column and writes one header file") {
-    val df = Seq((3, "c"), (1, "a"), (2, "b")).toDF("k", "v")
+    // 8 input partitions of shuffled keys: the order must come from the sink
+    val keys = new scala.util.Random(7).shuffle((1 to 500).toList)
+    val df = keys.map(k => (k, s"v$k")).toDF("k", "v").repartition(8)
+    assert(df.rdd.getNumPartitions === 8)
     val out = Files.createTempDirectory("graft-csv").resolve("out").toString
     Sinks.writeCsv(df, out, orderCol = Some("k"))
-    val lines = spark.read.option("header", "true").csv(out)
+    val parts = listing(out).filter(_._1 == "part")
+    assert(parts.length === 1, listing(out).map(_._1))
+    val lines = parts.head._2
+    assert(lines.head === "k,v")
+    assert(lines.count(_ == "k,v") === 1)
+    assert(lines.tail.map(_.split(",")(0).toInt) === (1 to 500))
+    val back = spark.read.option("header", "true").csv(out)
       .select("k").as[String].collect().toSeq
-    assert(lines === Seq("1", "2", "3"))
+    assert(back === (1 to 500).map(_.toString))
+  }
+
+  test("writeCsv of an empty input writes one header-only part file and _SUCCESS") {
+    val local = Seq.empty[(Int, String)].toDF("k", "v")
+    val scanned = spark.range(100).select(col("id").cast("int").as("k"), lit("x").as("v"))
+      .where(col("k") < 0).repartition(8)
+    val got = Seq(local, scanned).map { df =>
+      val out = Files.createTempDirectory("graft-csv-empty").resolve("out").toString
+      Sinks.writeCsv(df, out, orderCol = Some("k"))
+      listing(out)
+    }
+    val headerOnly = Seq("_SUCCESS" -> Seq.empty[String], "part" -> Seq("k,v"))
+    assert(got === Seq(headerOnly, headerOnly))
   }
 }

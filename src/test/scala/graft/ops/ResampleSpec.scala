@@ -86,6 +86,32 @@ class ResampleSpec extends SparkTestBase {
     assert(got(8) === (("b", 600L, Some(10.0))))
   }
 
+  test("long bucket key equals window().start: pre-1970, exact boundaries, null times") {
+    def utc(s: String) = Timestamp.from(java.time.Instant.parse(s))
+    val df = Seq(
+      Some(utc("1960-06-15T12:34:56.789Z")),
+      Some(utc("1969-12-31T23:50:00Z")),        // boundary before the epoch
+      Some(utc("1969-12-31T23:55:30Z")),        // floors to 23:50, not 00:00
+      Some(utc("1969-12-31T23:59:59.999999Z")),
+      Some(utc("1970-01-01T00:00:00Z")),        // the epoch itself
+      Some(utc("2024-01-01T10:10:00Z")),        // boundary after the epoch
+      Some(utc("2024-01-01T10:19:59.999999Z")),
+      None, None                                // dropped, as window() drops them
+    ).zipWithIndex.map { case (t, i) => (t, i.toDouble) }.toDF("time", "v")
+    val got = Resample.tumblingMean(df, "time", 10)
+    val want = df.groupBy(window(col("time"), "10 minutes").as("w"))
+      .agg(avg(col("v")).as("v"), count(lit(1)).as("n_rows"))
+      .select(col("w.start").as("time"), col("v"), col("n_rows"))
+    assert(got.schema.map(f => (f.name, f.dataType)) === want.schema.map(f => (f.name, f.dataType)))
+    assert(got.schema("time").dataType === org.apache.spark.sql.types.TimestampType)
+    val rows = got.orderBy("time").collect().map(r => (r.getTimestamp(0), r.getDouble(1), r.getLong(2)))
+    assert(rows.toSeq === want.orderBy("time").collect()
+      .map(r => (r.getTimestamp(0), r.getDouble(1), r.getLong(2))).toSeq)
+    assert(rows.map(_._1).toSeq === Seq("1960-06-15T12:30:00Z", "1969-12-31T23:50:00Z",
+      "1970-01-01T00:00:00Z", "2024-01-01T10:10:00Z").map(utc))
+    assert(rows.map(_._3).sum === 7L)
+  }
+
   test("resample of a union equals resample over concatenated input") {
     val a = Seq((ts("2024-01-01 00:00:00"), 2.0)).toDF("time", "v")
     val b = Seq((ts("2024-01-01 00:01:00"), 4.0)).toDF("time", "v")
