@@ -19,7 +19,7 @@ object ExtQueries {
     * mid-read, while re-runs within one application reuse (overwrite)
     * the same path instead of accreting garbage.
     */
-  private def scratchDir(s: SparkSession, tag: String, dir: String): String =
+  private[graft] def scratchDir(s: SparkSession, tag: String, dir: String): String =
     s"target/$tag-${s.sparkContext.applicationId}-${(dir.hashCode & 0x7fffffff).toHexString}"
 
   /** Catalog-table analogue of [[scratchDir]] (identifier-safe): store

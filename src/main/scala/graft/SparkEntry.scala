@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops._
 
@@ -25,13 +27,16 @@ object SparkEntry {
     * replicas ([[graft.io.ScaleReplicate]]) are parquet DIRECTORIES of
     * part files — `pathGlobFilter` matches leaf *file* names only, so
     * the same glob would silently stream zero files; stream the
-    * directory itself instead.
+    * directory itself instead. The path is classified through its
+    * Hadoop `FileSystem`, so a `file:` URI or another scheme classifies
+    * like a plain local path.
     */
   private def streamTable(s: SparkSession, dir: String, table: String) = {
     val path = s"$dir/$table.parquet"
     val schema = s.read.parquet(path).schema
+    val hp = new Path(path)
     val raw =
-      if (new java.io.File(path).isDirectory)
+      if (hp.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(hp).isDirectory)
         s.readStream.schema(schema).parquet(path)
       else
         s.readStream.schema(schema)
@@ -41,6 +46,9 @@ object SparkEntry {
     // proper TimestampType regardless of the fixture's encoding.
     Tables.normalizeTs(raw)
   }
+
+  /** Source parquet bytes per streaming state partition (8 MB). */
+  private val StatePartitionBytes = 8L << 20
 
   /** Size a streaming query's state/shuffle partition count to its
     * SOURCE BYTES instead of the core count, for the eager region of a
@@ -55,21 +63,22 @@ object SparkEntry {
     * MACHINE: the round-10 scaling block measured the stream-stream
     * joins running 2× FASTER at 8 cores than 32 purely because fewer
     * state partitions existed. Partitioning should follow the data
-    * (guide §2.2): one partition per `graft.stream.statePartitionBytes`
-    * of source parquet (default 32 MB compressed ≈ a few hundred MB of
-    * in-flight rows), clamped to [1, 4096]. The conf is restored before
-    * the query function returns; the post-stream comparison plans are
-    * lazy and execute under the caller's configuration as before.
+    * (guide §2.2): one partition per [[StatePartitionBytes]] of source
+    * parquet (8 MB compressed ≈ a few hundred MB of in-flight rows),
+    * measured with Hadoop `getContentSummary` so any Hadoop path works,
+    * clamped to [1, 4096]. A missing path raises
+    * `FileNotFoundException`. The conf is restored before the query
+    * function returns; the post-stream comparison plans are lazy and
+    * execute under the caller's configuration as before.
     */
-  private def withBoundedStreamState[T](s: SparkSession, paths: Seq[String])
+  private[graft] def withBoundedStreamState[T](s: SparkSession, paths: Seq[String])
       (body: => T): T = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-      else f.length()
-    val bytes = paths.map(p => sizeOf(new java.io.File(p))).sum
-    val target = math.max(1L,
-      s.conf.get("graft.stream.statePartitionBytes", (8L << 20).toString).toLong)
-    val parts = math.max(1L, math.min(4096L, (bytes + target - 1) / target))
+    val bytes = paths.map { p =>
+      val hp = new Path(p)
+      hp.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(hp).getLength
+    }.sum
+    val parts = math.max(1L, math.min(4096L,
+      (bytes + StatePartitionBytes - 1) / StatePartitionBytes))
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     try body
@@ -88,6 +97,39 @@ object SparkEntry {
       : (SparkSession, String) => DataFrame =
     (s, dir) => withBoundedStreamState(
       s, tables.map(tb => s"$dir/$tb.parquet"))(fn(s, dir))
+
+  /** Runs a streaming plan to completion — `Trigger.AvailableNow` into
+    * the memory sink under `view`, in output `mode` — and returns the
+    * sink's table: the edge every memory-sink `q_st*` gate compares
+    * with its batch oracle. The view is dropped first, so a re-run in
+    * the same session starts from an empty table.
+    */
+  private[graft] def runToMemory(s: SparkSession, df: DataFrame, view: String,
+      mode: String): DataFrame = {
+    s.catalog.dropTempView(view)
+    df.writeStream.format("memory").queryName(view).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    s.table(view)
+  }
+
+  /** Output and checkpoint dirs of a file-sink or foreachBatch gate:
+    * absolute, scoped per (application, dir) like
+    * [[ExtQueries.scratchDir]] so concurrent sessions and the bench's
+    * base/scaled passes never clobber each other, and deleted through
+    * Hadoop `FileSystem` first so a re-run starts from an empty sink and
+    * a fresh checkpoint.
+    */
+  private[graft] def resetStreamDirs(s: SparkSession, tag: String, dir: String)
+      : (String, String) = {
+    def reset(kind: String): String = {
+      val p = new Path(ExtQueries.scratchDir(s, s"${tag}_$kind", dir))
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val abs = fs.makeQualified(p)
+      fs.delete(abs, true)
+      abs.toString
+    }
+    (reset("out"), reset("ckpt"))
+  }
 
   /** Exact decimal sum of a double column, surfaced back as double. */
   private def dsum(c: Column, scale: Int = 2): Column =
@@ -872,15 +914,10 @@ object SparkEntry {
     // streaming/StreamResampleSpec). The streamed answer must equal the
     // batch groupBy bit-for-bit, which the DuckDB oracle pins.
     "q_st1_stream_resample" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val events = streamTable(s, dir, "events")
       val agg = graft.streaming.StreamResample.tumblingMean(
         events, "ts", 10, Seq("value"), extraKeys = Seq("event_type"))
-      s.catalog.dropTempView("g_st1")
-      val q = agg.writeStream.format("memory").queryName("g_st1")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st1").select(
+      runToMemory(s, agg, "g_st1", "complete").select(
         TimeOps.epochSeconds(col("time")).as("bucket_start"),
         col("event_type"),
         round(col("value"), 6).as("avg_value"),
@@ -900,16 +937,11 @@ object SparkEntry {
     // second-aligned window-end lattice, so the <=-vs-< eviction
     // boundary can never bite regardless of the fixture's max(ts).
     "q_st10_stream_late" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val events = streamTable(s, dir, "events")
       val agg = graft.streaming.StreamResample.tumblingMean(
         events, "ts", 10, Seq("value"), watermark = "7200500 milliseconds",
         extraKeys = Seq("event_type"))
-      s.catalog.dropTempView("g_st10")
-      val q = agg.writeStream.format("memory").queryName("g_st10")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st10").select(
+      runToMemory(s, agg, "g_st10", "append").select(
         TimeOps.epochSeconds(col("time")).as("bucket_start"),
         col("event_type"),
         round(col("value"), 6).as("avg_value"),
@@ -921,15 +953,10 @@ object SparkEntry {
     // Projecting JUST the fingerprint keeps the emitted set independent
     // of arrival order, so the batch DISTINCT oracle pins it exactly.
     "q_st2_stream_dedup" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val docs = streamTable(s, dir, "documents")
       val fp = docs.select(substring(md5(col("text")), 1, 16).as("fp"))
         .dropDuplicates("fp")
-      s.catalog.dropTempView("g_st2")
-      val q = fp.writeStream.format("memory").queryName("g_st2")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st2")
+      runToMemory(s, fp, "g_st2", "append")
     }),
 
     // §2.10 driver-gated custom state: the flatMapGroupsWithState
@@ -939,7 +966,6 @@ object SparkEntry {
     // (one source file, default maxFilesPerTrigger) makes the per-group
     // fold order the tracker's own within-batch sort.
     "q_st3_stream_tracker" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val sp = s
       import sp.implicits._
       val events = streamTable(s, dir, "events")
@@ -948,11 +974,7 @@ object SparkEntry {
           date_trunc("second", col("ts")).as("time"))
         .as[graft.streaming.StatefulTracker.Obs]
       val tracked = graft.streaming.StatefulTracker.track(obs).toDF()
-      s.catalog.dropTempView("g_st3")
-      val q = tracked.writeStream.format("memory").queryName("g_st3")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st3").select(
+      runToMemory(s, tracked, "g_st3", "append").select(
         col("station"),
         col("n"),
         TimeOps.epochSeconds(col("last")).as("last_sec"),
@@ -962,17 +984,11 @@ object SparkEntry {
     // §2.10 driver-gated file-sink persistence: the production
     // streaming path (parquet sink + checkpoint) run to completion and
     // READ BACK — output-commit correctness, not just in-memory state.
-    // Output and checkpoint are cleared first so the query is
-    // idempotent across driver runs.
+    // Output and checkpoint are scoped per (application, dir) and
+    // cleared first, so the query is idempotent across driver runs and
+    // runs on different dirs never share a sink.
     "q_st5_stream_file_sink" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val out = new java.io.File("target/g_st5_out").getAbsolutePath
-      val ckpt = new java.io.File("target/g_st5_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
+      val (out, ckpt) = resetStreamDirs(s, "g_st5", dir)
       val docs = streamTable(s, dir, "documents")
       val fp = docs.select(col("doc_id"),
         substring(md5(col("text")), 1, 16).as("fp"))
@@ -994,7 +1010,6 @@ object SparkEntry {
     // (e.g. adding maxFilesPerTrigger) would let the watermark drop
     // out-of-order rows and flake this gate; keep single-batch here.
     "q_st6_stream_join" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       def ev() = streamTable(s, dir, "events")
       val clicks = ev().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -1006,11 +1021,7 @@ object SparkEntry {
           clicks, purchases, Seq("user_id"), "click_ts", "purchase_ts",
           minLagSec = 0L, maxLagSec = 600L, watermarkDelay = "30 minutes")
         .select(col("click_id"), col("purchase_id"))
-      s.catalog.dropTempView("g_st6")
-      val q = joined.writeStream.format("memory").queryName("g_st6")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st6")
+      runToMemory(s, joined, "g_st6", "append")
     }),
 
     // §2.10 driver-gated LEFT OUTER stream-stream interval join — the
@@ -1025,7 +1036,6 @@ object SparkEntry {
     // The 500 ms delay fraction keeps the eviction boundary off any
     // second-aligned timestamp lattice (same defense as q_st10).
     "q_st11_stream_join_outer" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       def ev() = streamTable(s, dir, "events")
       val clicks = ev().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -1038,11 +1048,7 @@ object SparkEntry {
           minLagSec = 0L, maxLagSec = 600L,
           watermarkDelay = "1800500 milliseconds")
         .select(col("click_id"), col("purchase_id"))
-      s.catalog.dropTempView("g_st11")
-      val q = joined.writeStream.format("memory").queryName("g_st11")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st11")
+      runToMemory(s, joined, "g_st11", "append")
     }),
 
     // §2.10 driver-gated streaming NEAR-DUP ingest: the continuous form
@@ -1061,13 +1067,7 @@ object SparkEntry {
       // sessions and the bench's base/scaled passes never clobber each
       // other; cleared up front so reruns stay idempotent
       val store = ExtQueries.scratchTable(s, "g_st8_store", dir)
-      val out = new java.io.File(s"target/${store}_out").getAbsolutePath
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
+      val (out, ckpt) = resetStreamDirs(s, "g_st8", dir)
       Seq(s"${store}_bands", s"${store}_sigs")
         .foreach(tb => s.sql(s"DROP TABLE IF EXISTS `$tb`"))
       // %5 subsample + base-replica pin: the gate compares TWO full
@@ -1109,12 +1109,11 @@ object SparkEntry {
 
     // §2.10 driver-gated BUILT-IN session windows: Spark's native
     // session_window() grouping (dynamic-gap session aggregation in
-    // the engine, complementing the custom flatMapGroupsWithState
-    // sessionizer) run to completion — the emitted (user, session
-    // start, count) set must equal the batch gap-sessionization the
-    // oracle computes with lag + running sum.
+    // the engine; cross-batch session merging is spec-pinned in
+    // streaming/StreamSessionWindowSpec) run to completion — the
+    // emitted (user, session start, count) set must equal the batch
+    // gap-sessionization the oracle computes with lag + running sum.
     "q_st7_session_window" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val events = streamTable(s, dir, "events")
       // whole-second truncation (as q_st3): sub-second parts would make
       // the oracle's epoch-seconds gap arithmetic diverge at boundaries
@@ -1123,11 +1122,7 @@ object SparkEntry {
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"))
-      s.catalog.dropTempView("g_st7")
-      val q = agg.writeStream.format("memory").queryName("g_st7")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st7").select(
+      runToMemory(s, agg, "g_st7", "complete").select(
         col("user_id"),
         TimeOps.epochSeconds(col("session_window.start")).as("session_start"),
         col("n_events"))
@@ -1139,7 +1134,6 @@ object SparkEntry {
     // makes the emitted set bit-identical to the batch operator, so
     // this query SHARES the q_ext_gaps oracle.
     "q_st9_stream_gaps" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val sp = s
       import sp.implicits._
       val events = streamTable(s, dir, "events")
@@ -1150,11 +1144,7 @@ object SparkEntry {
           col("event_id").as("id"))
         .as[graft.streaming.StreamGaps.GapObs]
       val out = graft.streaming.StreamGaps.gaps(obs, 3600L).toDF()
-      s.catalog.dropTempView("g_st9")
-      val q = out.writeStream.format("memory").queryName("g_st9")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st9").select(
+      runToMemory(s, out, "g_st9", "append").select(
         col("key").as("event_type"),
         col("gap_start_us"), col("gap_end_us"), col("gap_us"),
         expr("gap_us div 1000000").as("gap_seconds"))
@@ -1168,18 +1158,13 @@ object SparkEntry {
     // boundaries; with the fixture's single AvailableNow batch it
     // shares q_ext_heavy_hitters' oracle outright.
     "q_st12_stream_heavy_hitters" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val k = 40
       val words = streamTable(s, dir, "documents")
         .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
         .filter(col("w") =!= "")
       val mg = udaf(graft.ext.HeavyHitters.MisraGries(k))
       val agg = words.agg(mg(col("w")).as("summary"))
-      s.catalog.dropTempView("g_st12")
-      val q = agg.writeStream.format("memory").queryName("g_st12")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val summary = s.table("g_st12")
+      val summary = runToMemory(s, agg, "g_st12", "complete")
       val batchWords = Tables.documents(s, dir)
         .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
         .filter(col("w") =!= "")
@@ -1205,15 +1190,10 @@ object SparkEntry {
     // batch-boundary-independent, so the gate hash-checks the batch
     // exact counts and pins the ±10% (≫3σ at rsd=0.02) contract.
     "q_st13_stream_distinct" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val events = streamTable(s, dir, "events")
       val agg = graft.streaming.StreamDistinct.windowedApproxDistinct(
         events, "ts", "user_id", Seq("event_type"), windowMinutes = 60)
-      s.catalog.dropTempView("g_st13")
-      val q = agg.writeStream.format("memory").queryName("g_st13")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val est = s.table("g_st13").select(
+      val est = runToMemory(s, agg, "g_st13", "complete").select(
         TimeOps.epochSeconds(col("window.start")).as("bucket_start"),
         col("event_type"), col("approx_distinct"))
       val exact = Tables.events(s, dir)
@@ -1234,18 +1214,13 @@ object SparkEntry {
     // lookup against a static dimension, streamed to completion — must
     // equal the batch join row-for-row.
     "q_st4_stream_enrich" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val raw = streamTable(s, dir, "events")
       val stream = raw.select(col("event_id"),
         pmod(col("user_id"), lit(25)).as("n_nationkey"))
       val dim = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
       val enriched = graft.streaming.StreamEnrich.enrich(stream, dim, Seq("n_nationkey"))
         .select(col("event_id"), col("n_name"))
-      s.catalog.dropTempView("g_st4")
-      val q = enriched.writeStream.format("memory").queryName("g_st4")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st4")
+      runToMemory(s, enriched, "g_st4", "append")
     }),
 
     // §2.10 ext: stream-static anomaly scoring — each live row joins
@@ -1254,7 +1229,6 @@ object SparkEntry {
     // monitoring loop the reference's batch compare feeds, made
     // continuous; equals the batch join row-for-row.
     "q_st14_stream_climatology" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val profile = graft.ops.Climatology.profile(
         Tables.events(s, dir), "event_type", "ts", "value")
         .select(col("event_type"), col("hour"), col("clim_mean"))
@@ -1267,11 +1241,7 @@ object SparkEntry {
         .select(col("event_type"), col("event_id"), col("hour"),
           col("value_r"), col("clim_mean"),
           round(col("value_r") - col("clim_mean"), 6).as("anomaly"))
-      s.catalog.dropTempView("g_st14")
-      val q = scored.writeStream.format("memory").queryName("g_st14")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st14")
+      runToMemory(s, scored, "g_st14", "append")
     }),
 
     // §2.10 ext: STREAMING geo radius join — each live event (coords
@@ -1282,7 +1252,6 @@ object SparkEntry {
     // append mode needs no watermark. Equals the batch join
     // row-for-row.
     "q_st15_stream_radius" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val probes = streamTable(s, dir, "events")
         .filter(col("event_id") % 29 === 0)
         .select(col("event_id").as("id"),
@@ -1294,11 +1263,7 @@ object SparkEntry {
           (lit(95.0) + (col("s_suppkey") * 53 % 4600) / lit(100.0)).as("lon"))
       val within = graft.ops.Spatial.radiusJoinGrid(
         probes, "id", stations, "station_id", radiusKm = 150.0, cellDeg = 2.0)
-      s.catalog.dropTempView("g_st15")
-      val q = within.writeStream.format("memory").queryName("g_st15")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st15")
+      runToMemory(s, within, "g_st15", "append")
     }),
 
     // §2.10 ext: STREAMING model-calibration monitoring — the batch
@@ -1308,7 +1273,6 @@ object SparkEntry {
     // batch curve bit-for-bit. Score is per-row md5 noise, label a
     // value threshold, so the whole gate is oracle-replayable.
     "q_st16_stream_reliability" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val stream = streamTable(s, dir, "events")
         .select(
           (conv(substring(md5(concat(lit("rel"),
@@ -1317,11 +1281,7 @@ object SparkEntry {
           (col("value") >= 50.0).as("good"))
       val curve = graft.ext.Reliability.curve(stream, "score", "good",
         bins = 10)
-      s.catalog.dropTempView("g_st16")
-      val q = curve.writeStream.format("memory").queryName("g_st16")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st16")
+      runToMemory(s, curve, "g_st16", "complete")
     }),
 
     // §2.10 ext: STREAMING histogram-store ingest — each micro-batch
@@ -1332,14 +1292,10 @@ object SparkEntry {
     // batch-built store's bit-for-bit, and the oracle replays them
     // from raw data.
     "q_st17_stream_quantile_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val store = ExtQueries.scratchTable(s, "g_st17_hist", dir)
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      val cp = new org.apache.hadoop.fs.Path(ckpt)
-      val fsys = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fsys.exists(cp)) fsys.delete(cp, true)
+      val (_, ckpt) = resetStreamDirs(s, "g_st17", dir)
       s.sql(s"DROP TABLE IF EXISTS `$store`")
-      val loc = new org.apache.hadoop.fs.Path(
+      val loc = new Path(
         s.conf.get("spark.sql.warehouse.dir"), store.toLowerCase)
       val wfs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (wfs.exists(loc)) wfs.delete(loc, true)
@@ -1363,20 +1319,16 @@ object SparkEntry {
     // counts and the frozen batch reference; equals the batch PSI
     // bit-for-bit because the bin counts are exact integers.
     "q_st18_stream_psi" -> streamQ("events")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val lo = 0.0; val hi = 500.0; val bins = 10
       val binsStream = graft.ext.Drift.psiBinned(
         streamTable(s, dir, "events")
           .filter(col("event_type") === "click"),
         "value", lo, hi, bins, "ca")
-      s.catalog.dropTempView("g_st18")
-      val q = binsStream.writeStream.format("memory").queryName("g_st18")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val aCounts = runToMemory(s, binsStream, "g_st18", "complete")
       val bCounts = graft.ext.Drift.psiBinned(
         Tables.events(s, dir).filter(col("event_type") === "view"),
         "value", lo, hi, bins, "cb")
-      graft.ext.Drift.psiFromCounts(s.table("g_st18"), bCounts, bins)
+      graft.ext.Drift.psiFromCounts(aCounts, bCounts, bins)
     }),
 
     // §2.10 ext: STREAMING erasure enforcement — live ingest filtered
@@ -1385,7 +1337,6 @@ object SparkEntry {
     // corpus between batch erasure runs. Audit equals the batch
     // anti-join exactly (count + decimal key-sum).
     "q_st19_stream_tombstone" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val tomb = Tables.documents(s, dir)
         .filter(col("doc_id") % 37 === 0)
         .select(col("doc_id")).withColumn("__t", lit(1))
@@ -1394,13 +1345,9 @@ object SparkEntry {
         .join(broadcast(tomb), Seq("doc_id"), "left_outer")
         .filter(col("__t").isNull)
         .select(col("doc_id"))
-      s.catalog.dropTempView("g_st19")
-      val q = kept.writeStream.format("memory").queryName("g_st19")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       // BIGINT key sum (not DECIMAL(38,0)): decimal cells hash-rendered
       // engine-differently at the driver while value-exact locally (r6)
-      s.table("g_st19").agg(count(lit(1)).as("n_kept"),
+      runToMemory(s, kept, "g_st19", "append").agg(count(lit(1)).as("n_kept"),
         sum(col("doc_id")).as("key_sum"))
     }),
 
@@ -1418,13 +1365,7 @@ object SparkEntry {
     "q_st20_stream_neardup_order" -> ((s, dir) => {
       val srcDir = graft.io.VerifyFixtures.streamNearDupFixture()
       val store = ExtQueries.scratchTable(s, "g_st20_store", dir)
-      val out = new java.io.File(s"target/${store}_out").getAbsolutePath
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
+      val (out, ckpt) = resetStreamDirs(s, "g_st20", dir)
       Seq(s"${store}_bands", s"${store}_sigs")
         .foreach(tb => s.sql(s"DROP TABLE IF EXISTS `$tb`"))
       val docs = s.readStream
@@ -1453,7 +1394,6 @@ object SparkEntry {
     // Gate: streamed per-cell (count, id-sum) equals the batch
     // inverted-file build exactly.
     "q_st21_stream_ann_ingest" -> streamQ("embeddings")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val cents = Tables.embeddings(s, dir)
         .filter(col("vec_id") % 50 === 7 &&
           col("vec_id") < graft.io.ScaleReplicate.KeyShift)
@@ -1467,11 +1407,7 @@ object SparkEntry {
             col("embedding").cast("array<double>"), cents).as("cell"))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
-      s.catalog.dropTempView("g_st21")
-      val q = counts.writeStream.format("memory").queryName("g_st21")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("g_st21")
+      runToMemory(s, counts, "g_st21", "complete")
     }),
 
     // Streaming ε-DP counts: the live per-language count is ordinary
@@ -1481,15 +1417,10 @@ object SparkEntry {
     // per micro-batch (per-batch noise would compound the ε spend).
     // The gate pins streamed-state-then-release == the batch query.
     "q_st22_stream_dp_counts" -> streamQ("documents")((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val counts = streamTable(s, dir, "documents")
         .groupBy(col("lang")).agg(count(lit(1)).as("true_n"))
-      s.catalog.dropTempView("g_st22")
-      val q = counts.writeStream.format("memory").queryName("g_st22")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.ext.Privacy.dpRelease(s.table("g_st22"), "lang", "true_n",
-        eps = 0.5)
+      graft.ext.Privacy.dpRelease(runToMemory(s, counts, "g_st22", "complete"),
+        "lang", "true_n", eps = 0.5)
     }),
 
     // §2.10 driver-gated streaming record linkage: the Fellegi–Sunter
@@ -1505,13 +1436,7 @@ object SparkEntry {
     // semantics are spec-pinned in StreamLinkageSpec instead.
     "q_st23_stream_linkage" -> ((s, dir) => {
       val store = ExtQueries.scratchTable(s, "g_st23_store", dir)
-      val out = new java.io.File(s"target/${store}_out").getAbsolutePath
-      val ckpt = new java.io.File(s"target/${store}_ckpt").getAbsolutePath
-      Seq(out, ckpt).foreach { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
+      val (out, ckpt) = resetStreamDirs(s, "g_st23", dir)
       s.sql(s"DROP TABLE IF EXISTS `$store`")
       val records = ExtQueries.linkageRecords(streamTable(s, dir, "customer"))
       val q = graft.streaming.StreamLinkage.ingest(

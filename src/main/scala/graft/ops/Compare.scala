@@ -30,12 +30,4 @@ object Compare {
     */
   def guardedRatio(num: Column, den: Column): Column =
     when(den === 0, lit(null)).otherwise(num / den)
-
-  /** Full comparison projection: per component, bias columns; plus the
-    * guarded GHI/DHI ratio when both columns exist.
-    */
-  def withBiases(joined: DataFrame, components: Seq[(String, String)]): DataFrame =
-    components.foldLeft(joined) { case (df, (model, ground)) =>
-      df.withColumn(s"bias_$model", bias(col(model), col(ground)))
-    }
 }

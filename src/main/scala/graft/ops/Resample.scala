@@ -210,20 +210,4 @@ object Resample {
           prevV + (nextV - prevV) * (t - prevT) / (nextT - prevT)))
       .drop("__chunk", "__in_prev", "__in_next", "__prev_obs", "__next_obs")
   }
-
-  /** Convenience: mean resample keyed to epoch-seconds bucket starts
-    * (oracle-stable long instead of timestamp).
-    */
-  def tumblingMeanEpoch(
-      df: DataFrame,
-      timeCol: String,
-      minutes: Int,
-      valueCols: Seq[String],
-      extraKeys: Seq[String] = Nil): DataFrame = {
-    val width = minutes * 60L
-    val bucket = TimeOps.bucketStartEpoch(col(timeCol), width).as("bucket_start")
-    val aggs = valueCols.map(c => avg(col(c)).as(c)) :+ count(col(valueCols.head)).as("n_rows")
-    df.groupBy(bucket +: extraKeys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
 }

@@ -1,35 +1,38 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
-import graft.SparkTestBase
-import org.apache.spark.sql.types._
+import graft.{SparkEntry, SparkTestBase}
+import org.apache.spark.sql.functions._
 
+/** The streaming dedup spelling of the q_st2 gate — `dropDuplicates` on
+  * the md5 fingerprint — run through [[SparkEntry.runToMemory]] over two
+  * micro-batches: a fingerprint first seen in batch 1 is not emitted
+  * again by batch 2, so the appended sink holds each fingerprint once.
+  */
 class StreamDedupSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("streaming dedup drops same-content docs within the watermark") {
-    val dir = Files.createTempDirectory("graft-sdedup").toString
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("doc_id", LongType),
-      StructField("text", StringType)))
+  test("md5-fingerprint dropDuplicates holds state across micro-batches") {
+    val src = Files.createTempDirectory("graft-sdedup").toString
+    // ONE part file per batch dir, so maxFilesPerTrigger=1 makes exactly
+    // one micro-batch of each
+    Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, "alpha beta"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$src/b1")
+    Seq((4L, "gamma delta"), (5L, "epsilon zeta"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$src/b2")
+    val schema = spark.read.parquet(s"$src/b1").schema
+    val docs = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$src/*")
 
-    Seq(
-      (Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "alpha beta"),
-      (Timestamp.valueOf("2024-01-01 00:01:00"), 2L, "alpha beta"), // dup content
-      (Timestamp.valueOf("2024-01-01 00:02:00"), 3L, "gamma delta")
-    ).toDF("ts", "doc_id", "text").write.parquet(s"$dir/b1")
-
-    val stream = spark.readStream.schema(schema).parquet(s"$dir/*")
-    val deduped = StreamDedup.dropDuplicateDocs(stream, "ts", "text")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("sdedup").start()
-    try {
-      q.processAllAvailable()
-      val ids = spark.sql("SELECT doc_id FROM sdedup ORDER BY doc_id")
-        .as[Long].collect().toSeq
-      assert(ids === Seq(1L, 3L)) // doc 2 dropped as duplicate content
-    } finally q.stop()
+    val fp = docs.select(substring(md5(col("text")), 1, 16).as("fp"))
+      .dropDuplicates("fp")
+    val (got, batches) = MicroBatches(spark) {
+      SparkEntry.runToMemory(spark, fp, "t_sdedup", "append").as[String].collect().toSeq
+    }
+    assert(batches === 2)
+    val expected = Seq("alpha beta", "gamma delta", "epsilon zeta")
+      .toDF("text").select(substring(md5(col("text")), 1, 16)).as[String].collect()
+    assert(got.sorted === expected.toSeq.sorted) // each fingerprint exactly once
   }
 }
