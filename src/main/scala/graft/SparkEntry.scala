@@ -598,11 +598,10 @@ object SparkEntry {
           round(col("Cloud coverage"), 6).as("cloud_cover"))
     }),
 
-    // Same pipeline through the DataSource V2 provider
-    // (spark.read.format("cams"), graft.io.CamsDataSource): an
-    // independent read path - schema inference from the commented
-    // header, reader-level column pruning - against the SAME DuckDB
-    // oracle, so both sources must agree bit-for-bit.
+    // Same pipeline with the source reached by short name
+    // (spark.read.format("cams"), graft.io.CamsDataSource): the same CSV
+    // file scan as q_s2_cams_scan, with the schema inferred from the
+    // commented header, against the SAME DuckDB oracle.
     "q_s2b_cams_dsv2" -> ((s, dir) => {
       val path = graft.io.VerifyFixtures.camsExpertFixture()
       val raw = s.read.format("cams").load(path)

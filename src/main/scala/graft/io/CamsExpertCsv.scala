@@ -3,6 +3,7 @@ package graft.io
 import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -19,8 +20,10 @@ import org.apache.spark.sql.types._
   *     prefix is examined — a bounded driver-side read, independent of
   *     file size);
   *  2. one distributed `csv` scan with an explicit schema and
-  *     `comment=#`, so every metadata line is skipped by the parser and
+  *     [[csvOptions]], so every metadata line is skipped by the parser and
   *     column pruning / predicate pushdown work as usual.
+  * `spark.read.format("cams")` ([[CamsDataSource]]) is the same scan by
+  * short name, with the same schema rule and [[csvOptions]].
   */
 object CamsExpertCsv {
 
@@ -44,7 +47,12 @@ object CamsExpertCsv {
         .filter(c => c.isFile && !Seq("_", ".").exists(c.getPath.getName.startsWith)))
       .map(_.getPath).minByOption(_.toString)
       .getOrElse(throw new IllegalArgumentException(s"no csv_expert file matches $path"))
-    val raw = fs.open(file)
+    headerOf(conf, file)
+  }
+
+  /** The header of one csv_expert file, read as [[sniffHeader]] does. */
+  private[io] def headerOf(conf: Configuration, file: Path): Seq[String] = {
+    val raw = file.getFileSystem(conf).open(file)
     val in = Option(new CompressionCodecFactory(conf).getCodec(file))
       .fold[InputStream](raw)(_.createInputStream(raw))
     val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
@@ -52,9 +60,13 @@ object CamsExpertCsv {
       try Iterator.continually(reader.readLine())
         .takeWhile(l => l != null && l.startsWith("#")).reduceOption((_, l) => l)
       finally in.close()
-    require(header.isDefined, s"no '#' header found in $path")
+    require(header.isDefined, s"no '#' header found in $file")
     header.get.dropWhile(_ == '#').trim.split(";").map(_.trim).toSeq
   }
+
+  /** `;`-separated, `#` lines skipped, bad fields as nulls (failure isolation). */
+  val csvOptions: Map[String, String] =
+    Map("sep" -> ";", "comment" -> "#", "mode" -> "PERMISSIVE")
 
   def schemaFor(columns: Seq[String]): StructType =
     StructType(columns.map { c =>
@@ -64,11 +76,6 @@ object CamsExpertCsv {
   /** Read one csv_expert file (or a glob of files sharing a layout). */
   def read(spark: SparkSession, path: String): DataFrame = {
     val cols = sniffHeader(spark, path)
-    spark.read
-      .option("sep", ";")
-      .option("comment", "#")
-      .option("mode", "PERMISSIVE") // failure isolation: bad lines -> nulls
-      .schema(schemaFor(cols))
-      .csv(path)
+    spark.read.options(csvOptions).schema(schemaFor(cols)).csv(path)
   }
 }

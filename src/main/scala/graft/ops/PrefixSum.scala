@@ -50,8 +50,9 @@ object PrefixSum {
     * [[runningTotals]] call otherwise rebuilds the identical directory
     * index — a range sort + zipWithIndex per call (r10 "Not yet
     * optimized" item). Pass the result as `sharedIndex` to every call
-    * in the chain. Contract: each call's input must have exactly this
-    * chunk set (same order column values, same span).
+    * in the chain. Contract: each call's input must have no chunk
+    * outside this set (same span); a row in a missing chunk raises an
+    * error naming that chunk.
     */
   def chunkIndex(df: DataFrame, orderCol: String, chunkSpan: Long): DataFrame =
     // explicit localCheckpoint, not Materialize.bounded: denseIndex is
@@ -135,11 +136,16 @@ object PrefixSum {
       }
       .select(dirCols: _*)
 
+    // a chunk the index lacks (a `sharedIndex` built over another row
+    // set) has no offset: fail naming it rather than return NULL prefixes
     val joined = withIncl.join(broadcast(dirOff), Seq("__chunk"), "left")
+    val missing = raise_error(concat(
+      lit("PrefixSum: the chunk index has no entry for chunk "), col("__chunk").cast("string")))
     valueCols.zipWithIndex.foldLeft(joined) {
       case (d, ((v, out), i)) =>
-        d.withColumn(out,
-          col(s"__chunk_off$i") + col(s"__incl$i") - col(v))
+        val off = col(s"__chunk_off$i")
+        d.withColumn(out, when(off.isNull && col("__chunk").isNotNull, missing).otherwise(off) +
+          col(s"__incl$i") - col(v))
     }.drop("__chunk" +:
       valueCols.indices.flatMap(i =>
         Seq(s"__incl$i", s"__chunk_off$i")): _*)

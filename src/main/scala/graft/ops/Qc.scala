@@ -22,10 +22,13 @@ object Qc {
   def presentFlags(df: DataFrame, flagCols: Seq[String] = standardFlagCols): Seq[String] =
     flagCols.filter(df.columns.contains)
 
-  /** Row-wise sum of the present flags (0 when none exist). */
+  /** Row-wise sum of the present flags (0 when none exist). A null flag
+    * counts as 0, as in pandas' NaN-skipping row sum: a file read with the
+    * canonical schema has nulls in the flag columns it lacks.
+    */
   def flagSum(df: DataFrame, flagCols: Seq[String] = standardFlagCols): Column = {
     val present = presentFlags(df, flagCols)
-    if (present.isEmpty) lit(0) else present.map(col).reduce(_ + _)
+    if (present.isEmpty) lit(0) else present.map(c => coalesce(col(c), lit(0))).reduce(_ + _)
   }
 
   /** Keep only rows whose present-flag sum is zero. No-op if no flag

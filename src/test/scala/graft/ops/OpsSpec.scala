@@ -18,6 +18,13 @@ class OpsSpec extends SparkTestBase {
     assert(Qc.clean(noFlags).count() === 2)
   }
 
+  test("Qc.clean counts a null flag as unflagged") {
+    val df = Seq[(Int, Option[Int], Option[Int])](
+      (1, Some(0), None), (2, Some(1), None), (3, None, None)
+    ).toDF("id", "flag_ghi", "flag_dhi")
+    assert(Qc.clean(df).select("id").as[Int].collect().sorted.toSeq === Seq(1, 3))
+  }
+
   test("cleanStationName matches the reference pipeline and is idempotent") {
     val df = Seq("Padang_Pariaman", "  KUPANG  (NTT)! ", "a__b", "Sleman")
       .toDF("s").select(Stations.cleanStationName($"s").as("c"))

@@ -46,6 +46,22 @@ class PrefixSumSpec extends SparkTestBase {
     assert(idx.queryExecution.logical.children.isEmpty)
   }
 
+  test("a shared chunk index that misses a chunk raises an error naming it") {
+    val rnd = new scala.util.Random(5)
+    val data = (0 until 300)
+      .map(i => (i.toLong, rnd.nextInt(30) * 1000L, rnd.nextInt(50).toLong))
+      .toDF("id", "ord", "v")
+    // ord < 27000 covers chunks 0..8 of span 3000; chunk 9 is missing
+    val idx = PrefixSum.chunkIndex(data.filter($"ord" < 27000L), "ord", 3000L)
+    val out = PrefixSum.runningTotal(
+      data, "ord", "v", "ps", chunkSpan = 3000L, tieBreak = Seq("id"),
+      sharedIndex = Some(idx))
+    val e = intercept[Exception](out.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("no entry for chunk 9")), msgs.mkString("\n"))
+  }
+
   test("empty input yields empty output with the prefix column") {
     val empty = Seq.empty[(Long, Long)].toDF("ord", "v")
     val out = PrefixSum.runningTotal(empty, "ord", "v", "ps", 100L)

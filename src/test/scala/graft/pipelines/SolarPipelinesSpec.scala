@@ -98,10 +98,24 @@ class SolarPipelinesSpec extends SparkTestBase {
       |""".stripMargin)
 
   private def readGround =
-    graft.io.HeaderCsv.read(spark, groundCsv, graft.model.Schemas.groundQc)
+    spark.read.option("header", "true").schema(graft.model.Schemas.groundQc).csv(groundCsv)
 
   private def readCams =
-    graft.io.HeaderCsv.read(spark, camsCsv, graft.model.Schemas.processed10Min)
+    spark.read.option("header", "true").schema(graft.model.Schemas.processed10Min).csv(camsCsv)
+
+  test("3.2 ground read: the canonical schema reads a 2-flag file by position") {
+    val rows = readGround.orderBy("Datetime (UTC)").collect()
+    assert(rows.length === 4)
+    val r = rows(2) // 2024-01-01 00:20:00,90.0,45.0,180.0,1,0
+    assert(r.getAs[java.sql.Timestamp]("Datetime (UTC)").toInstant ===
+      java.time.Instant.parse("2024-01-01T00:20:00Z"))
+    assert((r.getAs[Double]("GHI"), r.getAs[Double]("DHI"), r.getAs[Double]("DNI")) ===
+      ((90.0, 45.0, 180.0)))
+    assert((r.getAs[Int]("flag_ghi"), r.getAs[Int]("flag_dhi")) === ((1, 0)))
+    // the six flag columns the file lacks read as nulls
+    val absent = graft.model.Schemas.groundQc.fieldNames.drop(6).map(r.fieldIndex)
+    assert(absent.length === 6 && rows.forall(row => absent.forall(row.isNullAt)))
+  }
 
   test("3.2 compare: QC filter + join + units + bias + guarded ratio") {
     val cmp = SolarPipelines.compareFrame(readGround, readCams).orderBy("timestamp")
