@@ -113,42 +113,74 @@ object Bench {
     */
   private final val LongQueryS = 2.5
 
-  /** Time one query. Returns (reported seconds, GC seconds observed
-    * during the run that produced the reported number) — the GC column
-    * is what separates "regressed" from "a storm landed here" without
-    * a manual cross-run diff.
+  /** One query's reported run: seconds (-1 = the first run threw), the
+    * GC seconds observed during the run that produced the reported
+    * number — the column that separates "regressed" from "a storm
+    * landed here" without a manual cross-run diff — and, for a failed
+    * query, "Class: first line of message" (≤300 chars).
     */
-  private def timeQuery(name: String, fn: (SparkSession, String) => DataFrame,
-      spark: SparkSession, dir: String,
-      cheapIters: Int, expensiveIters: Int,
-      prep: Option[(SparkSession, String) => Unit] = None): (Double, Double) = {
+  private[graft] final case class Timed(seconds: Double, gc: Double,
+      error: Option[String] = None)
+
+  private def describe(t: Throwable): String = {
+    val msg = Option(t.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+    s"${t.getClass.getName}: $msg".take(300)
+  }
+
+  /** Time one query under the adaptive iteration policy. */
+  private def timeQuery(q: Q, spark: SparkSession, dir: String,
+      cheapIters: Int, expensiveIters: Int): Timed = {
     // store-backed gates: build the session store UNTIMED so even a
     // single measured run (the scaled leg's policy for long queries)
     // sees the steady-state probe, not probe + one-time ingest
-    runPrep(name, prep, spark, dir)
-    def once(): Option[(Double, Double)] = {
+    runPrep(q.name, q.prep, spark, dir)
+    def once(): Either[Throwable, Timed] = {
       fenceIfResidue(spark)
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
       val r = try {
-        runOnce(fn(spark, dir))
-        Some(((System.nanoTime() - t0) / 1e9, (gcMillis() - gc0) / 1e3))
-      } catch { case _: Throwable => None }
-      noteRun(r.map(_._1).getOrElse(-1.0))
+        runOnce(q.plan(spark, dir))
+        Right(Timed((System.nanoTime() - t0) / 1e9, (gcMillis() - gc0) / 1e3))
+      } catch { case t: Throwable => Left(t) }
+      noteRun(r.fold(_ => -1.0, _.seconds))
       r
     }
     once() match {
-      case None => (-1.0, 0.0)
-      case Some(r0 @ (t0, _)) if t0 >= LongQueryS =>
-        (Seq(r0) ++ (2 to expensiveIters).flatMap(_ => once())).minBy(_._1)
-      case Some(r0) =>
+      case Left(t) => Timed(-1.0, 0.0, Some(describe(t)))
+      case Right(r0) if r0.seconds >= LongQueryS =>
+        (Seq(r0) ++ (2 to expensiveIters).flatMap(_ => once().toOption))
+          .minBy(_.seconds)
+      case Right(r0) =>
         // lower median: true median at 3 runs, MIN at 2 (additive noise
         // only ever inflates a warm run, so round down, never up)
-        val times = (Seq(r0) ++ (2 to cheapIters).flatMap(_ => once()))
-          .sortBy(_._1)
+        val times = (Seq(r0) ++ (2 to cheapIters).flatMap(_ => once().toOption))
+          .sortBy(_.seconds)
         times((times.size - 1) / 2)
     }
   }
+
+  /** Time each query in name order. */
+  private[graft] def timeAll(qs: Seq[Q], spark: SparkSession, dir: String,
+      cheapIters: Int, expensiveIters: Int): Seq[(String, Timed)] =
+    qs.sortBy(_.name).map(q =>
+      q.name -> timeQuery(q, spark, dir, cheapIters, expensiveIters))
+
+  /** `{name: seconds}` of every query. */
+  private def secondsJson(timed: Seq[(String, Timed)]): String =
+    timed.map { case (k, t) => Json.str(k) + ":" + t.seconds }.mkString("{", ",", "}")
+
+  /** GC seconds seen during each query's REPORTED run (≥0.1 s only —
+    * the quiet majority would triple the artifact for no signal).
+    */
+  private def gcJson(timed: Seq[(String, Timed)]): String =
+    timed.filter(_._2.gc >= 0.1)
+      .map { case (k, t) => Json.str(k) + ":" + math.rint(t.gc * 100) / 100 }
+      .mkString("{", ",", "}")
+
+  /** `{name: "Class: first line of message"}` of every failed query. */
+  private[graft] def errorsJson(timed: Seq[(String, Timed)]): String =
+    timed.collect { case (k, Timed(_, _, Some(e))) => Json.str(k) + ":" + Json.str(e) }
+      .mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -162,18 +194,9 @@ object Bench {
     SparkEntry.queries.get("q_a1_resample").foreach { fn =>
       try runOnce(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
-    val timed = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timeQuery(name, fn, spark, sfDir, cheapIters = iters,
-        expensiveIters = 2, prep = ExtQueries.prepare.get(name))
-    }
-    val results = timed.map { case (k, (t, _)) => k -> t }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // GC seconds seen during each query's REPORTED run (≥0.1 s only —
-    // the quiet majority would triple the artifact for no signal)
-    val gcs = timed.filter(_._2._2 >= 0.1)
-      .map { case (k, (_, g)) => s"\"" + k + "\":" + math.rint(g * 100) / 100 }
-      .mkString("{", ",", "}")
+    val timed = timeAll(SparkEntry.registry.values.toSeq, spark, sfDir,
+      cheapIters = iters, expensiveIters = 2)
+    val results = timed.map { case (k, t) => k -> t.seconds }
     val total = if (results.nonEmpty) results.map(_._2).filter(_ >= 0).sum else 0.0
     val (scaled, scaledResults, scaledGcs) = scaledBlock(spark, sfDir)
     // record the per-query timing policy in the artifact so cross-round
@@ -183,9 +206,8 @@ object Bench {
     // single-measured leg let one GC storm write ±50% into the
     // artifact, VERDICT r9 "What's wrong #2")
     val timing = s""""timing":"min>=${LongQueryS}s/median<${LongQueryS}s/scaled-min-of-2""""
-    val prepJson = prepFailed.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",$timing,"prep_failed":$prepJson,"queries":$qs,"gc_sec":$gcs,"sf":"$sfDir"$scaled}"""
+    val prepJson = prepFailed.toSeq.sorted.map(Json.str).mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",$timing,"prep_failed":$prepJson,"queries":${secondsJson(timed)},"gc_sec":${gcJson(timed)},"errors":${errorsJson(timed)},"sf":"$sfDir"$scaled}"""
     // The driver preserves only a ~2 KB TAIL of stdout, and the full
     // line is ~11 KB — in rounds 1–5 the capture truncated it from the
     // front and every parse came back null. So stdout gets a COMPACT
@@ -195,7 +217,7 @@ object Bench {
     val failures = results.filter(_._2 < 0).map(_._1)
     val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
     val compactQs = (slow ++ failures.map(_ -> -1.0))
-      .map { case (k, v) => s"\"" + k + "\":" + math.rint(v * 1000) / 1000 }
+      .map { case (k, v) => Json.str(k) + ":" + math.rint(v * 1000) / 1000 }
       .mkString("{", ",", "}")
     val ratios = worstRatios(results.toMap, scaledResults)
     // Per-run artifact name (r10 verdict "What's wrong #2"): the
@@ -208,10 +230,10 @@ object Bench {
     // evidence survives even when the full JSON is overwritten.
     def gcTop(gs: Seq[(String, Double)]): String = gs.filter(_._2 >= 0.1)
       .sortBy(-_._2).take(5)
-      .map { case (k, g) => s"\"" + k + "\":" + math.rint(g * 100) / 100 }
+      .map { case (k, g) => Json.str(k) + ":" + math.rint(g * 100) / 100 }
       .mkString("{", ",", "}")
     val gcCompact =
-      s""","gc_top":${gcTop(timed.map { case (k, (_, g)) => k -> g })}""" +
+      s""","gc_top":${gcTop(timed.map { case (k, t) => k -> t.gc })}""" +
       s""","scaled_gc_top":${gcTop(scaledGcs)}"""
     val compact = s"""{"metric":"total","value":${math.rint(total * 10) / 10},""" +
       s""""unit":"sec",$timing,""" +
@@ -236,21 +258,13 @@ object Bench {
     val rs = ok.flatMap { case (k, v) =>
       base.get(k).filter(_ > 0.05).map(b => k -> math.rint(v / b * 10) / 10)
     }.sortBy(-_._2).take(5)
-      .map { case (k, r) => s"\"" + k + "\":" + r }.mkString("{", ",", "}")
+      .map { case (k, r) => Json.str(k) + ":" + r }.mkString("{", ",", "}")
     s""","scaled_total":$total,"scaled_n":${ok.size},"scaled_fail":${scaled.size - ok.size},"worst_ratios":$rs"""
   }
 
-  /** Queries that read authored fixtures (CSV/NetCDF/media files), not
-    * the sf tables — re-running them against a scaled dir would measure
-    * the same fixture again, so the scaled pass skips them.
-    */
-  private val fixtureQueries = Set(
-    "q_s1_validate", "q_s2_cams_scan", "q_s2b_cams_dsv2", "q_s5_compile_cube",
-    "q_s6_download_matrix", "q_s7_csv_sink", "q_s8_netcdf_roundtrip",
-    "q_r4_cf_attrs", "q_ext_multimodal_decode", "q_ext_multimodal_av",
-    "q_ext_bpe_encode", "q_st20_stream_neardup_order")
-
-  /** Measured scaling evidence: run every sf-table query against a
+  /** Measured scaling evidence: run every sf-table query (not the
+    * [[Q.fixture]] ones: a scaled dir would measure the same authored
+    * fixture again) against a
     * `SPARK_GRAFT_SCALE_X`× replica of the sf dir
     * ([[graft.io.ScaleReplicate]] — perturbed, not duplicated) and emit
     * a `scaled_*` block in the same JSON line, so per-query
@@ -277,22 +291,13 @@ object Bench {
       // is additive-only, so the min is the plan's cost.
       val longIters =
         sys.env.getOrElse("SPARK_GRAFT_SCALED_LONG_ITERS", "2").toInt.max(1)
-      val timed = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (name, _) => fixtureQueries(name) }
-        .map { case (name, fn) =>
-          name -> timeQuery(name, fn, spark, dst,
-            cheapIters = scaledIters, expensiveIters = longIters,
-            prep = ExtQueries.prepare.get(name))
-        }
-      val results = timed.map { case (k, (t, _)) => k -> t }
-      val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val gcs = timed.filter(_._2._2 >= 0.1)
-        .map { case (k, (_, g)) => s"\"" + k + "\":" + math.rint(g * 100) / 100 }
-        .mkString("{", ",", "}")
+      val timed = timeAll(SparkEntry.registry.values.filterNot(_.fixture).toSeq,
+        spark, dst, cheapIters = scaledIters, expensiveIters = longIters)
+      val results = timed.map { case (k, t) => k -> t.seconds }
       val total = results.map(_._2).filter(_ >= 0).sum
-      (s""","scaled_x":$x,"scaled_total":$total,"scaled_queries":$qs,"scaled_gc_sec":$gcs""",
-        results, timed.map { case (k, (_, g)) => k -> g })
+      (s""","scaled_x":$x,"scaled_total":$total,"scaled_queries":${secondsJson(timed)},""" +
+        s""""scaled_gc_sec":${gcJson(timed)},"scaled_errors":${errorsJson(timed)}""",
+        results, timed.map { case (k, t) => k -> t.gc })
     } catch { case _: Throwable => ("", Nil, Nil) }
   }
 }

@@ -34,102 +34,446 @@ object EvalQueries {
         (col("sy").cast("double") / col("ny")).as("y"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, Q.Plan] = all.map(q => q.name -> q.plan).toMap
+
+  /** One [[Q]] per query: the evaluation and experimentation gates, each beside its DuckDB oracle. */
+  private[graft] lazy val all: Seq[Q] = Seq(
     // CUPED variance reduction on per-user pre/post metric means.
-    "q_ext_cuped" -> ((s, dir) =>
-      Causal.cuped(userPrePost(s, dir), col("user_id") % 2 === 0, "y", "x")),
+    Q("q_ext_cuped", (s, dir) =>
+      Causal.cuped(userPrePost(s, dir), col("user_id") % 2 === 0, "y", "x"),
+      oracle = Some(
+        s"""WITH $UserPrePostSql,
+           |pc AS (
+           |  SELECT user_id % 2 = 0 AS t,
+           |         CAST(round(y, 6) AS DECIMAL(18,6)) AS y,
+           |         CAST(round(x, 6) AS DECIMAL(18,6)) AS x
+           |  FROM per),
+           |pooled AS (
+           |  SELECT count(*) AS n,
+           |         CAST(CAST(sum(x) AS DECIMAL(38,12)) AS DOUBLE) AS sx,
+           |         CAST(CAST(sum(y) AS DECIMAL(38,12)) AS DOUBLE) AS sy,
+           |         CAST(sum(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
+           |         CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
+           |         CAST(sum(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy
+           |  FROM pc),
+           |pd AS (
+           |  SELECT n,
+           |         (sxy - sx * sy / n) / (sxx - sx * sx / n) AS theta,
+           |         sx / n AS mx,
+           |         ((sxy - sx * sy / n) * (sxy - sx * sy / n))
+           |           / ((sxx - sx * sx / n) * (syy - sy * sy / n)) AS rho2
+           |  FROM pooled),
+           |arms AS (
+           |  SELECT t, count(*) AS na,
+           |         CAST(CAST(sum(y) AS DECIMAL(38,12)) AS DOUBLE) / count(*) AS my,
+           |         CAST(CAST(sum(x) AS DECIMAL(38,12)) AS DOUBLE) / count(*) AS mxa
+           |  FROM pc GROUP BY 1)
+           |SELECT a.na AS n_t, b.na AS n_c, round(theta, 6) AS theta,
+           |       round(a.my - b.my, 6) AS delta_raw,
+           |       round((a.my - theta * (a.mxa - mx))
+           |         - (b.my - theta * (b.mxa - mx)), 6) AS delta_cuped,
+           |       round(rho2, 6) AS var_reduction
+           |FROM arms a, arms b, pd WHERE a.t AND NOT b.t""".stripMargin)),
 
     // Stratified difference-in-means across event-type strata.
-    "q_ext_stratified_ate" -> ((s, dir) =>
+    Q("q_ext_stratified_ate", (s, dir) =>
       Causal.stratifiedEffect(Tables.events(s, dir), "event_type",
-        col("user_id") % 2 === 0, "value")),
+        col("user_id") % 2 === 0, "value"),
+      oracle = Some(
+        """WITH i AS (
+          |  SELECT event_type AS s, user_id % 2 = 0 AS t,
+          |         CAST(round(value, 6) AS DECIMAL(18,6)) AS y
+          |  FROM events),
+          |cells AS (
+          |  SELECT s, t, count(*) AS n,
+          |         CAST(CAST(sum(y) AS DECIMAL(38,12)) AS DOUBLE) AS sy
+          |  FROM i GROUP BY 1, 2),
+          |tot AS (SELECT count(*) AS n_all FROM i)
+          |SELECT tc.s, tc.n AS n_t, cc.n AS n_c,
+          |       round(tc.sy / tc.n, 6) AS mean_t,
+          |       round(cc.sy / cc.n, 6) AS mean_c,
+          |       round(tc.sy / tc.n - cc.sy / cc.n, 6) AS effect,
+          |       round(CAST(tc.n + cc.n AS DOUBLE) / n_all, 6) AS weight
+          |FROM cells tc JOIN cells cc ON cc.s = tc.s, tot
+          |WHERE tc.t AND NOT cc.t""".stripMargin)),
 
     // Leave-one-out target encoding of market segment vs balance.
-    "q_ext_target_encode" -> ((s, dir) =>
+    Q("q_ext_target_encode", (s, dir) =>
       Encode.targetEncodeLoo(Tables.customer(s, dir), "c_custkey",
-        "c_mktsegment", "c_acctbal")),
+        "c_mktsegment", "c_acctbal"),
+      oracle = Some(
+        """WITH i AS (
+          |  SELECT c_custkey, c_mktsegment,
+          |         CAST(round(c_acctbal, 6) AS DECIMAL(18,6)) AS y
+          |  FROM customer),
+          |cat AS (
+          |  SELECT c_mktsegment, count(*) AS nc,
+          |         CAST(sum(y) AS DECIMAL(38,12)) AS sc
+          |  FROM i GROUP BY 1),
+          |gt AS (
+          |  SELECT count(*) AS ng, CAST(sum(y) AS DECIMAL(38,12)) AS sg FROM i)
+          |SELECT c_custkey, i.c_mktsegment, CAST(y AS DOUBLE) AS target_r,
+          |       round(CASE WHEN nc > 1
+          |         THEN CAST(sc - y AS DOUBLE) / (nc - 1)
+          |         ELSE CAST(sg - y AS DOUBLE) / (ng - 1) END, 6) AS enc
+          |FROM i JOIN cat ON cat.c_mktsegment = i.c_mktsegment, gt""".stripMargin)),
 
     // Mutual information between event type and a user bucket.
-    "q_ext_mutual_info" -> ((s, dir) =>
+    Q("q_ext_mutual_info", (s, dir) =>
       Encode.mutualInfo(
         Tables.events(s, dir).select(col("event_type"),
           (col("user_id") % 7).as("ub")),
-        "event_type", "ub")),
+        "event_type", "ub"),
+      oracle = Some(
+        """WITH cells AS (
+          |  SELECT event_type AS a, user_id % 7 AS b, count(*) AS cxy
+          |  FROM events GROUP BY 1, 2),
+          |ma AS (SELECT a, CAST(sum(cxy) AS BIGINT) AS ca FROM cells GROUP BY 1),
+          |mb AS (SELECT b, CAST(sum(cxy) AS BIGINT) AS cb FROM cells GROUP BY 1),
+          |n AS (SELECT CAST(sum(cxy) AS BIGINT) AS n FROM cells),
+          |terms AS (
+          |  SELECT n.n,
+          |         CAST(round(CAST(cxy AS DOUBLE) / n.n
+          |           * ln(CAST(cxy AS DOUBLE) * n.n
+          |               / (CAST(ca AS DOUBLE) * cb)), 9) AS DECIMAL(28,9))
+          |           AS term
+          |  FROM cells JOIN ma USING (a) JOIN mb USING (b), n)
+          |SELECT max(n) AS n, count(*) AS n_cells,
+          |       round(CAST(sum(term) AS DOUBLE), 6) AS mi
+          |FROM terms""".stripMargin)),
 
     // Pinball loss of climatology quantile forecasts (P10/P50/P90),
     // trained on even epoch days, scored on odd.
-    "q_ext_pinball" -> ((s, dir) =>
+    Q("q_ext_pinball", (s, dir) =>
       ForecastEval.pinballClimatology(Tables.events(s, dir), "event_type",
         "ts", "value",
         floor(unix_timestamp(col("ts")) / 86400L).cast("long") % 2 === 0,
-        Seq(10, 50, 90))),
+        Seq(10, 50, 90)),
+      oracle = Some(
+        """WITH base AS (
+          |  SELECT event_type AS k, CAST(hour(ts) AS INT) AS hod,
+          |         round(value, 6) AS y,
+          |         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) % 2 = 0 AS tr
+          |  FROM events),
+          |train AS (SELECT * FROM base WHERE tr),
+          |ranked AS (
+          |  SELECT k, hod, y,
+          |         CAST(row_number() OVER (PARTITION BY k, hod ORDER BY y)
+          |           AS BIGINT) AS rn
+          |  FROM train),
+          |cnt AS (SELECT k, hod, count(*) AS n FROM train GROUP BY 1, 2),
+          |qq AS (SELECT CAST(unnest([10, 50, 90]) AS BIGINT) AS q_pct),
+          |pick AS (
+          |  SELECT r.k, r.hod, q.q_pct, c.n, r.rn, r.y,
+          |         CAST(q.q_pct AS DOUBLE) / 100.0 * (c.n - 1) AS pos
+          |  FROM ranked r JOIN cnt c ON c.k = r.k AND c.hod = r.hod, qq q),
+          |sel AS (
+          |  SELECT * FROM pick
+          |  WHERE rn = CAST(floor(pos) AS BIGINT) + 1
+          |     OR rn = least(CAST(floor(pos) AS BIGINT) + 2, n)),
+          |fq AS (
+          |  SELECT k, hod, q_pct,
+          |         max(CASE WHEN rn = CAST(floor(pos) AS BIGINT) + 1
+          |           THEN y END) AS ylo,
+          |         max(CASE WHEN rn = least(CAST(floor(pos) AS BIGINT) + 2, n)
+          |           THEN y END) AS yhi,
+          |         max(pos) AS p
+          |  FROM sel GROUP BY 1, 2, 3),
+          |f AS (
+          |  SELECT k, hod, q_pct,
+          |         round(ylo + (p - floor(p)) * (yhi - ylo), 6) AS fv
+          |  FROM fq),
+          |l AS (
+          |  SELECT b.k, f.q_pct,
+          |         round(CASE WHEN b.y >= fv
+          |           THEN CAST(f.q_pct AS DOUBLE) / 100.0 * (b.y - fv)
+          |           ELSE (1.0 - CAST(f.q_pct AS DOUBLE) / 100.0) * (fv - b.y)
+          |         END, 6) AS loss
+          |  FROM base b JOIN f ON f.k = b.k AND f.hod = b.hod
+          |  WHERE NOT b.tr)
+          |SELECT k, q_pct, count(*) AS n,
+          |       round(CAST(sum(CAST(loss AS DECIMAL(18,6))) AS DOUBLE)
+          |         / count(*), 6) AS pinball
+          |FROM l GROUP BY 1, 2""".stripMargin)),
 
     // Split-conformal interval calibration around seasonal-naive.
-    "q_ext_conformal" -> ((s, dir) =>
+    Q("q_ext_conformal", (s, dir) =>
       ForecastEval.conformalSeasonalNaive(Tables.events(s, dir), "event_type",
-        "ts", "value", seasonSeconds = 86400L, alphaPct = 90)),
+        "ts", "value", seasonSeconds = 86400L, alphaPct = 90),
+      oracle = Some(
+        s"""WITH s AS (${StatQueries.hourlySeriesSqlShared}),
+           |hi AS (SELECT k, h + 86400 AS h, m AS f FROM s),
+           |paired AS (
+           |  SELECT s.k, s.h, round(abs(s.m - hi.f), 6) AS r,
+           |         (s.h // 3600) % 2 = 0 AS cal
+           |  FROM s JOIN hi ON hi.k = s.k AND hi.h = s.h),
+           |calr AS (SELECT k, r FROM paired WHERE cal),
+           |ranked AS (
+           |  SELECT k, r,
+           |         CAST(row_number() OVER (PARTITION BY k ORDER BY r)
+           |           AS BIGINT) AS rn
+           |  FROM calr),
+           |cnt AS (SELECT k, count(*) AS n_cal FROM calr GROUP BY 1),
+           |pick AS (
+           |  SELECT rk.k, c.n_cal, rk.rn, rk.r,
+           |         CAST(90 AS DOUBLE) / 100.0 * (c.n_cal - 1) AS pos
+           |  FROM ranked rk JOIN cnt c ON c.k = rk.k),
+           |sel AS (
+           |  SELECT * FROM pick
+           |  WHERE rn = CAST(floor(pos) AS BIGINT) + 1
+           |     OR rn = least(CAST(floor(pos) AS BIGINT) + 2, n_cal)),
+           |qh AS (
+           |  SELECT k, max(n_cal) AS n_cal,
+           |         round(max(CASE WHEN rn = CAST(floor(pos) AS BIGINT) + 1
+           |             THEN r END)
+           |           + (max(pos) - floor(max(pos)))
+           |             * (max(CASE WHEN rn = least(CAST(floor(pos) AS BIGINT) + 2,
+           |                 n_cal) THEN r END)
+           |               - max(CASE WHEN rn = CAST(floor(pos) AS BIGINT) + 1
+           |                 THEN r END)), 6) AS qhat
+           |  FROM sel GROUP BY 1),
+           |ev AS (
+           |  SELECT p.k, qh.n_cal, qh.qhat, count(*) AS n_eval,
+           |         CAST(sum(CASE WHEN p.r <= qh.qhat THEN 1 ELSE 0 END)
+           |           AS BIGINT) AS n_in
+           |  FROM paired p JOIN qh ON qh.k = p.k WHERE NOT p.cal
+           |  GROUP BY 1, 2, 3)
+           |SELECT k, n_cal, n_eval, qhat,
+           |       round(CAST(n_in AS DOUBLE) / n_eval, 6) AS coverage,
+           |       CAST(CAST(n_in AS DOUBLE) / n_eval >= 0.85 AS BIGINT)
+           |         AS cov_ok
+           |FROM ev""".stripMargin)),
 
     // Instrumental-variable Wald estimator: LATE = ITT_y / ITT_x with
     // the weak-instrument diagnostic surfaced — the no-pre-period,
     // no-ignorability member of the causal toolkit.
-    "q_ext_iv" -> ((s, dir) =>
+    Q("q_ext_iv", (s, dir) =>
       Causal.ivWald(
         Tables.events(s, dir)
           .select((col("user_id") % 2 === 0).as("z"),
             (col("event_id") % 5).cast("double").as("x"), col("value")),
-        col("z"), "x", "value")),
+        col("z"), "x", "value"),
+      oracle = Some(
+        """WITH i AS (
+          |  SELECT user_id % 2 = 0 AS z,
+          |         CAST(round(CAST(event_id % 5 AS DOUBLE), 6)
+          |           AS DECIMAL(18,6)) AS x,
+          |         CAST(round(value, 6) AS DECIMAL(18,6)) AS y
+          |  FROM events),
+          |cells AS (
+          |  SELECT z, count(*) AS n, CAST(sum(x) AS DOUBLE) AS sx,
+          |         CAST(sum(y) AS DOUBLE) AS sy
+          |  FROM i GROUP BY 1),
+          |w AS (
+          |  SELECT a.n AS n_z1, b.n AS n_z0,
+          |         a.sy / a.n AS my1, b.sy / b.n AS my0,
+          |         a.sx / a.n AS mx1, b.sx / b.n AS mx0
+          |  FROM cells a, cells b WHERE a.z AND NOT b.z)
+          |SELECT n_z1, n_z0,
+          |       round(my1 - my0, 6) AS itt_y,
+          |       round(mx1 - mx0, 6) AS itt_x,
+          |       CASE WHEN round(mx1 - mx0, 6) <> 0.0
+          |            THEN round((my1 - my0) / (mx1 - mx0), 6) END AS late
+          |FROM w""".stripMargin)),
 
     // Wald SPRT on a Bernoulli success rate — the always-valid
     // continuous-monitoring test (peeking-honest boundaries) beside
     // bhFdr's batch correction. One count fold + a fixed IEEE tree.
-    "q_ext_sprt" -> ((s, dir) =>
+    Q("q_ext_sprt", (s, dir) =>
       graft.ops.Experiments.sprt(
         Tables.events(s, dir).filter(col("event_type") === "click"),
-        col("value") >= 250.0, p0 = 0.45, p1 = 0.5)),
+        col("value") >= 250.0, p0 = 0.45, p1 = 0.5),
+      oracle = Some({
+        // the oracle interpolates the SAME Scala-computed log constants
+        // the operator bakes into its plan (shortest-repr round-trip is
+        // bit-exact), so neither engine's SQL evaluates a log
+        val cPos = math.log(0.5 / 0.45)
+        val cNeg = math.log(0.5 / 0.55)
+        val upper = math.log((1 - 0.2) / 0.05)
+        val lower = math.log(0.2 / (1 - 0.05))
+        s"""WITH ag AS (
+           |  SELECT count(*) AS n,
+           |         CAST(sum(CASE WHEN value >= 250.0 THEN 1 ELSE 0 END)
+           |           AS BIGINT) AS k
+           |  FROM events WHERE event_type = 'click'),
+           |x AS (
+           |  SELECT n, k,
+           |         CAST(k AS DOUBLE) * $cPos
+           |           + CAST(n - k AS DOUBLE) * $cNeg AS llr
+           |  FROM ag)
+           |SELECT n, k, round(CAST(k AS DOUBLE) / n, 6) AS rate,
+           |       round(llr, 6) AS llr,
+           |       CAST(llr >= $upper AS BIGINT) AS accept_h1,
+           |       CAST(llr <= $lower AS BIGINT) AS accept_h0
+           |FROM x""".stripMargin
+      })),
 
     // Two-period difference-in-differences: treated = even users,
     // post = the back half of the month — treatment effect net of the
     // control group's trend, with the pre-period gap surfaced as the
     // parallel-trends eyeball check.
-    "q_ext_did" -> ((s, dir) =>
+    Q("q_ext_did", (s, dir) =>
       Causal.diffInDiff(Tables.events(s, dir),
         col("user_id") % 2 === 0,
         to_date(col("ts")) >= lit("2024-01-16"),
-        "value")),
+        "value"),
+      oracle = Some(
+        """WITH i AS (
+          |  SELECT user_id % 2 = 0 AS t,
+          |         CAST(ts AS DATE) >= DATE '2024-01-16' AS p,
+          |         CAST(round(value, 6) AS DECIMAL(18,6)) AS y
+          |  FROM events),
+          |cells AS (
+          |  SELECT t, p, count(*) AS n, CAST(sum(y) AS DOUBLE) AS sy
+          |  FROM i GROUP BY 1, 2)
+          |SELECT tb.n AS n_t_pre, tp.n AS n_t_post,
+          |       cb.n AS n_c_pre, cp.n AS n_c_post,
+          |       round((tb.sy / tb.n) - (cb.sy / cb.n), 6) AS pre_gap,
+          |       round((tp.sy / tp.n) - (cp.sy / cp.n), 6) AS post_gap,
+          |       round(((tp.sy / tp.n) - (tb.sy / tb.n))
+          |         - ((cp.sy / cp.n) - (cb.sy / cb.n)), 6) AS did
+          |FROM cells tb, cells tp, cells cb, cells cp
+          |WHERE tb.t AND NOT tb.p AND tp.t AND tp.p
+          |  AND NOT cb.t AND NOT cb.p AND NOT cp.t AND cp.p""".stripMargin)),
 
     // ROC AUC of the learned quality score vs the length label —
     // discrimination beside q_ext_reliability's calibration; exact
     // under ties via doubled-rank integers on the micro-score scan.
-    "q_ext_auc" -> ((s, dir) =>
-      RankEval.auc(scoredLabeled(s, dir), "score", "good")),
+    Q("q_ext_auc", (s, dir) =>
+      RankEval.auc(scoredLabeled(s, dir), "score", "good"),
+      oracle = Some(
+        s"""WITH $scoredLabeledSql,
+           |j AS (
+           |  SELECT CAST(round(score * 1000000) AS BIGINT) AS v,
+           |         CASE WHEN good THEN 1 ELSE 0 END AS pos
+           |  FROM sc JOIN lab USING (doc_id)),
+           |pv AS (
+           |  SELECT v, CAST(sum(pos) AS BIGINT) AS cp,
+           |         CAST(count(*) - sum(pos) AS BIGINT) AS cn
+           |  FROM j GROUP BY 1),
+           |scan AS (
+           |  SELECT v, cp, cn, cp + cn AS t,
+           |         CAST(coalesce(sum(cp + cn) OVER (ORDER BY v
+           |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           |           AS BIGINT) AS p
+           |  FROM pv),
+           |agg AS (
+           |  SELECT CAST(sum(cp) AS BIGINT) AS n_pos,
+           |         CAST(sum(cn) AS BIGINT) AS n_neg,
+           |         sum(CAST(cp AS DECIMAL(38,0)) * (2 * p + t + 1)) AS r2p
+           |  FROM scan),
+           |fin AS (
+           |  SELECT n_pos, n_neg,
+           |         CAST(r2p - CAST(n_pos AS DECIMAL(38,0)) * (n_pos + 1)
+           |           AS DOUBLE) / 2.0 / (CAST(n_pos AS DOUBLE) * n_neg) AS a
+           |  FROM agg)
+           |SELECT n_pos, n_neg, round(a, 6) AS auc,
+           |       round(a * 2.0 - 1.0, 6) AS gini
+           |FROM fin""".stripMargin)),
 
     // Decile lift / cumulative gains over a full-spread score (the
     // hashed quality score clusters in 2 deciles — this fixture
     // occupies all 10): "filter the top 20% of the corpus, keep
     // cum_gain of the good docs".
-    "q_ext_lift" -> ((s, dir) =>
-      RankEval.liftTable(calScored(s, dir), "score", "good", bins = 10)),
+    Q("q_ext_lift", (s, dir) =>
+      RankEval.liftTable(calScored(s, dir), "score", "good", bins = 10),
+      oracle = Some(
+        s"""WITH $calScoredSql,
+           |pb AS (
+           |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
+           |           AS bin,
+           |         CASE WHEN good THEN 1 ELSE 0 END AS pos
+           |  FROM cal),
+           |agg AS (
+           |  SELECT bin, count(*) AS n, CAST(sum(pos) AS BIGINT) AS pos
+           |  FROM pb GROUP BY 1),
+           |tot AS (
+           |  SELECT CAST(sum(n) AS BIGINT) AS t_n,
+           |         CAST(sum(pos) AS BIGINT) AS t_pos
+           |  FROM agg),
+           |cum AS (
+           |  SELECT a.bin, a.n, a.pos,
+           |         CAST(sum(b.n) AS BIGINT) AS cum_n,
+           |         CAST(sum(b.pos) AS BIGINT) AS cum_pos
+           |  FROM agg a JOIN agg b ON b.bin >= a.bin GROUP BY 1, 2, 3)
+           |SELECT bin, n, pos,
+           |       round(CAST(pos AS DOUBLE) / n, 6) AS pos_rate,
+           |       round((CAST(pos AS DOUBLE) / n)
+           |         / (CAST(t_pos AS DOUBLE) / t_n), 6) AS lift,
+           |       cum_n, cum_pos,
+           |       round(CAST(cum_pos AS DOUBLE) / t_pos, 6) AS cum_gain,
+           |       round((CAST(cum_pos AS DOUBLE) / cum_n)
+           |         / (CAST(t_pos AS DOUBLE) / t_n), 6) AS cum_lift
+           |FROM cum, tot""".stripMargin)),
 
     // Isotonic calibration on the same full-spread score — PAV with
     // no sequential pass (minimax identity over the 10-row bin table);
     // the monotone fix Reliability's curve decides to apply. The
     // overlap band's hash noise makes raw rates non-monotone, so the
     // gate exercises actual pooling.
-    "q_ext_isotonic" -> ((s, dir) =>
+    Q("q_ext_isotonic", (s, dir) =>
       Calibrate.isotonicBinned(calScored(s, dir), "score", "good",
-        bins = 10)),
+        bins = 10),
+      oracle = Some(
+        s"""WITH $calScoredSql,
+           |pb AS (
+           |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
+           |           AS bin,
+           |         CASE WHEN good THEN 1 ELSE 0 END AS pos
+           |  FROM cal),
+           |agg AS (
+           |  SELECT bin, count(*) AS n, CAST(sum(pos) AS BIGINT) AS pos
+           |  FROM pb GROUP BY 1),
+           |rg AS (
+           |  SELECT a.bin AS j, b.bin AS k,
+           |         CAST(sum(m.pos) AS DOUBLE) / sum(m.n) AS mean
+           |  FROM agg a JOIN agg b ON b.bin >= a.bin
+           |  JOIN agg m ON m.bin BETWEEN a.bin AND b.bin
+           |  GROUP BY 1, 2),
+           |f1 AS (
+           |  SELECT i.bin AS i, r.j, min(r.mean) AS m1
+           |  FROM agg i JOIN rg r ON r.j <= i.bin AND r.k >= i.bin
+           |  GROUP BY 1, 2),
+           |f AS (SELECT i, max(m1) AS fit FROM f1 GROUP BY 1)
+           |SELECT a.bin, a.n, a.pos,
+           |       round(CAST(a.pos AS DOUBLE) / a.n, 6) AS raw_rate,
+           |       round(f.fit, 6) AS iso_rate
+           |FROM agg a JOIN f ON f.i = a.bin""".stripMargin)),
 
     // Expected Calibration Error — the reliability curve folded to the
     // one number papers report; 9-dp decimal bin terms.
-    "q_ext_ece" -> ((s, dir) =>
+    Q("q_ext_ece", (s, dir) =>
       graft.ext.Reliability.ece(calScored(s, dir), "score", "good",
-        bins = 10)),
+        bins = 10),
+      oracle = Some(
+        s"""WITH $calScoredSql,
+           |j AS (
+           |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
+           |           AS bin,
+           |         CAST(round(score, 6) AS DECIMAL(18,6)) AS s,
+           |         CASE WHEN good THEN 1 ELSE 0 END AS pos
+           |  FROM cal),
+           |cv AS (
+           |  SELECT bin, count(*) AS n,
+           |         round(CAST(sum(s) AS DOUBLE) / count(*), 6) AS mean_score,
+           |         round(CAST(sum(pos) AS DOUBLE) / count(*), 6) AS pos_rate
+           |  FROM j GROUP BY 1),
+           |t AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM cv),
+           |terms AS (
+           |  SELECT t.t,
+           |         CAST(round(CAST(n AS DOUBLE) / t.t
+           |           * abs(pos_rate - mean_score), 9) AS DECIMAL(28,9))
+           |           AS term
+           |  FROM cv, t)
+           |SELECT max(t) AS n, count(*) AS n_bins,
+           |       round(CAST(sum(term) AS DOUBLE), 6) AS ece
+           |FROM terms""".stripMargin)),
 
     // END-TO-END calibrated filtering: fit isotonic on the even half,
     // keep the bins whose calibrated rate clears 0.5, apply to the odd
     // half, report achieved precision vs base rate — the quality ops
     // composing into the decision they exist for.
-    "q_ext_calibrated_filter" -> ((s, dir) => {
+    Q("q_ext_calibrated_filter", (s, dir) => {
       val all = calScored(s, dir)
       val train = all.filter(col("doc_id") % 2 === 0)
       val eval = all.filter(col("doc_id") % 2 =!= 0)
@@ -152,37 +496,139 @@ object EvalQueries {
             .as("precision"),
           round(col("g_eval").cast("double") / col("n_eval"), 6)
             .as("base_rate"))
-    }),
+    },
+      oracle = Some(
+        s"""WITH $calScoredSql,
+           |tr AS (SELECT * FROM cal WHERE doc_id % 2 = 0),
+           |ev AS (SELECT * FROM cal WHERE doc_id % 2 <> 0),
+           |pb AS (
+           |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
+           |           AS bin,
+           |         CASE WHEN good THEN 1 ELSE 0 END AS pos
+           |  FROM tr),
+           |agg AS (
+           |  SELECT bin, count(*) AS n, CAST(sum(pos) AS BIGINT) AS pos
+           |  FROM pb GROUP BY 1),
+           |rg AS (
+           |  SELECT a.bin AS j, b.bin AS k,
+           |         CAST(sum(m.pos) AS DOUBLE) / sum(m.n) AS mean
+           |  FROM agg a JOIN agg b ON b.bin >= a.bin
+           |  JOIN agg m ON m.bin BETWEEN a.bin AND b.bin
+           |  GROUP BY 1, 2),
+           |f1 AS (
+           |  SELECT i.bin AS i, r.j, min(r.mean) AS m1
+           |  FROM agg i JOIN rg r ON r.j <= i.bin AND r.k >= i.bin
+           |  GROUP BY 1, 2),
+           |f AS (SELECT i, max(m1) AS fit FROM f1 GROUP BY 1),
+           |keptb AS (SELECT i AS bin FROM f WHERE round(fit, 6) >= 0.5),
+           |evb AS (
+           |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
+           |           AS bin,
+           |         good
+           |  FROM ev),
+           |k AS (SELECT evb.* FROM evb JOIN keptb USING (bin))
+           |SELECT (SELECT count(*) FROM tr) AS n_train,
+           |       (SELECT count(*) FROM ev) AS n_eval,
+           |       (SELECT count(*) FROM k) AS n_kept,
+           |       CASE WHEN (SELECT count(*) FROM k) > 0
+           |            THEN round((SELECT CAST(sum(CASE WHEN good THEN 1
+           |                ELSE 0 END) AS DOUBLE) FROM k)
+           |              / (SELECT count(*) FROM k), 6) END AS precision,
+           |       round((SELECT CAST(sum(CASE WHEN good THEN 1 ELSE 0 END)
+           |           AS DOUBLE) FROM ev)
+           |         / (SELECT count(*) FROM ev), 6) AS base_rate""".stripMargin)),
 
     // NDCG@10 / MRR / P@10 / R@10 of the BM25 run against ≥2-term
     // match relevance — the list-metric gate for the retrieval stack.
-    "q_ext_ndcg" -> ((s, dir) => {
+    Q("q_ext_ndcg", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val qt = retrievalQueryTerms(s)
       val ranked = Search.bm25TopK(docs, "doc_id", "text", qt, 10)
       RankEval.retrievalMetrics(ranked, retrievalRelevant(docs, qt), 10)
-    }),
+    },
+      oracle = Some(
+        s"""WITH $retrievalRunSql,
+           |dcgw AS (SELECT * FROM (VALUES ${RankEval.dcgWeightsSqlRows(10)})
+           |  AS t(i, w, p)),
+           |hits AS (
+           |  SELECT run.query_id,
+           |         CAST(sum(CASE WHEN rel.doc_id IS NOT NULL THEN 1 ELSE 0 END)
+           |           AS BIGINT) AS hits,
+           |         min(CASE WHEN rel.doc_id IS NOT NULL THEN rank END)
+           |           AS first_rel,
+           |         sum(CASE WHEN rel.doc_id IS NOT NULL
+           |           THEN CAST(dw.w AS DECIMAL(28,9))
+           |           ELSE CAST(0 AS DECIMAL(28,9)) END) AS dcg
+           |  FROM run
+           |  LEFT JOIN rel ON rel.query_id = run.query_id
+           |    AND rel.doc_id = run.doc_id
+           |  JOIN dcgw dw ON dw.i = run.rank
+           |  GROUP BY 1),
+           |m AS (
+           |  SELECT n.query_id, n.n_rel,
+           |         coalesce(h.hits, 0) AS hits, h.first_rel,
+           |         coalesce(h.dcg, CAST(0 AS DECIMAL(28,9))) AS dcg,
+           |         CAST(iw.p AS DECIMAL(28,9)) AS idcg
+           |  FROM nrel n
+           |  LEFT JOIN hits h USING (query_id)
+           |  JOIN dcgw iw ON iw.i = least(n.n_rel, 10))
+           |SELECT query_id, n_rel, hits,
+           |       round(CAST(hits AS DOUBLE) / 10, 6) AS p_at_k,
+           |       round(CAST(hits AS DOUBLE) / n_rel, 6) AS recall_at_k,
+           |       round(coalesce(1.0 / first_rel, 0.0), 6) AS mrr,
+           |       round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) AS ndcg
+           |FROM m""".stripMargin)),
 
     // Distributed logistic-regression probe, trained ENGINE-EXACTLY:
     // 3 batch-GD rounds over the embeddings (label-0 one-vs-rest),
     // fixed-point sums + the rational sigmoid making every weight
     // bit-reproducible under any partitioning — and in DuckDB, which
     // replays all three rounds as chained CTEs. Final weights gated.
-    "q_ext_lr_train" -> ((s, dir) =>
+    Q("q_ext_lr_train", (s, dir) =>
       graft.ext.LogReg.train(Tables.embeddings(s, dir), "vec_id",
-        "embedding", "label", posLabel = 0, rounds = LrRounds, lr = LrRate)),
+        "embedding", "label", posLabel = 0, rounds = LrRounds, lr = LrRate),
+      oracle = Some(
+        (lrCtes(LrRounds) +
+          // decimal-pinned rounding, mirroring LogReg.train: double round
+          // tie rules differ between engines on exact .xxxxxx5 weights
+          s"\nSELECT CAST(j AS BIGINT) AS j, " +
+          s"CAST(round(CAST(w AS DECIMAL(28,15)), 6) AS DOUBLE) AS weight " +
+          s"FROM w$LrRounds"))),
 
     // The trained probe applied back as a corpus filter: threshold-0.5
     // confusion counts + accuracy — the publishable quality summary of
     // a trained keep/drop model, replayed end-to-end (training AND
     // scoring) by the oracle.
-    "q_ext_lr_eval" -> ((s, dir) => {
+    Q("q_ext_lr_eval", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val w = graft.ext.LogReg.trainWeights(emb, "vec_id", "embedding",
         "label", posLabel = 0, rounds = LrRounds, lr = LrRate)
       graft.ext.LogReg.evalConfusion(emb, "vec_id", "embedding", "label",
         posLabel = 0, w)
-    }),
+    },
+      oracle = Some(
+        (lrCtes(LrRounds) +
+          s""",
+             |pf AS (SELECT t.vec_id,
+             |  CASE WHEN t.x * w.w >= 0 THEN CAST(floor((t.x * w.w)*1e15 + 0.5) AS BIGINT)
+             |       ELSE CAST(-floor(-((t.x * w.w)*1e15) + 0.5) AS BIGINT) END AS p
+             |  FROM t JOIN w$LrRounds w USING (j)),
+             |zf AS (SELECT vec_id,
+             |  (CAST(sum(CASE WHEN p >= 0 THEN p // 16777216
+             |       ELSE -((-p + 16777215) // 16777216) END) AS DOUBLE)*16777216.0
+             |   + CAST(sum(p - (CASE WHEN p >= 0 THEN p // 16777216
+             |       ELSE -((-p + 16777215) // 16777216) END) * 16777216)
+             |       AS DOUBLE))/1e15 AS z
+             |  FROM pf GROUP BY vec_id),
+             |sc AS (SELECT e.y, (0.5 + 0.5 * z.z / (1 + abs(z.z))) >= 0.5 AS pred
+             |  FROM zf z JOIN e USING (vec_id))
+             |SELECT CAST(sum(CASE WHEN pred AND y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+             |       CAST(sum(CASE WHEN pred AND y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+             |       CAST(sum(CASE WHEN NOT pred AND y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
+             |       CAST(sum(CASE WHEN NOT pred AND y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
+             |       round(CAST(sum(CASE WHEN pred = (y = 1.0) THEN 1 ELSE 0 END) AS DOUBLE)
+             |             / count(*), 6) AS accuracy
+             |FROM sc""".stripMargin))),
   )
 
   private final val LrRounds = 3
@@ -385,465 +831,4 @@ object EvalQueries {
       |    FROM tf p JOIN qt q USING (term) GROUP BY 1, 2)
       |  WHERE nt >= 2),
       |nrel AS (SELECT query_id, count(*) AS n_rel FROM rel GROUP BY 1)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q_ext_lr_train" ->
-      (lrCtes(LrRounds) +
-        // decimal-pinned rounding, mirroring LogReg.train: double round
-        // tie rules differ between engines on exact .xxxxxx5 weights
-        s"\nSELECT CAST(j AS BIGINT) AS j, " +
-        s"CAST(round(CAST(w AS DECIMAL(28,15)), 6) AS DOUBLE) AS weight " +
-        s"FROM w$LrRounds"),
-
-    "q_ext_lr_eval" ->
-      (lrCtes(LrRounds) +
-        s""",
-           |pf AS (SELECT t.vec_id,
-           |  CASE WHEN t.x * w.w >= 0 THEN CAST(floor((t.x * w.w)*1e15 + 0.5) AS BIGINT)
-           |       ELSE CAST(-floor(-((t.x * w.w)*1e15) + 0.5) AS BIGINT) END AS p
-           |  FROM t JOIN w$LrRounds w USING (j)),
-           |zf AS (SELECT vec_id,
-           |  (CAST(sum(CASE WHEN p >= 0 THEN p // 16777216
-           |       ELSE -((-p + 16777215) // 16777216) END) AS DOUBLE)*16777216.0
-           |   + CAST(sum(p - (CASE WHEN p >= 0 THEN p // 16777216
-           |       ELSE -((-p + 16777215) // 16777216) END) * 16777216)
-           |       AS DOUBLE))/1e15 AS z
-           |  FROM pf GROUP BY vec_id),
-           |sc AS (SELECT e.y, (0.5 + 0.5 * z.z / (1 + abs(z.z))) >= 0.5 AS pred
-           |  FROM zf z JOIN e USING (vec_id))
-           |SELECT CAST(sum(CASE WHEN pred AND y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-           |       CAST(sum(CASE WHEN pred AND y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-           |       CAST(sum(CASE WHEN NOT pred AND y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-           |       CAST(sum(CASE WHEN NOT pred AND y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-           |       round(CAST(sum(CASE WHEN pred = (y = 1.0) THEN 1 ELSE 0 END) AS DOUBLE)
-           |             / count(*), 6) AS accuracy
-           |FROM sc""".stripMargin),
-
-    "q_ext_iv" ->
-      """WITH i AS (
-        |  SELECT user_id % 2 = 0 AS z,
-        |         CAST(round(CAST(event_id % 5 AS DOUBLE), 6)
-        |           AS DECIMAL(18,6)) AS x,
-        |         CAST(round(value, 6) AS DECIMAL(18,6)) AS y
-        |  FROM events),
-        |cells AS (
-        |  SELECT z, count(*) AS n, CAST(sum(x) AS DOUBLE) AS sx,
-        |         CAST(sum(y) AS DOUBLE) AS sy
-        |  FROM i GROUP BY 1),
-        |w AS (
-        |  SELECT a.n AS n_z1, b.n AS n_z0,
-        |         a.sy / a.n AS my1, b.sy / b.n AS my0,
-        |         a.sx / a.n AS mx1, b.sx / b.n AS mx0
-        |  FROM cells a, cells b WHERE a.z AND NOT b.z)
-        |SELECT n_z1, n_z0,
-        |       round(my1 - my0, 6) AS itt_y,
-        |       round(mx1 - mx0, 6) AS itt_x,
-        |       CASE WHEN round(mx1 - mx0, 6) <> 0.0
-        |            THEN round((my1 - my0) / (mx1 - mx0), 6) END AS late
-        |FROM w""".stripMargin,
-
-    "q_ext_ece" ->
-      s"""WITH $calScoredSql,
-         |j AS (
-         |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
-         |           AS bin,
-         |         CAST(round(score, 6) AS DECIMAL(18,6)) AS s,
-         |         CASE WHEN good THEN 1 ELSE 0 END AS pos
-         |  FROM cal),
-         |cv AS (
-         |  SELECT bin, count(*) AS n,
-         |         round(CAST(sum(s) AS DOUBLE) / count(*), 6) AS mean_score,
-         |         round(CAST(sum(pos) AS DOUBLE) / count(*), 6) AS pos_rate
-         |  FROM j GROUP BY 1),
-         |t AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM cv),
-         |terms AS (
-         |  SELECT t.t,
-         |         CAST(round(CAST(n AS DOUBLE) / t.t
-         |           * abs(pos_rate - mean_score), 9) AS DECIMAL(28,9))
-         |           AS term
-         |  FROM cv, t)
-         |SELECT max(t) AS n, count(*) AS n_bins,
-         |       round(CAST(sum(term) AS DOUBLE), 6) AS ece
-         |FROM terms""".stripMargin,
-
-    "q_ext_calibrated_filter" ->
-      s"""WITH $calScoredSql,
-         |tr AS (SELECT * FROM cal WHERE doc_id % 2 = 0),
-         |ev AS (SELECT * FROM cal WHERE doc_id % 2 <> 0),
-         |pb AS (
-         |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
-         |           AS bin,
-         |         CASE WHEN good THEN 1 ELSE 0 END AS pos
-         |  FROM tr),
-         |agg AS (
-         |  SELECT bin, count(*) AS n, CAST(sum(pos) AS BIGINT) AS pos
-         |  FROM pb GROUP BY 1),
-         |rg AS (
-         |  SELECT a.bin AS j, b.bin AS k,
-         |         CAST(sum(m.pos) AS DOUBLE) / sum(m.n) AS mean
-         |  FROM agg a JOIN agg b ON b.bin >= a.bin
-         |  JOIN agg m ON m.bin BETWEEN a.bin AND b.bin
-         |  GROUP BY 1, 2),
-         |f1 AS (
-         |  SELECT i.bin AS i, r.j, min(r.mean) AS m1
-         |  FROM agg i JOIN rg r ON r.j <= i.bin AND r.k >= i.bin
-         |  GROUP BY 1, 2),
-         |f AS (SELECT i, max(m1) AS fit FROM f1 GROUP BY 1),
-         |keptb AS (SELECT i AS bin FROM f WHERE round(fit, 6) >= 0.5),
-         |evb AS (
-         |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
-         |           AS bin,
-         |         good
-         |  FROM ev),
-         |k AS (SELECT evb.* FROM evb JOIN keptb USING (bin))
-         |SELECT (SELECT count(*) FROM tr) AS n_train,
-         |       (SELECT count(*) FROM ev) AS n_eval,
-         |       (SELECT count(*) FROM k) AS n_kept,
-         |       CASE WHEN (SELECT count(*) FROM k) > 0
-         |            THEN round((SELECT CAST(sum(CASE WHEN good THEN 1
-         |                ELSE 0 END) AS DOUBLE) FROM k)
-         |              / (SELECT count(*) FROM k), 6) END AS precision,
-         |       round((SELECT CAST(sum(CASE WHEN good THEN 1 ELSE 0 END)
-         |           AS DOUBLE) FROM ev)
-         |         / (SELECT count(*) FROM ev), 6) AS base_rate""".stripMargin,
-
-    "q_ext_sprt" -> {
-      // the oracle interpolates the SAME Scala-computed log constants
-      // the operator bakes into its plan (shortest-repr round-trip is
-      // bit-exact), so neither engine's SQL evaluates a log
-      val cPos = math.log(0.5 / 0.45)
-      val cNeg = math.log(0.5 / 0.55)
-      val upper = math.log((1 - 0.2) / 0.05)
-      val lower = math.log(0.2 / (1 - 0.05))
-      s"""WITH ag AS (
-         |  SELECT count(*) AS n,
-         |         CAST(sum(CASE WHEN value >= 250.0 THEN 1 ELSE 0 END)
-         |           AS BIGINT) AS k
-         |  FROM events WHERE event_type = 'click'),
-         |x AS (
-         |  SELECT n, k,
-         |         CAST(k AS DOUBLE) * $cPos
-         |           + CAST(n - k AS DOUBLE) * $cNeg AS llr
-         |  FROM ag)
-         |SELECT n, k, round(CAST(k AS DOUBLE) / n, 6) AS rate,
-         |       round(llr, 6) AS llr,
-         |       CAST(llr >= $upper AS BIGINT) AS accept_h1,
-         |       CAST(llr <= $lower AS BIGINT) AS accept_h0
-         |FROM x""".stripMargin
-    },
-
-    "q_ext_did" ->
-      """WITH i AS (
-        |  SELECT user_id % 2 = 0 AS t,
-        |         CAST(ts AS DATE) >= DATE '2024-01-16' AS p,
-        |         CAST(round(value, 6) AS DECIMAL(18,6)) AS y
-        |  FROM events),
-        |cells AS (
-        |  SELECT t, p, count(*) AS n, CAST(sum(y) AS DOUBLE) AS sy
-        |  FROM i GROUP BY 1, 2)
-        |SELECT tb.n AS n_t_pre, tp.n AS n_t_post,
-        |       cb.n AS n_c_pre, cp.n AS n_c_post,
-        |       round((tb.sy / tb.n) - (cb.sy / cb.n), 6) AS pre_gap,
-        |       round((tp.sy / tp.n) - (cp.sy / cp.n), 6) AS post_gap,
-        |       round(((tp.sy / tp.n) - (tb.sy / tb.n))
-        |         - ((cp.sy / cp.n) - (cb.sy / cb.n)), 6) AS did
-        |FROM cells tb, cells tp, cells cb, cells cp
-        |WHERE tb.t AND NOT tb.p AND tp.t AND tp.p
-        |  AND NOT cb.t AND NOT cb.p AND NOT cp.t AND cp.p""".stripMargin,
-
-    "q_ext_auc" ->
-      s"""WITH $scoredLabeledSql,
-         |j AS (
-         |  SELECT CAST(round(score * 1000000) AS BIGINT) AS v,
-         |         CASE WHEN good THEN 1 ELSE 0 END AS pos
-         |  FROM sc JOIN lab USING (doc_id)),
-         |pv AS (
-         |  SELECT v, CAST(sum(pos) AS BIGINT) AS cp,
-         |         CAST(count(*) - sum(pos) AS BIGINT) AS cn
-         |  FROM j GROUP BY 1),
-         |scan AS (
-         |  SELECT v, cp, cn, cp + cn AS t,
-         |         CAST(coalesce(sum(cp + cn) OVER (ORDER BY v
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |           AS BIGINT) AS p
-         |  FROM pv),
-         |agg AS (
-         |  SELECT CAST(sum(cp) AS BIGINT) AS n_pos,
-         |         CAST(sum(cn) AS BIGINT) AS n_neg,
-         |         sum(CAST(cp AS DECIMAL(38,0)) * (2 * p + t + 1)) AS r2p
-         |  FROM scan),
-         |fin AS (
-         |  SELECT n_pos, n_neg,
-         |         CAST(r2p - CAST(n_pos AS DECIMAL(38,0)) * (n_pos + 1)
-         |           AS DOUBLE) / 2.0 / (CAST(n_pos AS DOUBLE) * n_neg) AS a
-         |  FROM agg)
-         |SELECT n_pos, n_neg, round(a, 6) AS auc,
-         |       round(a * 2.0 - 1.0, 6) AS gini
-         |FROM fin""".stripMargin,
-
-    "q_ext_lift" ->
-      s"""WITH $calScoredSql,
-         |pb AS (
-         |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
-         |           AS bin,
-         |         CASE WHEN good THEN 1 ELSE 0 END AS pos
-         |  FROM cal),
-         |agg AS (
-         |  SELECT bin, count(*) AS n, CAST(sum(pos) AS BIGINT) AS pos
-         |  FROM pb GROUP BY 1),
-         |tot AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS t_n,
-         |         CAST(sum(pos) AS BIGINT) AS t_pos
-         |  FROM agg),
-         |cum AS (
-         |  SELECT a.bin, a.n, a.pos,
-         |         CAST(sum(b.n) AS BIGINT) AS cum_n,
-         |         CAST(sum(b.pos) AS BIGINT) AS cum_pos
-         |  FROM agg a JOIN agg b ON b.bin >= a.bin GROUP BY 1, 2, 3)
-         |SELECT bin, n, pos,
-         |       round(CAST(pos AS DOUBLE) / n, 6) AS pos_rate,
-         |       round((CAST(pos AS DOUBLE) / n)
-         |         / (CAST(t_pos AS DOUBLE) / t_n), 6) AS lift,
-         |       cum_n, cum_pos,
-         |       round(CAST(cum_pos AS DOUBLE) / t_pos, 6) AS cum_gain,
-         |       round((CAST(cum_pos AS DOUBLE) / cum_n)
-         |         / (CAST(t_pos AS DOUBLE) / t_n), 6) AS cum_lift
-         |FROM cum, tot""".stripMargin,
-
-    "q_ext_isotonic" ->
-      s"""WITH $calScoredSql,
-         |pb AS (
-         |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
-         |           AS bin,
-         |         CASE WHEN good THEN 1 ELSE 0 END AS pos
-         |  FROM cal),
-         |agg AS (
-         |  SELECT bin, count(*) AS n, CAST(sum(pos) AS BIGINT) AS pos
-         |  FROM pb GROUP BY 1),
-         |rg AS (
-         |  SELECT a.bin AS j, b.bin AS k,
-         |         CAST(sum(m.pos) AS DOUBLE) / sum(m.n) AS mean
-         |  FROM agg a JOIN agg b ON b.bin >= a.bin
-         |  JOIN agg m ON m.bin BETWEEN a.bin AND b.bin
-         |  GROUP BY 1, 2),
-         |f1 AS (
-         |  SELECT i.bin AS i, r.j, min(r.mean) AS m1
-         |  FROM agg i JOIN rg r ON r.j <= i.bin AND r.k >= i.bin
-         |  GROUP BY 1, 2),
-         |f AS (SELECT i, max(m1) AS fit FROM f1 GROUP BY 1)
-         |SELECT a.bin, a.n, a.pos,
-         |       round(CAST(a.pos AS DOUBLE) / a.n, 6) AS raw_rate,
-         |       round(f.fit, 6) AS iso_rate
-         |FROM agg a JOIN f ON f.i = a.bin""".stripMargin,
-
-    "q_ext_ndcg" ->
-      s"""WITH $retrievalRunSql,
-         |dcgw AS (SELECT * FROM (VALUES ${RankEval.dcgWeightsSqlRows(10)})
-         |  AS t(i, w, p)),
-         |hits AS (
-         |  SELECT run.query_id,
-         |         CAST(sum(CASE WHEN rel.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-         |           AS BIGINT) AS hits,
-         |         min(CASE WHEN rel.doc_id IS NOT NULL THEN rank END)
-         |           AS first_rel,
-         |         sum(CASE WHEN rel.doc_id IS NOT NULL
-         |           THEN CAST(dw.w AS DECIMAL(28,9))
-         |           ELSE CAST(0 AS DECIMAL(28,9)) END) AS dcg
-         |  FROM run
-         |  LEFT JOIN rel ON rel.query_id = run.query_id
-         |    AND rel.doc_id = run.doc_id
-         |  JOIN dcgw dw ON dw.i = run.rank
-         |  GROUP BY 1),
-         |m AS (
-         |  SELECT n.query_id, n.n_rel,
-         |         coalesce(h.hits, 0) AS hits, h.first_rel,
-         |         coalesce(h.dcg, CAST(0 AS DECIMAL(28,9))) AS dcg,
-         |         CAST(iw.p AS DECIMAL(28,9)) AS idcg
-         |  FROM nrel n
-         |  LEFT JOIN hits h USING (query_id)
-         |  JOIN dcgw iw ON iw.i = least(n.n_rel, 10))
-         |SELECT query_id, n_rel, hits,
-         |       round(CAST(hits AS DOUBLE) / 10, 6) AS p_at_k,
-         |       round(CAST(hits AS DOUBLE) / n_rel, 6) AS recall_at_k,
-         |       round(coalesce(1.0 / first_rel, 0.0), 6) AS mrr,
-         |       round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) AS ndcg
-         |FROM m""".stripMargin,
-    "q_ext_cuped" ->
-      s"""WITH $UserPrePostSql,
-         |pc AS (
-         |  SELECT user_id % 2 = 0 AS t,
-         |         CAST(round(y, 6) AS DECIMAL(18,6)) AS y,
-         |         CAST(round(x, 6) AS DECIMAL(18,6)) AS x
-         |  FROM per),
-         |pooled AS (
-         |  SELECT count(*) AS n,
-         |         CAST(CAST(sum(x) AS DECIMAL(38,12)) AS DOUBLE) AS sx,
-         |         CAST(CAST(sum(y) AS DECIMAL(38,12)) AS DOUBLE) AS sy,
-         |         CAST(sum(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-         |         CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-         |         CAST(sum(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy
-         |  FROM pc),
-         |pd AS (
-         |  SELECT n,
-         |         (sxy - sx * sy / n) / (sxx - sx * sx / n) AS theta,
-         |         sx / n AS mx,
-         |         ((sxy - sx * sy / n) * (sxy - sx * sy / n))
-         |           / ((sxx - sx * sx / n) * (syy - sy * sy / n)) AS rho2
-         |  FROM pooled),
-         |arms AS (
-         |  SELECT t, count(*) AS na,
-         |         CAST(CAST(sum(y) AS DECIMAL(38,12)) AS DOUBLE) / count(*) AS my,
-         |         CAST(CAST(sum(x) AS DECIMAL(38,12)) AS DOUBLE) / count(*) AS mxa
-         |  FROM pc GROUP BY 1)
-         |SELECT a.na AS n_t, b.na AS n_c, round(theta, 6) AS theta,
-         |       round(a.my - b.my, 6) AS delta_raw,
-         |       round((a.my - theta * (a.mxa - mx))
-         |         - (b.my - theta * (b.mxa - mx)), 6) AS delta_cuped,
-         |       round(rho2, 6) AS var_reduction
-         |FROM arms a, arms b, pd WHERE a.t AND NOT b.t""".stripMargin,
-
-    "q_ext_stratified_ate" ->
-      """WITH i AS (
-        |  SELECT event_type AS s, user_id % 2 = 0 AS t,
-        |         CAST(round(value, 6) AS DECIMAL(18,6)) AS y
-        |  FROM events),
-        |cells AS (
-        |  SELECT s, t, count(*) AS n,
-        |         CAST(CAST(sum(y) AS DECIMAL(38,12)) AS DOUBLE) AS sy
-        |  FROM i GROUP BY 1, 2),
-        |tot AS (SELECT count(*) AS n_all FROM i)
-        |SELECT tc.s, tc.n AS n_t, cc.n AS n_c,
-        |       round(tc.sy / tc.n, 6) AS mean_t,
-        |       round(cc.sy / cc.n, 6) AS mean_c,
-        |       round(tc.sy / tc.n - cc.sy / cc.n, 6) AS effect,
-        |       round(CAST(tc.n + cc.n AS DOUBLE) / n_all, 6) AS weight
-        |FROM cells tc JOIN cells cc ON cc.s = tc.s, tot
-        |WHERE tc.t AND NOT cc.t""".stripMargin,
-
-    "q_ext_target_encode" ->
-      """WITH i AS (
-        |  SELECT c_custkey, c_mktsegment,
-        |         CAST(round(c_acctbal, 6) AS DECIMAL(18,6)) AS y
-        |  FROM customer),
-        |cat AS (
-        |  SELECT c_mktsegment, count(*) AS nc,
-        |         CAST(sum(y) AS DECIMAL(38,12)) AS sc
-        |  FROM i GROUP BY 1),
-        |gt AS (
-        |  SELECT count(*) AS ng, CAST(sum(y) AS DECIMAL(38,12)) AS sg FROM i)
-        |SELECT c_custkey, i.c_mktsegment, CAST(y AS DOUBLE) AS target_r,
-        |       round(CASE WHEN nc > 1
-        |         THEN CAST(sc - y AS DOUBLE) / (nc - 1)
-        |         ELSE CAST(sg - y AS DOUBLE) / (ng - 1) END, 6) AS enc
-        |FROM i JOIN cat ON cat.c_mktsegment = i.c_mktsegment, gt""".stripMargin,
-
-    "q_ext_mutual_info" ->
-      """WITH cells AS (
-        |  SELECT event_type AS a, user_id % 7 AS b, count(*) AS cxy
-        |  FROM events GROUP BY 1, 2),
-        |ma AS (SELECT a, CAST(sum(cxy) AS BIGINT) AS ca FROM cells GROUP BY 1),
-        |mb AS (SELECT b, CAST(sum(cxy) AS BIGINT) AS cb FROM cells GROUP BY 1),
-        |n AS (SELECT CAST(sum(cxy) AS BIGINT) AS n FROM cells),
-        |terms AS (
-        |  SELECT n.n,
-        |         CAST(round(CAST(cxy AS DOUBLE) / n.n
-        |           * ln(CAST(cxy AS DOUBLE) * n.n
-        |               / (CAST(ca AS DOUBLE) * cb)), 9) AS DECIMAL(28,9))
-        |           AS term
-        |  FROM cells JOIN ma USING (a) JOIN mb USING (b), n)
-        |SELECT max(n) AS n, count(*) AS n_cells,
-        |       round(CAST(sum(term) AS DOUBLE), 6) AS mi
-        |FROM terms""".stripMargin,
-
-    "q_ext_pinball" ->
-      """WITH base AS (
-        |  SELECT event_type AS k, CAST(hour(ts) AS INT) AS hod,
-        |         round(value, 6) AS y,
-        |         (CAST(floor(epoch(ts)) AS BIGINT) // 86400) % 2 = 0 AS tr
-        |  FROM events),
-        |train AS (SELECT * FROM base WHERE tr),
-        |ranked AS (
-        |  SELECT k, hod, y,
-        |         CAST(row_number() OVER (PARTITION BY k, hod ORDER BY y)
-        |           AS BIGINT) AS rn
-        |  FROM train),
-        |cnt AS (SELECT k, hod, count(*) AS n FROM train GROUP BY 1, 2),
-        |qq AS (SELECT CAST(unnest([10, 50, 90]) AS BIGINT) AS q_pct),
-        |pick AS (
-        |  SELECT r.k, r.hod, q.q_pct, c.n, r.rn, r.y,
-        |         CAST(q.q_pct AS DOUBLE) / 100.0 * (c.n - 1) AS pos
-        |  FROM ranked r JOIN cnt c ON c.k = r.k AND c.hod = r.hod, qq q),
-        |sel AS (
-        |  SELECT * FROM pick
-        |  WHERE rn = CAST(floor(pos) AS BIGINT) + 1
-        |     OR rn = least(CAST(floor(pos) AS BIGINT) + 2, n)),
-        |fq AS (
-        |  SELECT k, hod, q_pct,
-        |         max(CASE WHEN rn = CAST(floor(pos) AS BIGINT) + 1
-        |           THEN y END) AS ylo,
-        |         max(CASE WHEN rn = least(CAST(floor(pos) AS BIGINT) + 2, n)
-        |           THEN y END) AS yhi,
-        |         max(pos) AS p
-        |  FROM sel GROUP BY 1, 2, 3),
-        |f AS (
-        |  SELECT k, hod, q_pct,
-        |         round(ylo + (p - floor(p)) * (yhi - ylo), 6) AS fv
-        |  FROM fq),
-        |l AS (
-        |  SELECT b.k, f.q_pct,
-        |         round(CASE WHEN b.y >= fv
-        |           THEN CAST(f.q_pct AS DOUBLE) / 100.0 * (b.y - fv)
-        |           ELSE (1.0 - CAST(f.q_pct AS DOUBLE) / 100.0) * (fv - b.y)
-        |         END, 6) AS loss
-        |  FROM base b JOIN f ON f.k = b.k AND f.hod = b.hod
-        |  WHERE NOT b.tr)
-        |SELECT k, q_pct, count(*) AS n,
-        |       round(CAST(sum(CAST(loss AS DECIMAL(18,6))) AS DOUBLE)
-        |         / count(*), 6) AS pinball
-        |FROM l GROUP BY 1, 2""".stripMargin,
-
-    "q_ext_conformal" ->
-      s"""WITH s AS (${StatQueries.hourlySeriesSqlShared}),
-         |hi AS (SELECT k, h + 86400 AS h, m AS f FROM s),
-         |paired AS (
-         |  SELECT s.k, s.h, round(abs(s.m - hi.f), 6) AS r,
-         |         (s.h // 3600) % 2 = 0 AS cal
-         |  FROM s JOIN hi ON hi.k = s.k AND hi.h = s.h),
-         |calr AS (SELECT k, r FROM paired WHERE cal),
-         |ranked AS (
-         |  SELECT k, r,
-         |         CAST(row_number() OVER (PARTITION BY k ORDER BY r)
-         |           AS BIGINT) AS rn
-         |  FROM calr),
-         |cnt AS (SELECT k, count(*) AS n_cal FROM calr GROUP BY 1),
-         |pick AS (
-         |  SELECT rk.k, c.n_cal, rk.rn, rk.r,
-         |         CAST(90 AS DOUBLE) / 100.0 * (c.n_cal - 1) AS pos
-         |  FROM ranked rk JOIN cnt c ON c.k = rk.k),
-         |sel AS (
-         |  SELECT * FROM pick
-         |  WHERE rn = CAST(floor(pos) AS BIGINT) + 1
-         |     OR rn = least(CAST(floor(pos) AS BIGINT) + 2, n_cal)),
-         |qh AS (
-         |  SELECT k, max(n_cal) AS n_cal,
-         |         round(max(CASE WHEN rn = CAST(floor(pos) AS BIGINT) + 1
-         |             THEN r END)
-         |           + (max(pos) - floor(max(pos)))
-         |             * (max(CASE WHEN rn = least(CAST(floor(pos) AS BIGINT) + 2,
-         |                 n_cal) THEN r END)
-         |               - max(CASE WHEN rn = CAST(floor(pos) AS BIGINT) + 1
-         |                 THEN r END)), 6) AS qhat
-         |  FROM sel GROUP BY 1),
-         |ev AS (
-         |  SELECT p.k, qh.n_cal, qh.qhat, count(*) AS n_eval,
-         |         CAST(sum(CASE WHEN p.r <= qh.qhat THEN 1 ELSE 0 END)
-         |           AS BIGINT) AS n_in
-         |  FROM paired p JOIN qh ON qh.k = p.k WHERE NOT p.cal
-         |  GROUP BY 1, 2, 3)
-         |SELECT k, n_cal, n_eval, qhat,
-         |       round(CAST(n_in AS DOUBLE) / n_eval, 6) AS coverage,
-         |       CAST(CAST(n_in AS DOUBLE) / n_eval >= 0.85 AS BIGINT)
-         |         AS cov_ok
-         |FROM ev""".stripMargin,
-  )
 }

@@ -159,48 +159,91 @@ object SparkEntry {
       .withColumn("bias", round(Compare.bias(col("avg_click"), col("avg_view")), 6))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ ExtQueries.queries ++ StatQueries.queries ++
-      EvalQueries.queries
+  /** Every driver query by name, built once from the four declaration
+    * lists; a name declared twice is an error here, not a silent
+    * shadowing.
+    */
+  lazy val registry: Map[String, Q] =
+    Q.index(core, ExtQueries.all, StatQueries.all, EvalQueries.all)
 
-  def oracleSql: Map[String, String] =
-    coreOracleSql ++ ExtQueries.oracleSql ++ StatQueries.oracleSql ++
-      EvalQueries.oracleSql
+  lazy val queries: Map[String, Q.Plan] = registry.map { case (n, q) => n -> q.plan }
+  lazy val oracleSql: Map[String, String] = registry.flatMap { case (n, q) => q.oracle.map(n -> _) }
 
-  private def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The oracle of an ExtQueries batch gate, which its stream twin reuses. */
+  private def extOracle(name: String): String =
+    ExtQueries.all.find(_.name == name).flatMap(_.oracle).getOrElse(
+      throw new NoSuchElementException(s"ExtQueries declares no oracle for $name"))
+
+  /** One [[Q]] per query: the reference's entry points, the core
+    * operators and the `q_st*` streaming gates, each beside its DuckDB
+    * oracle.
+    */
+  private[graft] lazy val core: Seq[Q] = Seq(
     // A1: tumbling 10-min mean resample, keyed by series id.
-    "q_a1_resample" -> ((s, dir) =>
+    Q("q_a1_resample", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(bucket10(col("ts")), col("event_type"))
-        .agg(count(col("value")).as("n"), round(avg(col("value")), 6).as("avg_value"))),
+        .agg(count(col("value")).as("n"), round(avg(col("value")), 6).as("avg_value")),
+      oracle = Some(
+        """SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start, event_type,
+          |       count(value) AS n, round(avg(value), 6) AS avg_value
+          |FROM events GROUP BY 1, 2""".stripMargin)),
 
     // R1: densified bucket grid — every 10-min bucket between min and max,
     // empty buckets surfacing as n=0 / null mean.
-    "q_r1_densify" -> ((s, dir) => {
+    Q("q_r1_densify", (s, dir) => {
       val b = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .groupBy(bucket10(col("ts")))
         .agg(count(lit(1)).as("n_obs"), round(avg(col("value")), 6).as("avg_value"))
       Resample.densify(b, "bucket_start", 600)
         .select(col("bucket_start"), coalesce(col("n_obs"), lit(0L)).as("n"), col("avg_value"))
-    }),
+    },
+      oracle = Some(
+        """WITH b AS (
+          |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         count(*) AS n_obs, round(avg(value), 6) AS avg_value
+          |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+          |mm AS (SELECT min(bucket_start) AS mn, max(bucket_start) AS mx FROM b),
+          |g AS (SELECT unnest(generate_series(mn, mx, 600)) AS bucket_start FROM mm)
+          |SELECT g.bucket_start, coalesce(b.n_obs, 0) AS n, b.avg_value
+          |FROM g LEFT JOIN b USING (bucket_start)""".stripMargin)),
 
     // J1 + F8: inner equi-join of two resampled series on time + bias.
-    "q_j1_time_join" -> ((s, dir) => {
+    Q("q_j1_time_join", (s, dir) => {
       val a = eventSeries(s, dir, "click", "avg_click")
       val b = eventSeries(s, dir, "view", "avg_view")
       Compare.joinOnTime(a, b, "bucket_start")
         .withColumn("bias", round(Compare.bias(col("avg_click"), col("avg_view")), 6))
-    }),
+    },
+      oracle = Some(
+        """WITH a AS (
+          |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         round(avg(value), 6) AS avg_click
+          |  FROM events WHERE event_type = 'click' GROUP BY 1),
+          |b AS (
+          |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         round(avg(value), 6) AS avg_view
+          |  FROM events WHERE event_type = 'view' GROUP BY 1)
+          |SELECT a.bucket_start, a.avg_click, b.avg_view,
+          |       round(a.avg_click - b.avg_view, 6) AS bias
+          |FROM a JOIN b USING (bucket_start)""".stripMargin)),
 
     // A2: linear regression via built-in regr_* sufficient-stats aggregates.
-    "q_a2_linreg" -> ((s, dir) =>
+    Q("q_a2_linreg", (s, dir) =>
       LinReg.regrStats(t(s, dir, "lineitem"),
           y = col("l_extendedprice"), x = col("l_quantity"),
           keys = Seq(col("l_returnflag")))
         .select(col("l_returnflag"), round(col("slope"), 6).as("slope"),
           round(col("intercept"), 4).as("intercept"), round(col("r2"), 6).as("r2"),
-          col("n").cast("long").as("n"))),
+          col("n").cast("long").as("n")),
+      oracle = Some(
+        """SELECT l_returnflag,
+          |       round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
+          |       round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept,
+          |       round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
+          |       CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n
+          |FROM lineitem GROUP BY 1""".stripMargin)),
 
     // §2.11 A2 full: the scipy-linregress 5-tuple (slope, intercept, r,
     // p-value, stderr) from the custom typed Aggregator
@@ -210,7 +253,7 @@ object SparkEntry {
     // p = 1 - |t|/sqrt(2+t^2)) that the DuckDB oracle recomputes from
     // regr_sxx/syy/sxy in plain SQL — an independent check of the
     // commons-math t-distribution path, not a restatement of it.
-    "q_a2_linreg_full" -> ((s, dir) => {
+    Q("q_a2_linreg_full", (s, dir) => {
       val sp = s
       import sp.implicits._
       val pts = Seq(
@@ -226,17 +269,54 @@ object SparkEntry {
           round(col("lr.pValue"), 6).as("p_value"),
           round(col("lr.stderr"), 6).as("stderr"),
           col("lr.n").cast("long").as("n"))
-    }),
+    },
+      oracle = Some(
+        """WITH d AS (
+          |  SELECT * FROM (VALUES
+          |    ('a', 1.0, 2.125), ('a', 2.0, 3.875), ('a', 3.0, 6.25), ('a', 4.0, 7.75),
+          |    ('b', 1.0, 1.0),   ('b', 2.0, 2.25), ('b', 3.0, 2.875)
+          |  ) v(grp, x, y)),
+          |s AS (
+          |  SELECT grp,
+          |         regr_count(y, x) AS n,
+          |         regr_slope(y, x) AS slope,
+          |         regr_intercept(y, x) AS intercept,
+          |         regr_sxx(y, x) AS ssxx,
+          |         regr_syy(y, x) AS ssyy,
+          |         regr_sxy(y, x) AS ssxy
+          |  FROM d GROUP BY grp),
+          |t AS (
+          |  SELECT grp, n, slope, intercept,
+          |         ssxy / sqrt(ssxx * ssyy) AS r,
+          |         sqrt(greatest(ssyy - slope * ssxy, 0) / (n - 2) / ssxx) AS stderr
+          |  FROM s)
+          |SELECT grp,
+          |       round(slope, 6) AS slope,
+          |       round(intercept, 6) AS intercept,
+          |       round(r, 6) AS r,
+          |       round(r * r, 6) AS r2,
+          |       round(CASE
+          |         WHEN n = 4 THEN 1 - abs(slope / stderr) / sqrt(2 + (slope / stderr) * (slope / stderr))
+          |         WHEN n = 3 THEN 1 - 2 * atan(abs(slope / stderr)) / pi()
+          |       END, 6) AS p_value,
+          |       round(stderr, 6) AS stderr,
+          |       CAST(n AS BIGINT) AS n
+          |FROM t""".stripMargin)),
 
     // J2: broadcast lookup join (fact × small dim) + grouped rollup.
-    "q_j2_broadcast_lookup" -> ((s, dir) =>
+    Q("q_j2_broadcast_lookup", (s, dir) =>
       t(s, dir, "lineitem")
         .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))),
+        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price")),
+      oracle = Some(
+        """SELECT p_brand, count(*) AS n,
+          |       CAST(sum(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_price
+          |FROM lineitem JOIN part ON l_partkey = p_partkey
+          |GROUP BY 1""".stripMargin)),
 
     // P3+P4: QC flag-sum filter (flags derived, schema-intersected at plan time).
-    "q_p4_qc_filter" -> ((s, dir) => {
+    Q("q_p4_qc_filter", (s, dir) => {
       val flagged = t(s, dir, "lineitem")
         .withColumn("flag_disc", when(col("l_discount") > 0.05, 1).otherwise(0))
         .withColumn("flag_tax", when(col("l_tax") > 0.04, 1).otherwise(0))
@@ -244,20 +324,34 @@ object SparkEntry {
       Qc.clean(flagged, Seq("flag_disc", "flag_tax", "flag_ret", "flag_not_there"))
         .groupBy(col("l_linestatus"))
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
+    },
+      oracle = Some(
+        """SELECT l_linestatus, count(*) AS n,
+          |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
+          |FROM lineitem
+          |WHERE (CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END
+          |     + CASE WHEN l_tax > 0.04 THEN 1 ELSE 0 END
+          |     + CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) = 0
+          |GROUP BY 1""".stripMargin)),
 
     // F9: zero-divisor-guarded ratio.
-    "q_f9_ratio_guard" -> ((s, dir) =>
+    Q("q_f9_ratio_guard", (s, dir) =>
       t(s, dir, "lineitem")
         .withColumn("ratio", Compare.guardedRatio(col("l_extendedprice"), col("l_discount")))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("ratio").isNull, 1).otherwise(0)).cast("long").as("n_null"),
-          round(avg(col("ratio")), 2).as("avg_ratio"))),
+          round(avg(col("ratio")), 2).as("avg_ratio")),
+      oracle = Some(
+        """SELECT l_returnflag, count(*) AS n_rows,
+          |       CAST(sum(CASE WHEN l_discount = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+          |       round(avg(CASE WHEN l_discount = 0 THEN NULL
+          |                      ELSE l_extendedprice / l_discount END), 2) AS avg_ratio
+          |FROM lineitem GROUP BY 1""".stripMargin)),
 
     // F1/F2/F5/F6/F16: interval-start parse, UTC-offset parse, local time,
     // epoch encoding — round-tripped through generated strings.
-    "q_f1_time_parse" -> ((s, dir) => {
+    Q("q_f1_time_parse", (s, dir) => {
       val fmt = "yyyy-MM-dd'T'HH:mm:ss"
       val base = Tables.events(s, dir).select(
         col("event_id"),
@@ -270,55 +364,99 @@ object SparkEntry {
         col("event_id"), off.as("utc_offset"),
         TimeOps.epochSeconds(t0).as("epoch_utc"),
         TimeOps.epochSeconds(TimeOps.localTime(t0, off)).as("epoch_local"))
-    }),
+    },
+      oracle = Some(
+        """WITH base AS (
+          |  SELECT event_id,
+          |         'UTC+' || CAST(user_id % 12 AS INT) AS tz,
+          |         strftime(ts, '%Y-%m-%dT%H:%M:%S') || '/' ||
+          |         strftime(ts + INTERVAL 1 MINUTE, '%Y-%m-%dT%H:%M:%S') AS iso
+          |  FROM events)
+          |SELECT event_id,
+          |       CAST(replace(tz, 'UTC', '') AS INT) AS utc_offset,
+          |       CAST(epoch(strptime(split_part(iso, '/', 1), '%Y-%m-%dT%H:%M:%S')) AS BIGINT) AS epoch_utc,
+          |       CAST(epoch(strptime(split_part(iso, '/', 1), '%Y-%m-%dT%H:%M:%S'))
+          |            + CAST(replace(tz, 'UTC', '') AS INT) * 3600 AS BIGINT) AS epoch_local
+          |FROM base""".stripMargin)),
 
     // F11/F12/F15: station-name canonicalization / sanitization / prettify.
-    "q_f12_clean_names" -> ((s, dir) => {
+    Q("q_f12_clean_names", (s, dir) => {
       val p = t(s, dir, "part")
       p.select(
         col("p_partkey"),
         Stations.cleanStationName(translate(col("p_name"), " ", "_")).as("clean_name"),
         Stations.sanitizeFileName(col("p_name")).as("file_name"),
         Stations.prettify(Stations.sanitizeFileName(col("p_name"))).as("pretty_name"))
-    }),
+    },
+      oracle = Some(
+        """SELECT p_partkey,
+          |       trim(regexp_replace(regexp_replace(
+          |         lower(regexp_replace(replace(p_name, ' ', '_'), '_', ' ', 'g')),
+          |         '[^a-z0-9 ]', '', 'g'), '\s+', ' ', 'g')) AS clean_name,
+          |       regexp_replace(p_name, '[^\w.-]', '_', 'g') AS file_name,
+          |       replace(regexp_replace(p_name, '[^\w.-]', '_', 'g'), '_', ' ') AS pretty_name
+          |FROM part""".stripMargin)),
 
     // U1: union-all of filtered branches + grouped rollup.
-    "q_u1_union" -> ((s, dir) => {
+    Q("q_u1_union", (s, dir) => {
       val o = t(s, dir, "orders")
       val hi = o.filter(col("o_totalprice") >= 150000).withColumn("seg", lit("hi"))
       val lo = o.filter(col("o_totalprice") < 150000).withColumn("seg", lit("lo"))
       hi.unionByName(lo)
         .groupBy(col("seg"))
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-    }),
+    },
+      oracle = Some(
+        """SELECT seg, count(*) AS n,
+          |       CAST(sum(CAST(o_totalprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_price
+          |FROM (
+          |  SELECT 'hi' AS seg, o_totalprice FROM orders WHERE o_totalprice >= 150000
+          |  UNION ALL
+          |  SELECT 'lo' AS seg, o_totalprice FROM orders WHERE o_totalprice < 150000)
+          |GROUP BY 1""".stripMargin)),
 
     // A4/A5: scalar aggregates (count, max, min, distinct count).
-    "q_a4_scalars" -> ((s, dir) =>
+    Q("q_a4_scalars", (s, dir) =>
       Tables.events(s, dir).agg(
         count(lit(1)).as("n"),
         max(col("value")).as("max_value"),
         min(col("value")).as("min_value"),
         TimeOps.epochSeconds(min(col("ts"))).as("min_ts_epoch"),
         TimeOps.epochSeconds(max(col("ts"))).as("max_ts_epoch"),
-        countDistinct(col("event_type")).as("n_types"))),
+        countDistinct(col("event_type")).as("n_types")),
+      oracle = Some(
+        """SELECT count(*) AS n, max(value) AS max_value, min(value) AS min_value,
+          |       CAST(floor(epoch(min(ts))) AS BIGINT) AS min_ts_epoch,
+          |       CAST(floor(epoch(max(ts))) AS BIGINT) AS max_ts_epoch,
+          |       count(DISTINCT event_type) AS n_types
+          |FROM events""".stripMargin)),
 
     // P2: dynamic numeric projection — columns chosen from the schema at
     // plan time, then exact decimal sums.
-    "q_p2_dynamic_numeric" -> ((s, dir) => {
+    Q("q_p2_dynamic_numeric", (s, dir) => {
       val e = Tables.events(s, dir)
       val numeric = Resample.numericColumns(e)
       e.select(numeric.map(col): _*)
         .agg(dsum(col(numeric.head), 4).as(s"sum_${numeric.head}"),
           numeric.tail.map(c => dsum(col(c), 4).as(s"sum_$c")): _*)
-    }),
+    },
+      oracle = Some(
+        """SELECT CAST(sum(CAST(event_id AS DECIMAL(28,4))) AS DOUBLE) AS sum_event_id,
+          |       CAST(sum(CAST(user_id AS DECIMAL(28,4))) AS DOUBLE) AS sum_user_id,
+          |       CAST(sum(CAST(value AS DECIMAL(28,4))) AS DOUBLE) AS sum_value
+          |FROM events""".stripMargin)),
 
     // Engine extension: multi-level aggregation via ROLLUP (grouping
     // sets) — per (returnflag, linestatus), per returnflag, and grand
     // total in one pass, decimal-exact.
-    "q_x2_rollup" -> ((s, dir) =>
+    Q("q_x2_rollup", (s, dir) =>
       t(s, dir, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))),
+        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty")),
+      oracle = Some(
+        """SELECT l_returnflag, l_linestatus, count(*) AS n,
+          |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
+          |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin)),
 
     // Engine extension: full CUBE grouping sets — all four
     // (returnflag × linestatus) marginal combinations (the rollup's
@@ -329,7 +467,7 @@ object SparkEntry {
     // and went 12.4× at 10× on the r6 driver box (spill); the lattice
     // over additive partials (counts sum; exact decimal sums sum) is
     // immune at any scale.
-    "q_x3_cube" -> ((s, dir) => {
+    Q("q_x3_cube", (s, dir) => {
       val cells = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("__n"),
@@ -337,12 +475,16 @@ object SparkEntry {
       cells.cube(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("__n")).as("n"),
           sum(col("__q")).cast("double").as("sum_qty"))
-    }),
+    },
+      oracle = Some(
+        """SELECT l_returnflag, l_linestatus, count(*) AS n,
+          |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
+          |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin)),
 
     // Engine extension (§2.3 note): as-of join — each click event picks
     // up the most recent prior per-second view average of the same user.
     // Composed as union + keyed window (one shuffle, no join node).
-    "q_x1_asof_join" -> ((s, dir) => {
+    Q("q_x1_asof_join", (s, dir) => {
       val e = Tables.events(s, dir)
       val sec = TimeOps.epochSeconds(col("ts")).as("sec")
       val views = e.filter(col("event_type") === "view")
@@ -352,11 +494,21 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), sec)
       AsOfJoin.priorJoin(clicks, views, Seq("user_id"), "sec", Seq("v"))
         .select(col("event_id"), col("user_id"), col("sec"), col("asof.v").as("asof_v"))
-    }),
+    },
+      oracle = Some(
+        """WITH r AS (
+          |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
+          |         round(avg(value), 6) AS v
+          |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+          |l AS (
+          |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
+          |  FROM events WHERE event_type = 'click')
+          |SELECT l.event_id, l.user_id, l.sec, r.v AS asof_v
+          |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.sec >= r.sec""".stripMargin)),
 
     // §2.6 engine extension: deterministic top-k per group via ranking
     // window (decimal-exact revenue so ordering is reproducible).
-    "q_w1_topk" -> ((s, dir) => {
+    Q("q_w1_topk", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val rev = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_partkey"))
@@ -368,28 +520,44 @@ object SparkEntry {
         .filter(col("rank") <= 3)
         .select(col("l_returnflag"), col("l_partkey"), col("rank"),
           col("rev").cast("double").as("revenue"))
-    }),
+    },
+      oracle = Some(
+        """WITH rev AS (
+          |  SELECT l_returnflag, l_partkey,
+          |         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,4))) AS rev
+          |  FROM lineitem GROUP BY 1, 2),
+          |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
+          |        ORDER BY rev DESC, l_partkey) AS rank FROM rev)
+          |SELECT l_returnflag, l_partkey, rank, CAST(rev AS DOUBLE) AS revenue
+          |FROM r WHERE rank <= 3""".stripMargin)),
 
     // §2.4 extension: exact interpolated percentiles per group (quality
     // thresholds for filtering pipelines). Exact `percentile` buffers
     // each group's values — the small-group stats path; at corpus scale
     // use `approx_percentile` (t-digest sketch, mergeable) and accept
     // the approximation.
-    "q_a6_percentile" -> ((s, dir) =>
+    Q("q_a6_percentile", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("event_type"))
         .agg(
           round(expr("percentile(value, 0.5)"), 6).as("p50"),
           round(expr("percentile(value, 0.9)"), 6).as("p90"),
           round(expr("percentile(value, 0.99)"), 6).as("p99"),
-          count(lit(1)).as("n"))),
+          count(lit(1)).as("n")),
+      oracle = Some(
+        """SELECT event_type,
+          |       round(quantile_cont(value, 0.5), 6) AS p50,
+          |       round(quantile_cont(value, 0.9), 6) AS p90,
+          |       round(quantile_cont(value, 0.99), 6) AS p99,
+          |       count(*) AS n
+          |FROM events GROUP BY 1""".stripMargin)),
 
     // Engine extension (builder checklist: range join): clicks joined to
     // ±5-minute windows around the same user's purchases — binned
     // interval join (equi-join on (user, bin) + exact containment), the
     // scale-shaped form of a BETWEEN join Spark would otherwise plan as
     // a nested loop.
-    "q_x4_range_join" -> ((s, dir) => {
+    Q("q_x4_range_join", (s, dir) => {
       val e = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
           TimeOps.epochSeconds(col("ts")).as("sec"), col("event_type"))
@@ -401,7 +569,16 @@ object SparkEntry {
       RangeJoin.pointInInterval(clicks, "sec", windows, "lo", "hi",
           keys = Seq("user_id"), binSeconds = 600L)
         .select(col("click_id"), col("purchase_id"), col("user_id"))
-    }),
+    },
+      oracle = Some(
+        """WITH e AS (
+          |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec, event_type
+          |  FROM events)
+          |SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id
+          |FROM e c JOIN e p
+          |  ON c.user_id = p.user_id
+          | AND c.event_type = 'click' AND p.event_type = 'purchase'
+          | AND c.sec BETWEEN p.sec - 300 AND p.sec + 300""".stripMargin)),
 
     // §2.5 extension: centered rolling statistics over a resampled
     // series — moving mean and lag-delta, GLOBAL order with NO
@@ -409,7 +586,7 @@ object SparkEntry {
     // day-chunk and carries one boundary row per direction between
     // neighbor chunks, so the bounded frames see exactly the rows the
     // global sort would have given them.
-    "q_w3_rolling" -> ((s, dir) => {
+    Q("q_w3_rolling", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val series = Tables.events(s, dir)
         .filter(col("event_type") === "view")
@@ -426,13 +603,25 @@ object SparkEntry {
           round(avg(col("v")).over(win3), 6).as("smooth3"),
           round(col("v") - lag(col("v"), 1).over(byTime), 6).as("delta"),
           count(lit(1)).over(win3).cast("long").as("support")))
-    }),
+    },
+      oracle = Some(
+        """WITH s AS (
+          |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         round(avg(value), 6) AS v
+          |  FROM events WHERE event_type = 'view' GROUP BY 1)
+          |SELECT bucket_start,
+          |  round(avg(v) OVER (ORDER BY bucket_start
+          |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING), 6) AS smooth3,
+          |  round(v - lag(v) OVER (ORDER BY bucket_start), 6) AS delta,
+          |  count(*) OVER (ORDER BY bucket_start
+          |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS support
+          |FROM s""".stripMargin)),
 
     // §2.5 KEYED rolling statistics — the form a real caller uses first:
     // one window partitioning per series key (event_type), so the sort
     // is per-partition and the plan has NO single-partition WindowExec.
     // q_w3_rolling above stays as the tiny bounded global example.
-    "q_w4_rolling_keyed" -> ((s, dir) => {
+    Q("q_w4_rolling_keyed", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val series = Tables.events(s, dir)
         .groupBy(col("event_type"), bucket10(col("ts")))
@@ -445,34 +634,62 @@ object SparkEntry {
         round(avg(col("v")).over(win3), 6).as("smooth3"),
         round(col("v") - lag(col("v"), 1).over(byKey), 6).as("delta"),
         count(lit(1)).over(win3).cast("long").as("support"))
-    }),
+    },
+      oracle = Some(
+        """WITH s AS (
+          |  SELECT event_type, CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         round(avg(value), 6) AS v
+          |  FROM events GROUP BY 1, 2)
+          |SELECT event_type, bucket_start,
+          |  round(avg(v) OVER (PARTITION BY event_type ORDER BY bucket_start
+          |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING), 6) AS smooth3,
+          |  round(v - lag(v) OVER (PARTITION BY event_type ORDER BY bucket_start), 6) AS delta,
+          |  count(*) OVER (PARTITION BY event_type ORDER BY bucket_start
+          |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS support
+          |FROM s""".stripMargin)),
 
     // §2.7: EXCEPT / anti-join — distinct users that clicked but never
     // purchased, both as the set operator and its anti-join plan.
-    "q_u2_except" -> ((s, dir) => {
+    Q("q_u2_except", (s, dir) => {
       val e = Tables.events(s, dir)
       val clickers = e.filter(col("event_type") === "click").select("user_id")
       val buyers = e.filter(col("event_type") === "purchase").select("user_id")
       clickers.except(buyers)
-    }),
+    },
+      oracle = Some(
+        """SELECT user_id FROM events WHERE event_type = 'click'
+          |EXCEPT
+          |SELECT user_id FROM events WHERE event_type = 'purchase'""".stripMargin)),
 
     // §2.7: INTERSECT — users present in both behaviors.
-    "q_u3_intersect" -> ((s, dir) => {
+    Q("q_u3_intersect", (s, dir) => {
       val e = Tables.events(s, dir)
       e.filter(col("event_type") === "click").select("user_id")
         .intersect(e.filter(col("event_type") === "purchase").select("user_id"))
-    }),
+    },
+      oracle = Some(
+        """SELECT user_id FROM events WHERE event_type = 'click'
+          |INTERSECT
+          |SELECT user_id FROM events WHERE event_type = 'purchase'""".stripMargin)),
 
     // §2.9 extension: long → wide pivot with a pinned column set (the
     // scalable form: explicit values make the pivot one partial-agg
     // shuffle; value discovery would add a distinct pass).
-    "q_r6_pivot" -> ((s, dir) =>
+    Q("q_r6_pivot", (s, dir) =>
       Tables.events(s, dir)
         .withColumn("day", (TimeOps.epochSeconds(col("ts")) / 86400)
           .cast("long"))
         .groupBy(col("day"))
         .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(round(sum(col("value")), 4))),
+        .agg(round(sum(col("value")), 4)),
+      oracle = Some(
+        """SELECT CAST(floor(epoch(ts)/86400) AS BIGINT) AS day,
+          |  round(sum(CASE WHEN event_type = 'click' THEN value END), 4) AS click,
+          |  round(sum(CASE WHEN event_type = 'view' THEN value END), 4) AS view,
+          |  round(sum(CASE WHEN event_type = 'purchase' THEN value END), 4) AS purchase,
+          |  round(sum(CASE WHEN event_type = 'signup' THEN value END), 4) AS signup,
+          |  round(sum(CASE WHEN event_type = 'error' THEN value END), 4) AS error
+          |FROM events GROUP BY 1""".stripMargin)),
 
     // §2.9 extension: linear interpolation over the densified grid —
     // pandas interpolate(method='linear') on the reference's dense cube
@@ -480,7 +697,7 @@ object SparkEntry {
     // chunked execution: interpolateLinearChunked keeps every
     // data-sized window keyed by day-chunk and resolves cross-chunk
     // gaps via a one-row-per-chunk summary (bit-identical arithmetic).
-    "q_r5_interpolate" -> ((s, dir) => {
+    Q("q_r5_interpolate", (s, dir) => {
       val b = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .groupBy(bucket10(col("ts")))
@@ -489,13 +706,37 @@ object SparkEntry {
       Resample.interpolateLinearChunked(dense, "bucket_start", "avg_value",
           chunkSeconds = 86400L)
         .select(col("bucket_start"), round(col("avg_value"), 6).as("v"))
-    }),
+    },
+      oracle = Some(
+        """WITH b AS (
+          |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         round(avg(value), 6) AS avg_value
+          |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+          |mm AS (SELECT min(bucket_start) AS mn, max(bucket_start) AS mx FROM b),
+          |g AS (SELECT unnest(generate_series(mn, mx, 600)) AS bucket_start FROM mm),
+          |d AS (SELECT g.bucket_start, b.avg_value
+          |      FROM g LEFT JOIN b USING (bucket_start)),
+          |w AS (
+          |  SELECT bucket_start, avg_value,
+          |    last_value(avg_value IGNORE NULLS) OVER
+          |      (ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
+          |    last_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS) OVER
+          |      (ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
+          |    first_value(avg_value IGNORE NULLS) OVER
+          |      (ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
+          |    first_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS) OVER
+          |      (ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
+          |  FROM d)
+          |SELECT bucket_start,
+          |       round(CASE WHEN avg_value IS NOT NULL THEN avg_value
+          |             ELSE pv + (nv - pv) * (bucket_start - pt) / (nt - pt) END, 6) AS v
+          |FROM w""".stripMargin)),
 
     // §2.9 KEYED interpolation — densify + linear-fill per series key
     // (event_type), one keyed window partitioning end-to-end; the
     // operators' `keys` parameter is the scale path (q_r5_interpolate
     // stays as the single-series global example).
-    "q_r5b_interpolate_keyed" -> ((s, dir) => {
+    Q("q_r5b_interpolate_keyed", (s, dir) => {
       val b = Tables.events(s, dir)
         .filter(col("event_type").isin("purchase", "signup", "error"))
         .groupBy(col("event_type"), bucket10(col("ts")))
@@ -509,27 +750,61 @@ object SparkEntry {
           keys = Seq("event_type"))
         .select(col("event_type"), col("bucket_start"),
           (floor(col("avg_value") * 1e6 + 0.5) / 1e6).as("v"))
-    }),
+    },
+      oracle = Some(
+        """WITH b AS (
+          |  SELECT event_type, CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         round(avg(value), 6) AS avg_value
+          |  FROM events WHERE event_type IN ('purchase', 'signup', 'error')
+          |  GROUP BY 1, 2),
+          |mm AS (SELECT min(bucket_start) AS mn, max(bucket_start) AS mx FROM b),
+          |k AS (SELECT DISTINCT event_type FROM b),
+          |g AS (SELECT k.event_type, unnest(generate_series(mn, mx, 600)) AS bucket_start
+          |      FROM mm, k),
+          |d AS (SELECT g.event_type, g.bucket_start, b.avg_value
+          |      FROM g LEFT JOIN b USING (event_type, bucket_start)),
+          |w AS (
+          |  SELECT event_type, bucket_start, avg_value,
+          |    last_value(avg_value IGNORE NULLS) OVER (PARTITION BY event_type
+          |      ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
+          |    last_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS)
+          |      OVER (PARTITION BY event_type
+          |      ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
+          |    first_value(avg_value IGNORE NULLS) OVER (PARTITION BY event_type
+          |      ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
+          |    first_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS)
+          |      OVER (PARTITION BY event_type
+          |      ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
+          |  FROM d)
+          |SELECT event_type, bucket_start,
+          |       floor((CASE WHEN avg_value IS NOT NULL THEN avg_value
+          |              ELSE pv + (nv - pv) * (bucket_start - pt) / (nt - pt) END)
+          |             * 1000000 + 0.5) / 1000000 AS v
+          |FROM w""".stripMargin)),
 
     // §2.8 extension: semi-structured extraction — events.props is a
     // JSON string; schema-on-read with from_json, typed field out.
     // Scale note: from_json is a per-row codegen'd projection; the
     // schema literal keeps Catalyst pruning the parse to one field.
-    "q_f17_json_extract" -> ((s, dir) =>
+    Q("q_f17_json_extract", (s, dir) =>
       Tables.events(s, dir)
         .select(
           col("event_id"),
           from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("k",
               org.apache.spark.sql.types.IntegerType))))
-            .getField("k").as("k"))),
+            .getField("k").as("k")),
+      oracle = Some(
+        """SELECT event_id,
+          |       CAST(json_extract_string(props, '$.k') AS INT) AS k
+          |FROM events""".stripMargin)),
 
     // §2.5 extension: gap-based sessionization — the canonical events
     // windowing pattern (new session when the user pauses > 30 min).
     // Two windows over ONE (user_id, ts) partitioning: lag to mark
     // session starts, running sum to number them; Catalyst reuses the
     // sort/shuffle across both, then one keyed aggregate.
-    "q_w2_sessionize" -> ((s, dir) => {
+    Q("q_w2_sessionize", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val byUser = Window.partitionBy("user_id").orderBy("sec")
       // distinct (user, second): duplicate seconds would make lag/frame
@@ -548,11 +823,31 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_sessions"),
           max(col("n_events")).as("max_events"),
           max(col("duration_s")).as("max_duration_s"))
-    }),
+    },
+      oracle = Some(
+        """WITH e AS (
+          |  SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events),
+          |marked AS (
+          |  SELECT user_id, sec,
+          |         CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800
+          |              THEN 1 ELSE 0 END AS new_session
+          |  FROM e),
+          |numbered AS (
+          |  SELECT user_id, sec,
+          |         sum(new_session) OVER (PARTITION BY user_id ORDER BY sec
+          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+          |  FROM marked),
+          |sessions AS (
+          |  SELECT user_id, session_id, count(*) AS n_events,
+          |         max(sec) - min(sec) AS duration_s
+          |  FROM numbered GROUP BY 1, 2)
+          |SELECT user_id, count(*) AS n_sessions, max(n_events) AS max_events,
+          |       max(duration_s) AS max_duration_s
+          |FROM sessions GROUP BY 1""".stripMargin)),
 
     // P5/P6: NA-drop in both modes over derived-nullable columns — the
     // reference's dropna(how='any'/'all') semantics as one scalar row.
-    "q_p5_na_drop" -> ((s, dir) => {
+    Q("q_p5_na_drop", (s, dir) => {
       val e = Tables.events(s, dir).select(
         col("event_id"),
         when(col("event_id") % 7 =!= 0, col("value")).as("a"),
@@ -563,13 +858,25 @@ object SparkEntry {
       val sp = s
       import sp.implicits._
       Seq((anyCnt, allCnt, total)).toDF("kept_any", "kept_all", "total")
-    }),
+    },
+      oracle = Some(
+        """SELECT
+          |  count(*) FILTER (
+          |    WHERE (CASE WHEN event_id % 7 <> 0 THEN value END) IS NOT NULL
+          |      AND (CASE WHEN event_id % 11 <> 0 THEN value END) IS NOT NULL)
+          |    AS kept_any,
+          |  count(*) FILTER (
+          |    WHERE (CASE WHEN event_id % 7 <> 0 THEN value END) IS NOT NULL
+          |       OR (CASE WHEN event_id % 11 <> 0 THEN value END) IS NOT NULL)
+          |    AS kept_all,
+          |  count(*) AS total
+          |FROM events""".stripMargin)),
 
     // S7 end-to-end: the CSV sink under test — write through writeCsv
     // (ordered, single header file), read the artifact back. The write
     // during query construction is deliberate: the sink IS the operator,
     // and the DuckDB oracle reads the same files this query produced.
-    "q_s7_csv_sink" -> ((s, dir) => {
+    Q("q_s7_csv_sink", (s, dir) => {
       val out = graft.io.VerifyFixtures.csvSinkDir
       val summary = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag").as("flag"))
@@ -579,15 +886,20 @@ object SparkEntry {
       s.read.option("header", "true").schema("flag STRING, qty DECIMAL(28,2), n LONG")
         .csv(out)
         .select(col("flag"), col("qty").cast("double").as("qty"), col("n"))
-    }),
-
+    },
+      oracle = Some({
+        val glob = s"${graft.io.VerifyFixtures.csvSinkDir}/*.csv"
+        s"""SELECT flag, round(CAST(qty AS DOUBLE), 2) AS qty, CAST(n AS BIGINT) AS n
+           |FROM read_csv('$glob', header=true, all_varchar=true)""".stripMargin
+      }),
+      fixture = true),
 
     // S2+A1 end-to-end through the REAL csv_expert parse path: commented
     // preamble (300 '#' lines — sniffHeader streams the whole preamble),
     // `;`-separated, corrupt lines, a 15-min outage; sniff header → comment
     // scan → lenient interval parse → 10-min resample. The DuckDB oracle
     // re-reads the same file with skip/all_varchar + TRY_CAST.
-    "q_s2_cams_scan" -> ((s, dir) => {
+    Q("q_s2_cams_scan", (s, dir) => {
       val path = graft.io.VerifyFixtures.camsExpertFixture()
       pipelines.SolarPipelines.resampleRaw(s, path, minutes = 10)
         .select(
@@ -596,13 +908,31 @@ object SparkEntry {
           round(col("DHI"), 6).as("dhi"),
           round(col("BNI"), 6).as("bni"),
           round(col("Cloud coverage"), 6).as("cloud_cover"))
-    }),
+    },
+      oracle = Some({
+        import graft.io.VerifyFixtures.{camsPath, camsPreambleLines}
+        s"""WITH raw AS (
+           |  SELECT * FROM read_csv('$camsPath', delim=';', header=false,
+           |    skip=$camsPreambleLines, all_varchar=true,
+           |    names=['op', 'ghi', 'dhi', 'bni', 'cc'])),
+           |parsed AS (
+           |  SELECT TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) AS t,
+           |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
+           |         TRY_CAST(bni AS DOUBLE) AS bni, TRY_CAST(cc AS DOUBLE) AS cc
+           |  FROM raw
+           |  WHERE TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) IS NOT NULL)
+           |SELECT CAST(floor(epoch(t)/600)*600 AS BIGINT) AS bucket_start,
+           |       round(avg(ghi), 6) AS ghi, round(avg(dhi), 6) AS dhi,
+           |       round(avg(bni), 6) AS bni, round(avg(cc), 6) AS cloud_cover
+           |FROM parsed GROUP BY 1""".stripMargin
+      }),
+      fixture = true),
 
     // Same pipeline with the source reached by short name
     // (spark.read.format("cams"), graft.io.CamsDataSource): the same CSV
     // file scan as q_s2_cams_scan, with the schema inferred from the
     // commented header, against the SAME DuckDB oracle.
-    "q_s2b_cams_dsv2" -> ((s, dir) => {
+    Q("q_s2b_cams_dsv2", (s, dir) => {
       val path = graft.io.VerifyFixtures.camsExpertFixture()
       val raw = s.read.format("cams").load(path)
       pipelines.SolarPipelines.resampleRawDf(raw, minutes = 10)
@@ -612,12 +942,31 @@ object SparkEntry {
           round(col("DHI"), 6).as("dhi"),
           round(col("BNI"), 6).as("bni"),
           round(col("Cloud coverage"), 6).as("cloud_cover"))
-    }),
+    },
+      // identical oracle: the V2 source must agree with the csv path
+      oracle = Some({
+        import graft.io.VerifyFixtures.{camsPath, camsPreambleLines}
+        s"""WITH raw AS (
+           |  SELECT * FROM read_csv('$camsPath', delim=';', header=false,
+           |    skip=$camsPreambleLines, all_varchar=true,
+           |    names=['op', 'ghi', 'dhi', 'bni', 'cc'])),
+           |parsed AS (
+           |  SELECT TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) AS t,
+           |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
+           |         TRY_CAST(bni AS DOUBLE) AS bni, TRY_CAST(cc AS DOUBLE) AS cc
+           |  FROM raw
+           |  WHERE TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) IS NOT NULL)
+           |SELECT CAST(floor(epoch(t)/600)*600 AS BIGINT) AS bucket_start,
+           |       round(avg(ghi), 6) AS ghi, round(avg(dhi), 6) AS dhi,
+           |       round(avg(bni), 6) AS bni, round(avg(cc), 6) AS cloud_cover
+           |FROM parsed GROUP BY 1""".stripMargin
+      }),
+      fixture = true),
 
     // S5/F13/J2/P7/F5 end-to-end through the REAL compile path: glob scan
     // with filename provenance, canonical-key broadcast metadata join,
     // station exclusion, lenient time parse, local-time derivation.
-    "q_s5_compile_cube" -> ((s, dir) => {
+    Q("q_s5_compile_cube", (s, dir) => {
       val (glob, locCsv) = graft.io.VerifyFixtures.compileFixture()
       val locations = s.read.option("header", "true")
         .schema(graft.model.Schemas.station).csv(locCsv)
@@ -629,7 +978,39 @@ object SparkEntry {
           round(col("DHI"), 6).as("dhi"),
           round(col("DNI"), 6).as("dni"),
           col("latitude"), col("longitude"), col("elevation"))
-    }),
+    },
+      oracle = Some({
+        import graft.io.VerifyFixtures.{locationPath, processedGlob}
+        val clean = (c: String) =>
+          s"trim(regexp_replace(regexp_replace(lower(regexp_replace($c, '_', ' ', 'g')), " +
+            s"'[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g'))"
+        s"""WITH loc AS (
+           |  SELECT station, latitude, longitude, elevation,
+           |         CAST(replace(timezone, 'UTC', '') AS INT) AS utc_offset,
+           |         ${clean("station")} AS station_key
+           |  FROM read_csv('$locationPath', header=true)),
+           |raw AS (
+           |  SELECT *, regexp_extract(filename,
+           |           'processed_10min_(.*?)_observed_cloud\\.csv', 1) AS station_raw
+           |  FROM read_csv('$processedGlob', delim=',', header=false, skip=1,
+           |    all_varchar=true, filename=true,
+           |    names=['tcol', 'ghi', 'dhi', 'bni', 'cc'])),
+           |parsed AS (
+           |  SELECT TRY_CAST(tcol AS TIMESTAMP) AS t,
+           |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
+           |         TRY_CAST(bni AS DOUBLE) AS dni,
+           |         ${clean("station_raw")} AS station_key
+           |  FROM raw
+           |  WHERE TRY_CAST(tcol AS TIMESTAMP) IS NOT NULL)
+           |SELECT p.station_key AS station, l.station AS station_original,
+           |       CAST(floor(epoch(p.t)) AS BIGINT) AS epoch_utc,
+           |       CAST(floor(epoch(p.t)) AS BIGINT) + l.utc_offset * 3600 AS epoch_local,
+           |       round(p.ghi, 6) AS ghi, round(p.dhi, 6) AS dhi, round(p.dni, 6) AS dni,
+           |       l.latitude, l.longitude, l.elevation
+           |FROM parsed p JOIN loc l USING (station_key)
+           |WHERE p.station_key <> 'sleman'""".stripMargin
+      }),
+      fixture = true),
 
     // S8 end-to-end: the compiled cube through the BINARY NetCDF classic
     // writer and back through the format-spec reader — the .nc artifact
@@ -641,7 +1022,7 @@ object SparkEntry {
     // (get-cams-solrad-ts.py:119-121). The oracle recomputes validity
     // and the missing set from the CSVs' own headers in DuckDB, so the
     // two engines agree on WHY, not just whether.
-    "q_s1_validate" -> ((s, dir) => {
+    Q("q_s1_validate", (s, dir) => {
       val (_, locCsv) = graft.io.VerifyFixtures.compileFixture()
       val badCsv = graft.io.VerifyFixtures.malformedLocationFixture()
       def check(name: String, path: String) = {
@@ -655,14 +1036,40 @@ object SparkEntry {
           lit(missing).as("missing_cols"))
       }
       check("good", locCsv).union(check("bad", badCsv))
-    }),
+    },
+      // Same raw-CSV recomputation as q_s5_compile_cube, projected to the
+      // columns that survive the NetCDF container (no station_original /
+      // local time in the .nc).
+      oracle = Some({
+        import graft.io.VerifyFixtures.{locationPath, malformedLocationPath}
+        s"""WITH req(c) AS (SELECT unnest(['elevation', 'latitude', 'longitude', 'station'])),
+           |cols AS (
+           |  SELECT 'good' AS fixture, column_name AS c
+           |  FROM (DESCRIBE SELECT * FROM read_csv('$locationPath', header=true))
+           |  UNION ALL
+           |  SELECT 'bad', column_name
+           |  FROM (DESCRIBE SELECT * FROM read_csv('$malformedLocationPath', header=true))),
+           |fx(fixture) AS (SELECT unnest(['good', 'bad'])),
+           |miss AS (
+           |  SELECT f.fixture, r.c FROM fx f, req r
+           |  WHERE NOT EXISTS (
+           |    SELECT 1 FROM cols WHERE cols.fixture = f.fixture AND cols.c = r.c))
+           |SELECT f.fixture,
+           |       CAST(NOT EXISTS (SELECT 1 FROM miss
+           |                        WHERE miss.fixture = f.fixture)
+           |            AS BIGINT) AS valid,
+           |       COALESCE((SELECT string_agg(c, ',' ORDER BY c)
+           |                 FROM miss WHERE miss.fixture = f.fixture), '') AS missing_cols
+           |FROM fx f""".stripMargin
+      }),
+      fixture = true),
 
     // R4 CF-attrs under the gate: the cube sink's JSON attribute sidecar
     // (compile-solrad.py:156-173's metadata re-expressed) written by the
     // REAL writeCube path and read back; the oracle pins every expected
     // attribute as a literal, so attr drift (not just malformed JSON)
     // fails the gate.
-    "q_r4_cf_attrs" -> ((s, dir) => {
+    Q("q_r4_cf_attrs", (s, dir) => {
       val (glob, locCsv) = graft.io.VerifyFixtures.compileFixture()
       val locations = s.read.option("header", "true")
         .schema(graft.model.Schemas.station).csv(locCsv)
@@ -675,9 +1082,16 @@ object SparkEntry {
       val json = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$out/_attributes.json")), "UTF-8")
       s.read.json(s.createDataset(Seq(json))(org.apache.spark.sql.Encoders.STRING))
-    }),
+    },
+      oracle = Some(
+        """SELECT 'CF-1.8' AS "Conventions", 'Wh/m^2' AS "DHI_units",
+          |       'Wh/m^2' AS "DNI_units", 'Wh/m^2' AS "GHI_units",
+          |       'proleptic_gregorian' AS calendar, 'timeSeries' AS "featureType",
+          |       'timeseries_id' AS station_cf_role,
+          |       'seconds since 1970-01-01' AS time_units""".stripMargin),
+      fixture = true),
 
-    "q_s8_netcdf_roundtrip" -> ((s, dir) => {
+    Q("q_s8_netcdf_roundtrip", (s, dir) => {
       val (glob, locCsv) = graft.io.VerifyFixtures.compileFixture()
       val locations = s.read.option("header", "true")
         .schema(graft.model.Schemas.station).csv(locCsv)
@@ -689,13 +1103,43 @@ object SparkEntry {
           round(col("GHI"), 6).as("ghi"), round(col("DHI"), 6).as("dhi"),
           round(col("DNI"), 6).as("dni"),
           col("latitude"), col("longitude"), col("elevation"))
-    }),
+    },
+      oracle = Some({
+        import graft.io.VerifyFixtures.{locationPath, processedGlob}
+        val clean = (c: String) =>
+          s"trim(regexp_replace(regexp_replace(lower(regexp_replace($c, '_', ' ', 'g')), " +
+            s"'[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g'))"
+        s"""WITH loc AS (
+           |  SELECT station, latitude, longitude, elevation,
+           |         ${clean("station")} AS station_key
+           |  FROM read_csv('$locationPath', header=true)),
+           |raw AS (
+           |  SELECT *, regexp_extract(filename,
+           |           'processed_10min_(.*?)_observed_cloud\\.csv', 1) AS station_raw
+           |  FROM read_csv('$processedGlob', delim=',', header=false, skip=1,
+           |    all_varchar=true, filename=true,
+           |    names=['tcol', 'ghi', 'dhi', 'bni', 'cc'])),
+           |parsed AS (
+           |  SELECT TRY_CAST(tcol AS TIMESTAMP) AS t,
+           |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
+           |         TRY_CAST(bni AS DOUBLE) AS dni,
+           |         ${clean("station_raw")} AS station_key
+           |  FROM raw
+           |  WHERE TRY_CAST(tcol AS TIMESTAMP) IS NOT NULL)
+           |SELECT p.station_key AS station,
+           |       CAST(floor(epoch(p.t)) AS BIGINT) AS epoch_utc,
+           |       round(p.ghi, 6) AS ghi, round(p.dhi, 6) AS dhi, round(p.dni, 6) AS dni,
+           |       l.latitude, l.longitude, l.elevation
+           |FROM parsed p JOIN loc l USING (station_key)
+           |WHERE p.station_key <> 'sleman'""".stripMargin
+      }),
+      fixture = true),
 
     // §3.2 end-to-end: the full compare pipeline (QC clean → unit convert
     // → rename → time join → bias → per-component linregress), driven
     // through graft.pipelines.SolarPipelines on series derived from the
     // events table (ground = click, model = view).
-    "q_pipe_compare_stats" -> ((s, dir) => {
+    Q("q_pipe_compare_stats", (s, dir) => {
       val ground = eventSeries(s, dir, "click", "a").select(
         col("bucket_start").as("Datetime (UTC)"),
         col("a").as("GHI"),
@@ -711,14 +1155,15 @@ object SparkEntry {
         .select(col("component"), round(col("slope"), 6).as("slope"),
           round(col("intercept"), 4).as("intercept"), round(col("r2"), 6).as("r2"),
           col("n").cast("long").as("n"), round(col("mean_bias"), 4).as("mean_bias"))
-    }),
+    },
+      oracle = Some(comparePipelineOracle)),
 
     // §3.2 AT SCALE: the reference's 29 sequential per-location pipelines
     // (`solrad-compare.py:195-206`) as ONE plan — both inputs carry a
     // station key, compareAllStations runs one co-keyed join + one
     // grouped multi-regression. This is the engine's core scale claim,
     // now driver-gated: DuckDB recomputes per (station, component).
-    "q_pipe_compare_all" -> ((s, dir) => {
+    Q("q_pipe_compare_all", (s, dir) => {
       def series(tpe: String, alias: String) =
         Tables.events(s, dir)
           .filter(col("event_type") === tpe)
@@ -737,27 +1182,35 @@ object SparkEntry {
         .select(col("station"), col("component"), round(col("slope"), 6).as("slope"),
           round(col("intercept"), 4).as("intercept"), round(col("r2"), 6).as("r2"),
           col("n").cast("long").as("n"), round(col("mean_bias"), 4).as("mean_bias"))
-    }),
+    },
+      oracle = Some(compareAllOracle)),
 
     // Scale utility under the gate: two-phase salted aggregation must be
     // EXACTLY equal to the plain groupBy (the oracle is the plain form).
     // Values go through decimal so both phases sum exactly; the avg is
     // derived from the exact sums with one double division on each side.
-    "q_x5_salted_agg" -> ((s, dir) => {
+    Q("q_x5_salted_agg", (s, dir) => {
       val e = Tables.events(s, dir).withColumn("v", col("value").cast("decimal(28,6)"))
       Salting.saltedStats(e, Seq("event_type"), "v", col("event_id"), saltBuckets = 8)
         .select(col("event_type"),
           round(col("sum_v").cast("double"), 2).as("sum_value"),
           col("n_v").as("n"),
           round(col("sum_v").cast("double") / col("n_v"), 6).as("avg_value"))
-    }),
+    },
+      oracle = Some(
+        """SELECT event_type,
+          |       round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE), 2) AS sum_value,
+          |       count(value) AS n,
+          |       round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) / count(value), 6)
+          |         AS avg_value
+          |FROM events GROUP BY 1""".stripMargin)),
 
     // Scale utility under the gate: bucketed co-located join — both
     // sides written hash-bucketed on the join key, re-read from the
     // catalog, joined with ZERO Exchange (BucketingSpec asserts the
     // plan shape; this query gates the numbers). The bucketed write is
     // part of the query on purpose: it IS the operator under test.
-    "q_x6_bucketed_join" -> ((s, dir) => {
+    Q("q_x6_bucketed_join", (s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"))
       val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
       graft.io.Bucketing.writeBucketed(o, "g_orders_bkt", Seq("o_orderkey"), 8)
@@ -767,13 +1220,18 @@ object SparkEntry {
       s.table("g_lineitem_bkt").join(s.table("g_orders_bkt"), "o_orderkey")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
+    },
+      oracle = Some(
+        """SELECT o_orderpriority, count(*) AS n,
+          |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
+          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+          |GROUP BY 1""".stripMargin)),
 
     // Scale utility under the gate: salted JOIN (the AQE-unreachable
     // case — both sides shuffle, hot probe keys). (key, salt) shuffle
     // with the dim side replicated per salt must be EXACTLY the plain
     // join; the oracle is the plain form.
-    "q_x7_salted_join" -> ((s, dir) => {
+    Q("q_x7_salted_join", (s, dir) => {
       val l = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_linenumber"))
       val o = t(s, dir, "orders")
@@ -782,7 +1240,14 @@ object SparkEntry {
           saltFrom = col("l_linenumber"), saltBuckets = 8)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
+    },
+      // Identical to the q_x6 oracle on purpose: bucketed and salted are
+      // two physical routes to the same logical join.
+      oracle = Some(
+        """SELECT o_orderpriority, count(*) AS n,
+          |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
+          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+          |GROUP BY 1""".stripMargin)),
 
     // Macro multi-way join, the TPC-H Q3 shape (shipping priority):
     // selective dim filter broadcast onto the fact-fact join, one keyed
@@ -790,7 +1255,7 @@ object SparkEntry {
     // per-row 2-dp decimal rounding so aggregation order can't move the
     // gate, deterministic top-10 via TakeOrderedAndProject (no global
     // sort shuffle).
-    "q_x8_tpch_q3" -> ((s, dir) => {
+    Q("q_x8_tpch_q3", (s, dir) => {
       val cutoff = lit("1998-06-01").cast("timestamp")
       val c = t(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
@@ -815,13 +1280,32 @@ object SparkEntry {
           col("drev").cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
-    }),
+    },
+      // TPC-H Q3/Q5 shapes: revenue terms round at 4 dp per ROW before the
+      // decimal sum in both engines (2 dp would sit on the price×discount
+      // product's own tie boundary), so float aggregation order is out of
+      // the contract entirely.
+      oracle = Some(
+        """SELECT l_orderkey,
+          |       CAST(floor(epoch(o_orderdate)) AS BIGINT) AS order_date,
+          |       o_orderpriority AS priority,
+          |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount), 4)
+          |         AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+          |FROM lineitem
+          |JOIN orders ON l_orderkey = o_orderkey
+          |JOIN customer ON o_custkey = c_custkey
+          |WHERE c_mktsegment = 'BUILDING'
+          |  AND o_orderdate < TIMESTAMP '1998-06-01'
+          |  AND l_shipdate > TIMESTAMP '1998-06-01'
+          |GROUP BY 1, 2, 3
+          |ORDER BY revenue DESC, l_orderkey
+          |LIMIT 10""".stripMargin)),
 
     // Macro 6-table join, the TPC-H Q5 shape (local-supplier revenue by
     // nation): region → nation → customer/supplier all broadcast; the
     // only data-bearing shuffle is lineitem ⋈ orders; the same-nation
     // predicate rides the broadcast supplier join.
-    "q_x9_tpch_q5" -> ((s, dir) => {
+    Q("q_x9_tpch_q5", (s, dir) => {
       val asiaN = t(s, dir, "nation")
         .join(broadcast(t(s, dir, "region").filter(col("r_name") === "ASIA")),
           col("n_regionkey") === col("r_regionkey"))
@@ -850,7 +1334,22 @@ object SparkEntry {
         .agg(sum(col("rev")).as("drev"), count(lit(1)).as("n_items"))
         .select(col("n_name"), col("drev").cast("double").as("revenue"),
           col("n_items"))
-    }),
+    },
+      oracle = Some(
+        """SELECT n_name,
+          |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount), 4)
+          |         AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+          |       count(*) AS n_items
+          |FROM lineitem
+          |JOIN orders ON l_orderkey = o_orderkey
+          |JOIN customer ON o_custkey = c_custkey
+          |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
+          |JOIN nation ON c_nationkey = n_nationkey
+          |JOIN region ON n_regionkey = r_regionkey
+          |WHERE r_name = 'ASIA'
+          |  AND o_orderdate >= TIMESTAMP '1997-01-01'
+          |  AND o_orderdate < TIMESTAMP '1998-01-01'
+          |GROUP BY 1""".stripMargin)),
 
     // §2.4 sketch path: approx_percentile (mergeable quantile sketch —
     // the corpus-scale form of q_a6_percentile). The approximation can't
@@ -859,7 +1358,7 @@ object SparkEntry {
     // below each approximate quantile must sit within ±0.02 of the
     // target rank (accuracy 10000 => rank error 1e-4; the slack covers
     // sample granularity). The exact percentiles ride along hash-checked.
-    "q_a6b_approx_percentile" -> ((s, dir) => {
+    Q("q_a6b_approx_percentile", (s, dir) => {
       val e = Tables.events(s, dir)
       val sketch = e.groupBy(col("event_type"))
         .agg(expr("approx_percentile(value, array(0.5, 0.9, 0.99), 10000)").as("ap"))
@@ -875,25 +1374,41 @@ object SparkEntry {
           col("f50").between(0.48, 0.52).cast("long").as("p50_ok"),
           col("f90").between(0.88, 0.92).cast("long").as("p90_ok"),
           col("f99").between(0.97, 1.0).cast("long").as("p99_ok"))
-    }),
+    },
+      oracle = Some(
+        """SELECT event_type,
+          |       round(quantile_cont(value, 0.5), 6) AS p50,
+          |       round(quantile_cont(value, 0.99), 6) AS p99,
+          |       CAST(1 AS BIGINT) AS p50_ok, CAST(1 AS BIGINT) AS p90_ok, CAST(1 AS BIGINT) AS p99_ok
+          |FROM events GROUP BY 1""".stripMargin)),
 
     // S6 under the gate: the distributed CDS download request matrix
     // (stations × sky types with the request parameters as columns,
     // `get-cams-solrad-ts.py:130-156`). The HTTP fetch itself stays a
     // pluggable edge (zero-egress environment, SURVEY §7.3) — the
     // request construction is the engine's part and DuckDB recomputes it.
-    "q_s6_download_matrix" -> ((s, dir) => {
+    Q("q_s6_download_matrix", (s, dir) => {
       val (_, locCsv) = graft.io.VerifyFixtures.compileFixture()
       val locations = s.read.option("header", "true")
         .schema(graft.model.Schemas.station).csv(locCsv)
       pipelines.SolarPipelines.downloadMatrix(locations)
-    }),
+    },
+      oracle = Some({
+        val loc = graft.io.VerifyFixtures.locationPath
+        s"""SELECT station, latitude, longitude, elevation, sky_type,
+           |       '2024-01-01/2024-12-31' AS "date", '1minute' AS time_step,
+           |       'csv_expert' AS "format",
+           |       regexp_replace(station || '_' || sky_type, '[^\\w.-]', '_', 'g') AS file_tag
+           |FROM read_csv('$loc', header=true)
+           |CROSS JOIN (SELECT unnest(['clear', 'observed_cloud']) AS sky_type)""".stripMargin
+      }),
+      fixture = true),
 
     // P8 under the gate: empty-input tolerance — the full densify +
     // interpolate pipeline over a filter that matches nothing must plan
     // and return an empty frame (no crash, no null-sequence explosion);
     // Catalyst's PropagateEmptyRelation collapses most of the plan.
-    "q_p8_empty_input" -> ((s, dir) => {
+    Q("q_p8_empty_input", (s, dir) => {
       val b = Tables.events(s, dir)
         .filter(col("event_type") === "no_such_type")
         .groupBy(bucket10(col("ts")))
@@ -902,7 +1417,10 @@ object SparkEntry {
       Resample.interpolateLinearChunked(dense, "bucket_start", "avg_value",
           chunkSeconds = 86400L)
         .select(col("bucket_start"), col("avg_value"))
-    }),
+    },
+      oracle = Some(
+        """SELECT CAST(NULL AS BIGINT) AS bucket_start, CAST(NULL AS DOUBLE) AS avg_value
+          |WHERE FALSE""".stripMargin)),
 
     // §2.10 driver-gated streaming: the file-source → tumbling-mean
     // stream run to completion with Trigger.AvailableNow over the same
@@ -912,7 +1430,7 @@ object SparkEntry {
     // append+watermark production path is spec-gated in
     // streaming/StreamResampleSpec). The streamed answer must equal the
     // batch groupBy bit-for-bit, which the DuckDB oracle pins.
-    "q_st1_stream_resample" -> streamQ("events")((s, dir) => {
+    Q("q_st1_stream_resample", streamQ("events")((s, dir) => {
       val events = streamTable(s, dir, "events")
       val agg = graft.streaming.StreamResample.tumblingMean(
         events, "ts", 10, Seq("value"), extraKeys = Seq("event_type"))
@@ -922,6 +1440,11 @@ object SparkEntry {
         round(col("value"), 6).as("avg_value"),
         col("n_rows").cast("long").as("n"))
     }),
+      // The streamed tumbling mean must equal the batch aggregation.
+      oracle = Some(
+        """SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start, event_type,
+          |       round(avg(value), 6) AS avg_value, count(*) AS n
+          |FROM events GROUP BY 1, 2""".stripMargin)),
 
     // §2.10 driver-gated APPEND-mode watermark semantics — the
     // production path q_st1's complete-mode gate doesn't exercise: a
@@ -935,7 +1458,7 @@ object SparkEntry {
     // The 500 ms delay fraction keeps the watermark off the
     // second-aligned window-end lattice, so the <=-vs-< eviction
     // boundary can never bite regardless of the fixture's max(ts).
-    "q_st10_stream_late" -> streamQ("events")((s, dir) => {
+    Q("q_st10_stream_late", streamQ("events")((s, dir) => {
       val events = streamTable(s, dir, "events")
       val agg = graft.streaming.StreamResample.tumblingMean(
         events, "ts", 10, Seq("value"), watermark = "7200500 milliseconds",
@@ -946,17 +1469,33 @@ object SparkEntry {
         round(col("value"), 6).as("avg_value"),
         col("n_rows").cast("long").as("n"))
     }),
+      // Append-mode emission = the same resample restricted to windows
+      // whose end precedes the final watermark (max event time, floored
+      // to ms as Spark's event-time stats do, minus the 7200500 ms delay).
+      oracle = Some(
+        """WITH m AS (SELECT epoch_ms(max(ts)) AS mxms FROM events),
+          |w AS (
+          |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
+          |         event_type,
+          |         round(avg(value), 6) AS avg_value, count(*) AS n
+          |  FROM events GROUP BY 1, 2)
+          |SELECT w.bucket_start, w.event_type, w.avg_value, w.n
+          |FROM w, m
+          |WHERE (w.bucket_start + 600) * 1000 <= m.mxms - 7200500""".stripMargin)),
 
     // §2.10 driver-gated streaming dedup: first-seen fingerprints over a
     // document stream (append mode; state = 8-byte fingerprints only).
     // Projecting JUST the fingerprint keeps the emitted set independent
     // of arrival order, so the batch DISTINCT oracle pins it exactly.
-    "q_st2_stream_dedup" -> streamQ("documents")((s, dir) => {
+    Q("q_st2_stream_dedup", streamQ("documents")((s, dir) => {
       val docs = streamTable(s, dir, "documents")
       val fp = docs.select(substring(md5(col("text")), 1, 16).as("fp"))
         .dropDuplicates("fp")
       runToMemory(s, fp, "g_st2", "append")
     }),
+      // First-seen streaming dedup emits exactly the distinct fingerprints.
+      oracle = Some(
+        "SELECT DISTINCT substring(md5(text), 1, 16) AS fp FROM documents")),
 
     // §2.10 driver-gated custom state: the flatMapGroupsWithState
     // ingestion tracker run to completion. Input times are truncated to
@@ -964,7 +1503,7 @@ object SparkEntry {
     // reproducible in epoch-seconds SQL; a single AvailableNow batch
     // (one source file, default maxFilesPerTrigger) makes the per-group
     // fold order the tracker's own within-batch sort.
-    "q_st3_stream_tracker" -> streamQ("events")((s, dir) => {
+    Q("q_st3_stream_tracker", streamQ("events")((s, dir) => {
       val sp = s
       import sp.implicits._
       val events = streamTable(s, dir, "events")
@@ -979,6 +1518,20 @@ object SparkEntry {
         TimeOps.epochSeconds(col("last")).as("last_sec"),
         (col("maxGapMillis") / 1000).cast("long").as("max_gap_s"))
     }),
+      // The tracker's final state per key == the batch count/max/max-gap.
+      oracle = Some(
+        """WITH o AS (
+          |  SELECT CAST(user_id AS VARCHAR) AS station,
+          |         date_trunc('second', ts) AS t
+          |  FROM events),
+          |g AS (
+          |  SELECT station, t,
+          |         epoch(t) - epoch(lag(t) OVER (PARTITION BY station ORDER BY t)) AS gap
+          |  FROM o)
+          |SELECT station, count(*) AS n,
+          |       CAST(floor(epoch(max(t))) AS BIGINT) AS last_sec,
+          |       CAST(coalesce(max(gap), 0) AS BIGINT) AS max_gap_s
+          |FROM g GROUP BY station""".stripMargin)),
 
     // §2.10 driver-gated file-sink persistence: the production
     // streaming path (parquet sink + checkpoint) run to completion and
@@ -986,7 +1539,7 @@ object SparkEntry {
     // Output and checkpoint are scoped per (application, dir) and
     // cleared first, so the query is idempotent across driver runs and
     // runs on different dirs never share a sink.
-    "q_st5_stream_file_sink" -> streamQ("documents")((s, dir) => {
+    Q("q_st5_stream_file_sink", streamQ("documents")((s, dir) => {
       val (out, ckpt) = resetStreamDirs(s, "g_st5", dir)
       val docs = streamTable(s, dir, "documents")
       val fp = docs.select(col("doc_id"),
@@ -997,6 +1550,9 @@ object SparkEntry {
       q.awaitTermination()
       s.read.parquet(out)
     }),
+      // The parquet-sink stream's committed output == the batch projection.
+      oracle = Some(
+        "SELECT doc_id, substring(md5(text), 1, 16) AS fp FROM documents")),
 
     // §2.10 driver-gated stream-STREAM interval join: clicks correlated
     // to same-user purchases within the following 10 minutes, both
@@ -1008,7 +1564,7 @@ object SparkEntry {
     // join the oracle runs. Splitting ingestion into multiple batches
     // (e.g. adding maxFilesPerTrigger) would let the watermark drop
     // out-of-order rows and flake this gate; keep single-batch here.
-    "q_st6_stream_join" -> streamQ("events")((s, dir) => {
+    Q("q_st6_stream_join", streamQ("events")((s, dir) => {
       def ev() = streamTable(s, dir, "events")
       val clicks = ev().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -1022,6 +1578,14 @@ object SparkEntry {
         .select(col("click_id"), col("purchase_id"))
       runToMemory(s, joined, "g_st6", "append")
     }),
+      // The stream-stream interval join's emitted set == the batch
+      // interval join (AvailableNow delivers everything in-watermark).
+      oracle = Some(
+        """SELECT c.event_id AS click_id, p.event_id AS purchase_id
+          |FROM events c JOIN events p
+          |  ON c.user_id = p.user_id
+          | AND c.event_type = 'click' AND p.event_type = 'purchase'
+          | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 600 SECONDS""".stripMargin)),
 
     // §2.10 driver-gated LEFT OUTER stream-stream interval join — the
     // "which clicks never converted" funnel the inner q_st6 can't
@@ -1034,7 +1598,7 @@ object SparkEntry {
     // stream are withheld in state and never emit — also replayed.
     // The 500 ms delay fraction keeps the eviction boundary off any
     // second-aligned timestamp lattice (same defense as q_st10).
-    "q_st11_stream_join_outer" -> streamQ("events")((s, dir) => {
+    Q("q_st11_stream_join_outer", streamQ("events")((s, dir) => {
       def ev() = streamTable(s, dir, "events")
       val clicks = ev().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -1049,6 +1613,32 @@ object SparkEntry {
         .select(col("click_id"), col("purchase_id"))
       runToMemory(s, joined, "g_st11", "append")
     }),
+      // Left-outer interval join: matched pairs = the batch join;
+      // null-padded rows only for clicks whose match window closed below
+      // the final watermark. Spark's global watermark is the MINIMUM over
+      // each input stream's own max event time minus the delay — NOT the
+      // max over all events: a side whose events stop early holds the
+      // global watermark back, and its own tail rows never see their
+      // window close. The oracle must model the min-of-sides form or it
+      // over-evicts exactly when the two sides' maxima diverge by more
+      // than the join window (observed at sf0.001: the last click is
+      // 3.9 h older than the last purchase).
+      oracle = Some(
+        """WITH m AS (SELECT least(
+          |  (SELECT epoch_ms(max(ts)) FROM events WHERE event_type = 'click'),
+          |  (SELECT epoch_ms(max(ts)) FROM events WHERE event_type = 'purchase')) AS mxms),
+          |c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
+          |      FROM events WHERE event_type = 'click'),
+          |p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
+          |      FROM events WHERE event_type = 'purchase'),
+          |j AS (
+          |  SELECT c.click_id, p.purchase_id, c.click_ts
+          |  FROM c LEFT JOIN p ON p.user_id = c.user_id
+          |    AND p.purchase_ts >= c.click_ts
+          |    AND p.purchase_ts <= c.click_ts + INTERVAL 600 SECONDS)
+          |SELECT click_id, purchase_id FROM j, m
+          |WHERE purchase_id IS NOT NULL
+          |   OR epoch_us(click_ts) + 600000000 < (mxms - 1800500) * 1000""".stripMargin)),
 
     // §2.10 driver-gated streaming NEAR-DUP ingest: the continuous form
     // of the incremental MinHash store — per micro-batch, probe the
@@ -1061,7 +1651,7 @@ object SparkEntry {
     // would legitimately pick different cluster canonicals across
     // batches; the multi-batch ORDER semantics are spec-pinned in
     // StreamNearDupSpec instead.)
-    "q_st8_stream_neardup" -> ((s, dir) => {
+    Q("q_st8_stream_neardup", (s, dir) => {
       // store/out/ckpt scoped per (application, dir) so concurrent
       // sessions and the bench's base/scaled passes never clobber each
       // other; cleared up front so reruns stay idempotent
@@ -1104,7 +1694,23 @@ object SparkEntry {
       val grew = s.table(s"${store}_bands")
         .agg((count(lit(1)) > 0).cast("long").as("store_has_bands"))
       eq.crossJoin(grew)
-    }),
+    },
+      // Native session_window == batch gap-sessionization. The boundary
+      // rule, measured not assumed: Spark merges sessions whose intervals
+      // TOUCH (next.start <= current.end, inclusive — MergingSessions
+      // semantics), so an event at EXACTLY prev + gap stays in the SAME
+      // session and the batch spelling is `diff > 1800`, not `>=`. The
+      // `>=` spelling survived four rounds because no exact-1800 s pair
+      // existed below sf0.1 (user 511's pair there is the witness) —
+      // the q_st11 class again: distribution-dependent oracle bugs are
+      // invisible at a single SF; the 3-SF sweep is the defense.
+      // The streaming near-dup ingest's single-batch run must equal the
+      // one-shot batch pipeline; the in-plan comparison collapses to
+      // these pinned booleans (sketch values are not SQL-expressible).
+      oracle = Some(
+        """SELECT CAST(1 AS BIGINT) AS any_rows,
+          |       CAST(1 AS BIGINT) AS stream_matches_batch,
+          |       CAST(1 AS BIGINT) AS store_has_bands""".stripMargin)),
 
     // §2.10 driver-gated BUILT-IN session windows: Spark's native
     // session_window() grouping (dynamic-gap session aggregation in
@@ -1112,7 +1718,7 @@ object SparkEntry {
     // streaming/StreamSessionWindowSpec) run to completion — the
     // emitted (user, session start, count) set must equal the batch
     // gap-sessionization the oracle computes with lag + running sum.
-    "q_st7_session_window" -> streamQ("events")((s, dir) => {
+    Q("q_st7_session_window", streamQ("events")((s, dir) => {
       val events = streamTable(s, dir, "events")
       // whole-second truncation (as q_st3): sub-second parts would make
       // the oracle's epoch-seconds gap arithmetic diverge at boundaries
@@ -1126,13 +1732,31 @@ object SparkEntry {
         TimeOps.epochSeconds(col("session_window.start")).as("session_start"),
         col("n_events"))
     }),
+      oracle = Some(
+        """WITH e AS (
+          |  SELECT user_id,
+          |         CAST(floor(epoch(date_trunc('second', ts))) AS BIGINT) AS sec
+          |  FROM events),
+          |m AS (
+          |  SELECT user_id, sec,
+          |         CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec)
+          |                   > 1800
+          |              THEN 1 ELSE 0 END AS brk
+          |  FROM e),
+          |s AS (
+          |  SELECT user_id, sec,
+          |         sum(brk) OVER (PARTITION BY user_id ORDER BY sec
+          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+          |  FROM m)
+          |SELECT user_id, min(sec) AS session_start, count(*) AS n_events
+          |FROM s GROUP BY user_id, sid""".stripMargin)),
 
     // §2.10 driver-gated streaming gap detection: the live form of
     // q_ext_gaps — per-key (last-instant) state, a row emitted per
     // outage. Single AvailableNow batch + within-batch (ts, id) sort
     // makes the emitted set bit-identical to the batch operator, so
     // this query SHARES the q_ext_gaps oracle.
-    "q_st9_stream_gaps" -> streamQ("events")((s, dir) => {
+    Q("q_st9_stream_gaps", streamQ("events")((s, dir) => {
       val sp = s
       import sp.implicits._
       val events = streamTable(s, dir, "events")
@@ -1148,6 +1772,9 @@ object SparkEntry {
         col("gap_start_us"), col("gap_end_us"), col("gap_us"),
         expr("gap_us div 1000000").as("gap_seconds"))
     }),
+      // The streamed gap events equal the batch operator's — one oracle,
+      // two engines (see q_ext_gaps in ExtQueries for the SQL).
+      oracle = Some(extOracle("q_ext_gaps"))),
 
     // §2.10 driver-gated STREAMING heavy hitters: the Misra–Gries
     // summary as streaming state — the same mergeable buffer the batch
@@ -1156,7 +1783,7 @@ object SparkEntry {
     // for ANY merge order, so the gate is robust to micro-batch
     // boundaries; with the fixture's single AvailableNow batch it
     // shares q_ext_heavy_hitters' oracle outright.
-    "q_st12_stream_heavy_hitters" -> streamQ("documents")((s, dir) => {
+    Q("q_st12_stream_heavy_hitters", streamQ("documents")((s, dir) => {
       val k = 40
       val words = streamTable(s, dir, "documents")
         .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
@@ -1181,6 +1808,9 @@ object SparkEntry {
               col("exact_n").cast("double") - col("n_total").cast("double") / k,
               col("exact_n").cast("double"))).cast("long").as("within_bound"))
     }),
+      // The streamed MG summary satisfies the same order-independent
+      // contract as the batch aggregate — one oracle, two engines.
+      oracle = Some(extOracle("q_ext_heavy_hitters"))),
 
     // §2.10 driver-gated streaming approx-distinct per window: the
     // HLL++ sketch is the streaming-legal distinct (constant-size
@@ -1188,7 +1818,7 @@ object SparkEntry {
     // id). The per-window estimate is arrival-order- and
     // batch-boundary-independent, so the gate hash-checks the batch
     // exact counts and pins the ±10% (≫3σ at rsd=0.02) contract.
-    "q_st13_stream_distinct" -> streamQ("events")((s, dir) => {
+    Q("q_st13_stream_distinct", streamQ("events")((s, dir) => {
       val events = streamTable(s, dir, "events")
       val agg = graft.streaming.StreamDistinct.windowedApproxDistinct(
         events, "ts", "user_id", Seq("event_type"), windowMinutes = 60)
@@ -1208,11 +1838,18 @@ object SparkEntry {
             greatest(lit(0.1) * col("n_exact"), lit(4.0)))
             .cast("long").as("est_ok"))
     }),
+      // Streaming approx-distinct: exact per-window counts hash-checked;
+      // the sketch's accuracy contract asserted TRUE.
+      oracle = Some(
+        """SELECT CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_start,
+          |       event_type, count(DISTINCT user_id) AS n_exact,
+          |       CAST(1 AS BIGINT) AS est_ok
+          |FROM events GROUP BY 1, 2""".stripMargin)),
 
     // §2.10 driver-gated stream-static enrichment: per-event broadcast
     // lookup against a static dimension, streamed to completion — must
     // equal the batch join row-for-row.
-    "q_st4_stream_enrich" -> streamQ("events")((s, dir) => {
+    Q("q_st4_stream_enrich", streamQ("events")((s, dir) => {
       val raw = streamTable(s, dir, "events")
       val stream = raw.select(col("event_id"),
         pmod(col("user_id"), lit(25)).as("n_nationkey"))
@@ -1221,13 +1858,17 @@ object SparkEntry {
         .select(col("event_id"), col("n_name"))
       runToMemory(s, enriched, "g_st4", "append")
     }),
+      // Stream-static broadcast enrichment == the batch join.
+      oracle = Some(
+        """SELECT event_id, n_name
+          |FROM events JOIN nation ON n_nationkey = user_id % 25""".stripMargin)),
 
     // §2.10 ext: stream-static anomaly scoring — each live row joins
     // the frozen batch climatology (broadcast per micro-batch; the
     // stream side never shuffles) and carries its deviation. The
     // monitoring loop the reference's batch compare feeds, made
     // continuous; equals the batch join row-for-row.
-    "q_st14_stream_climatology" -> streamQ("events")((s, dir) => {
+    Q("q_st14_stream_climatology", streamQ("events")((s, dir) => {
       val profile = graft.ops.Climatology.profile(
         Tables.events(s, dir), "event_type", "ts", "value")
         .select(col("event_type"), col("hour"), col("clim_mean"))
@@ -1242,6 +1883,21 @@ object SparkEntry {
           round(col("value_r") - col("clim_mean"), 6).as("anomaly"))
       runToMemory(s, scored, "g_st14", "append")
     }),
+      // Stream-static anomaly scoring: live rows against the frozen batch
+      // climatology — must equal the batch join row-for-row.
+      oracle = Some(
+        """WITH p AS (
+          |  SELECT event_type, CAST(hour(ts) AS INT) AS hour,
+          |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
+          |                 AS DOUBLE) / count(*), 6) AS clim_mean
+          |  FROM events GROUP BY 1, 2),
+          |e AS (
+          |  SELECT event_type, event_id, CAST(hour(ts) AS INT) AS hour,
+          |         round(CAST(value AS DOUBLE), 6) AS value_r
+          |  FROM events WHERE event_id % 13 = 0)
+          |SELECT e.event_type, e.event_id, e.hour, e.value_r, p.clim_mean,
+          |       round(e.value_r - p.clim_mean, 6) AS anomaly
+          |FROM e JOIN p USING (event_type, hour)""".stripMargin)),
 
     // §2.10 ext: STREAMING geo radius join — each live event (coords
     // integer-derived from its user) emits every station within
@@ -1250,7 +1906,7 @@ object SparkEntry {
     // stateless (map-side cell expand + stream-static join), so
     // append mode needs no watermark. Equals the batch join
     // row-for-row.
-    "q_st15_stream_radius" -> streamQ("events")((s, dir) => {
+    Q("q_st15_stream_radius", streamQ("events")((s, dir) => {
       val probes = streamTable(s, dir, "events")
         .filter(col("event_id") % 29 === 0)
         .select(col("event_id").as("id"),
@@ -1264,6 +1920,28 @@ object SparkEntry {
         probes, "id", stations, "station_id", radiusKm = 150.0, cellDeg = 2.0)
       runToMemory(s, within, "g_st15", "append")
     }),
+      // The streamed radius join equals the batch brute-force join: the
+      // grid only prefilters, the rounded haversine decides.
+      oracle = Some(
+        """WITH pr AS (
+          |  SELECT event_id AS id,
+          |         -11.0 + (user_id * 43 % 2200) / 100.0 AS lat,
+          |         95.0 + (user_id * 61 % 4600) / 100.0 AS lon
+          |  FROM events WHERE event_id % 29 = 0),
+          |st AS (
+          |  SELECT s_suppkey AS station_id,
+          |         -11.0 + (s_suppkey * 37 % 2200) / 100.0 AS s_lat,
+          |         95.0 + (s_suppkey * 53 % 4600) / 100.0 AS s_lon
+          |  FROM supplier),
+          |d AS (
+          |  SELECT id, station_id,
+          |         round(12742.0176 * asin(sqrt(
+          |           sin(radians(s_lat - lat) / 2.0) * sin(radians(s_lat - lat) / 2.0)
+          |           + cos(radians(lat)) * cos(radians(s_lat))
+          |             * sin(radians(s_lon - lon) / 2.0)
+          |             * sin(radians(s_lon - lon) / 2.0))), 6) AS dist_km
+          |  FROM pr, st)
+          |SELECT id, station_id, dist_km FROM d WHERE dist_km <= 150.0""".stripMargin)),
 
     // §2.10 ext: STREAMING model-calibration monitoring — the batch
     // Reliability.curve (bin counts + decimal score sums) running
@@ -1271,7 +1949,7 @@ object SparkEntry {
     // rows), no watermark needed, and the final table equals the
     // batch curve bit-for-bit. Score is per-row md5 noise, label a
     // value threshold, so the whole gate is oracle-replayable.
-    "q_st16_stream_reliability" -> streamQ("events")((s, dir) => {
+    Q("q_st16_stream_reliability", streamQ("events")((s, dir) => {
       val stream = streamTable(s, dir, "events")
         .select(
           (conv(substring(md5(concat(lit("rel"),
@@ -1282,6 +1960,27 @@ object SparkEntry {
         bins = 10)
       runToMemory(s, curve, "g_st16", "complete")
     }),
+      // The streamed complete-mode reliability curve equals the batch
+      // curve: same md5-noise score, same bins, same decimal sums.
+      oracle = Some({
+        def hx(i: Int) =
+          s"(strpos('0123456789abcdef', substring(md5('rel' || CAST(event_id AS VARCHAR)), $i, 1)) - 1)"
+        s"""WITH sc AS (
+           |  SELECT CAST(${hx(1)} * 256 + ${hx(2)} * 16 + ${hx(3)}
+           |           AS DOUBLE) / 4096.0 AS score,
+           |         value >= 50.0 AS good
+           |  FROM events),
+           |j AS (
+           |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
+           |           AS bin,
+           |         CAST(round(score, 6) AS DECIMAL(18,6)) AS s,
+           |         CASE WHEN good THEN 1 ELSE 0 END AS pos
+           |  FROM sc)
+           |SELECT bin, count(*) AS n,
+           |       round(CAST(sum(s) AS DOUBLE) / count(*), 6) AS mean_score,
+           |       round(CAST(sum(pos) AS DOUBLE) / count(*), 6) AS pos_rate
+           |FROM j GROUP BY 1""".stripMargin
+      })),
 
     // §2.10 ext: STREAMING histogram-store ingest — each micro-batch
     // reduces to ≤ bins (day, bin) count rows appended to the store
@@ -1290,7 +1989,7 @@ object SparkEntry {
     // addition, the stream-built store's range quantiles equal the
     // batch-built store's bit-for-bit, and the oracle replays them
     // from raw data.
-    "q_st17_stream_quantile_ingest" -> ((s, dir) => {
+    Q("q_st17_stream_quantile_ingest", (s, dir) => {
       val store = ExtQueries.scratchTable(s, "g_st17_hist", dir)
       val (_, ckpt) = resetStreamDirs(s, "g_st17", dir)
       s.sql(s"DROP TABLE IF EXISTS `$store`")
@@ -1310,14 +2009,40 @@ object SparkEntry {
       q.awaitTermination()
       graft.ext.HistogramStore.rangeQuantiles(s, store,
         "2024-01-08", "2024-01-22", Seq(50, 90, 99), lo, hi, bins)
-    }),
+    },
+      // The stream-ingested histogram store answers range quantiles
+      // identically to binning the raw rows in SQL (exact integer merge).
+      oracle = Some(
+        """WITH raw AS (
+          |  SELECT round(value, 6) AS v FROM events
+          |  WHERE value IS NOT NULL
+          |    AND CAST(ts AS DATE) BETWEEN DATE '2024-01-08' AND DATE '2024-01-22'),
+          |b AS (
+          |  SELECT CAST(least(greatest(floor((v - 0.0) / 2.0), 0), 249)
+          |    AS BIGINT) AS bin
+          |  FROM raw),
+          |agg AS (SELECT bin, count(*) AS cnt FROM b GROUP BY 1),
+          |cum AS (
+          |  SELECT a.bin, a.cnt, CAST(sum(b2.cnt) AS BIGINT) AS cum
+          |  FROM agg a JOIN agg b2 ON b2.bin <= a.bin GROUP BY 1, 2),
+          |nn AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM agg),
+          |q AS (SELECT CAST(unnest([50, 90, 99]) AS INT) AS q_pct),
+          |tg AS (
+          |  SELECT q_pct, nn.n,
+          |         (CAST(q_pct AS BIGINT) * nn.n + 99) // 100 AS t
+          |  FROM q, nn)
+          |SELECT tg.q_pct, tg.n,
+          |       round(0.0 + 2.0 * c.bin
+          |         + 2.0 * CAST(tg.t - (c.cum - c.cnt) AS DOUBLE) / c.cnt,
+          |         6) AS est
+          |FROM cum c JOIN tg ON c.cum >= tg.t AND c.cum - c.cnt < tg.t""".stripMargin)),
 
     // §2.10 ext: LIVE Population Stability Index — the stream side
     // aggregates its fixed-grid bin counts in complete mode (constant
     // bins-row state), then the PSI algebra runs between the streamed
     // counts and the frozen batch reference; equals the batch PSI
     // bit-for-bit because the bin counts are exact integers.
-    "q_st18_stream_psi" -> streamQ("events")((s, dir) => {
+    Q("q_st18_stream_psi", streamQ("events")((s, dir) => {
       val lo = 0.0; val hi = 500.0; val bins = 10
       val binsStream = graft.ext.Drift.psiBinned(
         streamTable(s, dir, "events")
@@ -1329,13 +2054,15 @@ object SparkEntry {
         "value", lo, hi, bins, "cb")
       graft.ext.Drift.psiFromCounts(aCounts, bCounts, bins)
     }),
+      // the live PSI equals the batch PSI (exact integer bin counts)
+      oracle = Some(extOracle("q_ext_psi"))),
 
     // §2.10 ext: STREAMING erasure enforcement — live ingest filtered
     // against the (broadcast) tombstone set, stateless stream-static
     // left-outer + null filter, so deleted keys can never re-enter the
     // corpus between batch erasure runs. Audit equals the batch
     // anti-join exactly (count + decimal key-sum).
-    "q_st19_stream_tombstone" -> streamQ("documents")((s, dir) => {
+    Q("q_st19_stream_tombstone", streamQ("documents")((s, dir) => {
       val tomb = Tables.documents(s, dir)
         .filter(col("doc_id") % 37 === 0)
         .select(col("doc_id")).withColumn("__t", lit(1))
@@ -1349,6 +2076,11 @@ object SparkEntry {
       runToMemory(s, kept, "g_st19", "append").agg(count(lit(1)).as("n_kept"),
         sum(col("doc_id")).as("key_sum"))
     }),
+      // streamed tombstone filter equals the batch anti-join
+      oracle = Some(
+        """SELECT count(*) AS n_kept,
+          |       CAST(sum(doc_id) AS BIGINT) AS key_sum
+          |FROM documents WHERE doc_id % 37 <> 0""".stripMargin)),
 
     // §2.10 driver-gated MULTI-BATCH near-dup ORDER semantics — the one
     // streaming surface q_st8 leaves spec-only (its sf fixture is a
@@ -1361,7 +2093,7 @@ object SparkEntry {
     // Gates, in one row: batch-2 dups of batch-1 keeps die via the
     // persisted STORE (no streaming state), batch order is respected,
     // and in-batch canonical selection keeps the min id.
-    "q_st20_stream_neardup_order" -> ((s, dir) => {
+    Q("q_st20_stream_neardup_order", (s, dir) => {
       val srcDir = graft.io.VerifyFixtures.streamNearDupFixture()
       val store = ExtQueries.scratchTable(s, "g_st20_store", dir)
       val (out, ckpt) = resetStreamDirs(s, "g_st20", dir)
@@ -1379,7 +2111,20 @@ object SparkEntry {
       q.awaitTermination()
       s.read.parquet(out)
         .select(col("doc_id"), substring(md5(col("text")), 1, 16).as("fp"))
-    }),
+    },
+      // Multi-batch near-dup ingest over the disjoint-vocabulary duplicate
+      // classes: batch-1 ids < batch-2 ids, so the greedy stream result
+      // (store probe + per-batch min-id canonical) IS the global min id
+      // per duplicate class. Classes are exact text groups by fixture
+      // construction (distinct vocabularies; no cross-class overlap).
+      oracle = Some({
+        val d = graft.io.VerifyFixtures.streamNearDupDir
+        s"""SELECT min(CAST(id AS BIGINT)) AS doc_id,
+           |       substring(md5(text), 1, 16) AS fp
+           |FROM read_csv('$d/*.csv', header=true, all_varchar=true)
+           |GROUP BY text""".stripMargin
+      }),
+      fixture = true),
 
     // §2.10 ext: STREAMING ANN INGEST — live embeddings assigned to the
     // FROZEN coarse quantizer as they arrive: the assignment is a pure
@@ -1392,7 +2137,7 @@ object SparkEntry {
     // by the KeyShift pin (a design constant, not a data fraction).
     // Gate: streamed per-cell (count, id-sum) equals the batch
     // inverted-file build exactly.
-    "q_st21_stream_ann_ingest" -> streamQ("embeddings")((s, dir) => {
+    Q("q_st21_stream_ann_ingest", streamQ("embeddings")((s, dir) => {
       val cents = Tables.embeddings(s, dir)
         .filter(col("vec_id") % 50 === 7 &&
           col("vec_id") < graft.io.ScaleReplicate.KeyShift)
@@ -1408,6 +2153,25 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("id_sum"))
       runToMemory(s, counts, "g_st21", "complete")
     }),
+      // streamed per-cell ingest counters equal the batch inverted-file
+      // build (same centroids, same rounded-cosine argmin, same
+      // tie-break)
+      oracle = Some(
+        """WITH cent AS (
+          |  SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
+          |  FROM embeddings WHERE vec_id % 50 = 7 AND vec_id < 1000000000),
+          |corp AS (
+          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+          |r AS (
+          |  SELECT vec_id, cent_id,
+          |         row_number() OVER (PARTITION BY vec_id
+          |           ORDER BY round(list_cosine_similarity(cv, cvec), 4) DESC,
+          |                    cent_id) AS rk
+          |  FROM corp, cent),
+          |asg AS (SELECT vec_id, cent_id AS cell FROM r WHERE rk = 1)
+          |SELECT CAST(cell AS BIGINT) AS cell, count(*) AS n,
+          |       CAST(sum(vec_id) AS BIGINT) AS id_sum
+          |FROM asg GROUP BY 1""".stripMargin)),
 
     // Streaming ε-DP counts: the live per-language count is ordinary
     // streaming state (one stateful agg, complete mode); the Laplace
@@ -1415,12 +2179,15 @@ object SparkEntry {
     // q_ext_dp_counts gates) is applied ONCE to the final state, never
     // per micro-batch (per-batch noise would compound the ε spend).
     // The gate pins streamed-state-then-release == the batch query.
-    "q_st22_stream_dp_counts" -> streamQ("documents")((s, dir) => {
+    Q("q_st22_stream_dp_counts", streamQ("documents")((s, dir) => {
       val counts = streamTable(s, dir, "documents")
         .groupBy(col("lang")).agg(count(lit(1)).as("true_n"))
       graft.ext.Privacy.dpRelease(runToMemory(s, counts, "g_st22", "complete"),
         "lang", "true_n", eps = 0.5)
     }),
+      // streamed count state + one DP release at emission equals the
+      // batch mechanism exactly (same keyed hash draw, same epsilon)
+      oracle = Some(extOracle("q_ext_dp_counts"))),
 
     // §2.10 driver-gated streaming record linkage: the Fellegi–Sunter
     // operator run continuously against a persisted block-keyed record
@@ -1433,7 +2200,7 @@ object SparkEntry {
     // comparison to safe-alphabet BIGINT cells (count + id/score sums
     // both sides, min over per-pair agreement). Multi-batch cross-store
     // semantics are spec-pinned in StreamLinkageSpec instead.
-    "q_st23_stream_linkage" -> ((s, dir) => {
+    Q("q_st23_stream_linkage", (s, dir) => {
       val store = ExtQueries.scratchTable(s, "g_st23_store", dir)
       val (out, ckpt) = resetStreamDirs(s, "g_st23", dir)
       s.sql(s"DROP TABLE IF EXISTS `$store`")
@@ -1456,7 +2223,18 @@ object SparkEntry {
         sum(col("score")).as("score_sum"),
         sum(when(col("verdict") === "match", 1L).otherwise(0L))
           .as("n_match"))
-    }),
+    },
+      // single-batch stream linkage == the batch operator: the oracle
+      // replays the batch linkage and folds the same BIGINT digest
+      oracle = Some(
+        (s"WITH lk AS (\n${extOracle("q_ext_record_linkage")}\n)" +
+          """
+            |SELECT count(*) AS n_pairs,
+            |       CAST(1 AS BIGINT) AS stream_matches_batch,
+            |       CAST(sum(score) AS BIGINT) AS score_sum,
+            |       CAST(sum(CASE WHEN verdict = 'match' THEN 1 ELSE 0 END)
+            |            AS BIGINT) AS n_match
+            |FROM lk""".stripMargin))),
   )
 
   /** DuckDB rendition of the compare pipeline for one component. */
@@ -1518,834 +2296,4 @@ object SparkEntry {
         comp("DHI", "dhi_g", "dhi_c"),
         comp("DNI", "dni_g", "dni_c")).mkString("\nUNION ALL\n")
   }
-
-  private def coreOracleSql: Map[String, String] = Map(
-    "q_pipe_compare_all" -> compareAllOracle,
-
-    "q_x5_salted_agg" ->
-      """SELECT event_type,
-        |       round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE), 2) AS sum_value,
-        |       count(value) AS n,
-        |       round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) / count(value), 6)
-        |         AS avg_value
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_x6_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    // Identical to the q_x6 oracle on purpose: bucketed and salted are
-    // two physical routes to the same logical join.
-    "q_x7_salted_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    "q_a6b_approx_percentile" ->
-      """SELECT event_type,
-        |       round(quantile_cont(value, 0.5), 6) AS p50,
-        |       round(quantile_cont(value, 0.99), 6) AS p99,
-        |       CAST(1 AS BIGINT) AS p50_ok, CAST(1 AS BIGINT) AS p90_ok, CAST(1 AS BIGINT) AS p99_ok
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_s6_download_matrix" -> {
-      val loc = graft.io.VerifyFixtures.locationPath
-      s"""SELECT station, latitude, longitude, elevation, sky_type,
-         |       '2024-01-01/2024-12-31' AS "date", '1minute' AS time_step,
-         |       'csv_expert' AS "format",
-         |       regexp_replace(station || '_' || sky_type, '[^\\w.-]', '_', 'g') AS file_tag
-         |FROM read_csv('$loc', header=true)
-         |CROSS JOIN (SELECT unnest(['clear', 'observed_cloud']) AS sky_type)""".stripMargin
-    },
-
-    "q_p8_empty_input" ->
-      """SELECT CAST(NULL AS BIGINT) AS bucket_start, CAST(NULL AS DOUBLE) AS avg_value
-        |WHERE FALSE""".stripMargin,
-
-    "q_a1_resample" ->
-      """SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start, event_type,
-        |       count(value) AS n, round(avg(value), 6) AS avg_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q_r1_densify" ->
-      """WITH b AS (
-        |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         count(*) AS n_obs, round(avg(value), 6) AS avg_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |mm AS (SELECT min(bucket_start) AS mn, max(bucket_start) AS mx FROM b),
-        |g AS (SELECT unnest(generate_series(mn, mx, 600)) AS bucket_start FROM mm)
-        |SELECT g.bucket_start, coalesce(b.n_obs, 0) AS n, b.avg_value
-        |FROM g LEFT JOIN b USING (bucket_start)""".stripMargin,
-
-    "q_j1_time_join" ->
-      """WITH a AS (
-        |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         round(avg(value), 6) AS avg_click
-        |  FROM events WHERE event_type = 'click' GROUP BY 1),
-        |b AS (
-        |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         round(avg(value), 6) AS avg_view
-        |  FROM events WHERE event_type = 'view' GROUP BY 1)
-        |SELECT a.bucket_start, a.avg_click, b.avg_view,
-        |       round(a.avg_click - b.avg_view, 6) AS bias
-        |FROM a JOIN b USING (bucket_start)""".stripMargin,
-
-    "q_a2_linreg" ->
-      """SELECT l_returnflag,
-        |       round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
-        |       round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept,
-        |       round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
-        |       CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q_a2_linreg_full" ->
-      """WITH d AS (
-        |  SELECT * FROM (VALUES
-        |    ('a', 1.0, 2.125), ('a', 2.0, 3.875), ('a', 3.0, 6.25), ('a', 4.0, 7.75),
-        |    ('b', 1.0, 1.0),   ('b', 2.0, 2.25), ('b', 3.0, 2.875)
-        |  ) v(grp, x, y)),
-        |s AS (
-        |  SELECT grp,
-        |         regr_count(y, x) AS n,
-        |         regr_slope(y, x) AS slope,
-        |         regr_intercept(y, x) AS intercept,
-        |         regr_sxx(y, x) AS ssxx,
-        |         regr_syy(y, x) AS ssyy,
-        |         regr_sxy(y, x) AS ssxy
-        |  FROM d GROUP BY grp),
-        |t AS (
-        |  SELECT grp, n, slope, intercept,
-        |         ssxy / sqrt(ssxx * ssyy) AS r,
-        |         sqrt(greatest(ssyy - slope * ssxy, 0) / (n - 2) / ssxx) AS stderr
-        |  FROM s)
-        |SELECT grp,
-        |       round(slope, 6) AS slope,
-        |       round(intercept, 6) AS intercept,
-        |       round(r, 6) AS r,
-        |       round(r * r, 6) AS r2,
-        |       round(CASE
-        |         WHEN n = 4 THEN 1 - abs(slope / stderr) / sqrt(2 + (slope / stderr) * (slope / stderr))
-        |         WHEN n = 3 THEN 1 - 2 * atan(abs(slope / stderr)) / pi()
-        |       END, 6) AS p_value,
-        |       round(stderr, 6) AS stderr,
-        |       CAST(n AS BIGINT) AS n
-        |FROM t""".stripMargin,
-
-    "q_j2_broadcast_lookup" ->
-      """SELECT p_brand, count(*) AS n,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1""".stripMargin,
-
-    "q_p4_qc_filter" ->
-      """SELECT l_linestatus, count(*) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE (CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END
-        |     + CASE WHEN l_tax > 0.04 THEN 1 ELSE 0 END
-        |     + CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) = 0
-        |GROUP BY 1""".stripMargin,
-
-    "q_f9_ratio_guard" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-        |       CAST(sum(CASE WHEN l_discount = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |       round(avg(CASE WHEN l_discount = 0 THEN NULL
-        |                      ELSE l_extendedprice / l_discount END), 2) AS avg_ratio
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q_f1_time_parse" ->
-      """WITH base AS (
-        |  SELECT event_id,
-        |         'UTC+' || CAST(user_id % 12 AS INT) AS tz,
-        |         strftime(ts, '%Y-%m-%dT%H:%M:%S') || '/' ||
-        |         strftime(ts + INTERVAL 1 MINUTE, '%Y-%m-%dT%H:%M:%S') AS iso
-        |  FROM events)
-        |SELECT event_id,
-        |       CAST(replace(tz, 'UTC', '') AS INT) AS utc_offset,
-        |       CAST(epoch(strptime(split_part(iso, '/', 1), '%Y-%m-%dT%H:%M:%S')) AS BIGINT) AS epoch_utc,
-        |       CAST(epoch(strptime(split_part(iso, '/', 1), '%Y-%m-%dT%H:%M:%S'))
-        |            + CAST(replace(tz, 'UTC', '') AS INT) * 3600 AS BIGINT) AS epoch_local
-        |FROM base""".stripMargin,
-
-    "q_f12_clean_names" ->
-      """SELECT p_partkey,
-        |       trim(regexp_replace(regexp_replace(
-        |         lower(regexp_replace(replace(p_name, ' ', '_'), '_', ' ', 'g')),
-        |         '[^a-z0-9 ]', '', 'g'), '\s+', ' ', 'g')) AS clean_name,
-        |       regexp_replace(p_name, '[^\w.-]', '_', 'g') AS file_name,
-        |       replace(regexp_replace(p_name, '[^\w.-]', '_', 'g'), '_', ' ') AS pretty_name
-        |FROM part""".stripMargin,
-
-    "q_u1_union" ->
-      """SELECT seg, count(*) AS n,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_price
-        |FROM (
-        |  SELECT 'hi' AS seg, o_totalprice FROM orders WHERE o_totalprice >= 150000
-        |  UNION ALL
-        |  SELECT 'lo' AS seg, o_totalprice FROM orders WHERE o_totalprice < 150000)
-        |GROUP BY 1""".stripMargin,
-
-    "q_a4_scalars" ->
-      """SELECT count(*) AS n, max(value) AS max_value, min(value) AS min_value,
-        |       CAST(floor(epoch(min(ts))) AS BIGINT) AS min_ts_epoch,
-        |       CAST(floor(epoch(max(ts))) AS BIGINT) AS max_ts_epoch,
-        |       count(DISTINCT event_type) AS n_types
-        |FROM events""".stripMargin,
-
-    "q_p2_dynamic_numeric" ->
-      """SELECT CAST(sum(CAST(event_id AS DECIMAL(28,4))) AS DOUBLE) AS sum_event_id,
-        |       CAST(sum(CAST(user_id AS DECIMAL(28,4))) AS DOUBLE) AS sum_user_id,
-        |       CAST(sum(CAST(value AS DECIMAL(28,4))) AS DOUBLE) AS sum_value
-        |FROM events""".stripMargin,
-
-    "q_pipe_compare_stats" -> comparePipelineOracle,
-
-    "q_x4_range_join" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec, event_type
-        |  FROM events)
-        |SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id
-        |FROM e c JOIN e p
-        |  ON c.user_id = p.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND c.sec BETWEEN p.sec - 300 AND p.sec + 300""".stripMargin,
-
-    "q_w3_rolling" ->
-      """WITH s AS (
-        |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         round(avg(value), 6) AS v
-        |  FROM events WHERE event_type = 'view' GROUP BY 1)
-        |SELECT bucket_start,
-        |  round(avg(v) OVER (ORDER BY bucket_start
-        |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING), 6) AS smooth3,
-        |  round(v - lag(v) OVER (ORDER BY bucket_start), 6) AS delta,
-        |  count(*) OVER (ORDER BY bucket_start
-        |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS support
-        |FROM s""".stripMargin,
-
-    "q_w4_rolling_keyed" ->
-      """WITH s AS (
-        |  SELECT event_type, CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         round(avg(value), 6) AS v
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, bucket_start,
-        |  round(avg(v) OVER (PARTITION BY event_type ORDER BY bucket_start
-        |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING), 6) AS smooth3,
-        |  round(v - lag(v) OVER (PARTITION BY event_type ORDER BY bucket_start), 6) AS delta,
-        |  count(*) OVER (PARTITION BY event_type ORDER BY bucket_start
-        |    ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS support
-        |FROM s""".stripMargin,
-
-    "q_u2_except" ->
-      """SELECT user_id FROM events WHERE event_type = 'click'
-        |EXCEPT
-        |SELECT user_id FROM events WHERE event_type = 'purchase'""".stripMargin,
-
-    "q_u3_intersect" ->
-      """SELECT user_id FROM events WHERE event_type = 'click'
-        |INTERSECT
-        |SELECT user_id FROM events WHERE event_type = 'purchase'""".stripMargin,
-
-    "q_r6_pivot" ->
-      """SELECT CAST(floor(epoch(ts)/86400) AS BIGINT) AS day,
-        |  round(sum(CASE WHEN event_type = 'click' THEN value END), 4) AS click,
-        |  round(sum(CASE WHEN event_type = 'view' THEN value END), 4) AS view,
-        |  round(sum(CASE WHEN event_type = 'purchase' THEN value END), 4) AS purchase,
-        |  round(sum(CASE WHEN event_type = 'signup' THEN value END), 4) AS signup,
-        |  round(sum(CASE WHEN event_type = 'error' THEN value END), 4) AS error
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_r5_interpolate" ->
-      """WITH b AS (
-        |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         round(avg(value), 6) AS avg_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |mm AS (SELECT min(bucket_start) AS mn, max(bucket_start) AS mx FROM b),
-        |g AS (SELECT unnest(generate_series(mn, mx, 600)) AS bucket_start FROM mm),
-        |d AS (SELECT g.bucket_start, b.avg_value
-        |      FROM g LEFT JOIN b USING (bucket_start)),
-        |w AS (
-        |  SELECT bucket_start, avg_value,
-        |    last_value(avg_value IGNORE NULLS) OVER
-        |      (ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS) OVER
-        |      (ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
-        |    first_value(avg_value IGNORE NULLS) OVER
-        |      (ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS) OVER
-        |      (ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
-        |  FROM d)
-        |SELECT bucket_start,
-        |       round(CASE WHEN avg_value IS NOT NULL THEN avg_value
-        |             ELSE pv + (nv - pv) * (bucket_start - pt) / (nt - pt) END, 6) AS v
-        |FROM w""".stripMargin,
-
-    "q_r5b_interpolate_keyed" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         round(avg(value), 6) AS avg_value
-        |  FROM events WHERE event_type IN ('purchase', 'signup', 'error')
-        |  GROUP BY 1, 2),
-        |mm AS (SELECT min(bucket_start) AS mn, max(bucket_start) AS mx FROM b),
-        |k AS (SELECT DISTINCT event_type FROM b),
-        |g AS (SELECT k.event_type, unnest(generate_series(mn, mx, 600)) AS bucket_start
-        |      FROM mm, k),
-        |d AS (SELECT g.event_type, g.bucket_start, b.avg_value
-        |      FROM g LEFT JOIN b USING (event_type, bucket_start)),
-        |w AS (
-        |  SELECT event_type, bucket_start, avg_value,
-        |    last_value(avg_value IGNORE NULLS) OVER (PARTITION BY event_type
-        |      ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS)
-        |      OVER (PARTITION BY event_type
-        |      ORDER BY bucket_start ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
-        |    first_value(avg_value IGNORE NULLS) OVER (PARTITION BY event_type
-        |      ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN avg_value IS NOT NULL THEN bucket_start END IGNORE NULLS)
-        |      OVER (PARTITION BY event_type
-        |      ORDER BY bucket_start ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
-        |  FROM d)
-        |SELECT event_type, bucket_start,
-        |       floor((CASE WHEN avg_value IS NOT NULL THEN avg_value
-        |              ELSE pv + (nv - pv) * (bucket_start - pt) / (nt - pt) END)
-        |             * 1000000 + 0.5) / 1000000 AS v
-        |FROM w""".stripMargin,
-
-    "q_f17_json_extract" ->
-      """SELECT event_id,
-        |       CAST(json_extract_string(props, '$.k') AS INT) AS k
-        |FROM events""".stripMargin,
-
-    "q_w2_sessionize" ->
-      """WITH e AS (
-        |  SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events),
-        |marked AS (
-        |  SELECT user_id, sec,
-        |         CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM e),
-        |numbered AS (
-        |  SELECT user_id, sec,
-        |         sum(new_session) OVER (PARTITION BY user_id ORDER BY sec
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM marked),
-        |sessions AS (
-        |  SELECT user_id, session_id, count(*) AS n_events,
-        |         max(sec) - min(sec) AS duration_s
-        |  FROM numbered GROUP BY 1, 2)
-        |SELECT user_id, count(*) AS n_sessions, max(n_events) AS max_events,
-        |       max(duration_s) AS max_duration_s
-        |FROM sessions GROUP BY 1""".stripMargin,
-
-    "q_a6_percentile" ->
-      """SELECT event_type,
-        |       round(quantile_cont(value, 0.5), 6) AS p50,
-        |       round(quantile_cont(value, 0.9), 6) AS p90,
-        |       round(quantile_cont(value, 0.99), 6) AS p99,
-        |       count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q_p5_na_drop" ->
-      """SELECT
-        |  count(*) FILTER (
-        |    WHERE (CASE WHEN event_id % 7 <> 0 THEN value END) IS NOT NULL
-        |      AND (CASE WHEN event_id % 11 <> 0 THEN value END) IS NOT NULL)
-        |    AS kept_any,
-        |  count(*) FILTER (
-        |    WHERE (CASE WHEN event_id % 7 <> 0 THEN value END) IS NOT NULL
-        |       OR (CASE WHEN event_id % 11 <> 0 THEN value END) IS NOT NULL)
-        |    AS kept_all,
-        |  count(*) AS total
-        |FROM events""".stripMargin,
-
-    "q_s7_csv_sink" -> {
-      val glob = s"${graft.io.VerifyFixtures.csvSinkDir}/*.csv"
-      s"""SELECT flag, round(CAST(qty AS DOUBLE), 2) AS qty, CAST(n AS BIGINT) AS n
-         |FROM read_csv('$glob', header=true, all_varchar=true)""".stripMargin
-    },
-
-    // TPC-H Q3/Q5 shapes: revenue terms round at 4 dp per ROW before the
-    // decimal sum in both engines (2 dp would sit on the price×discount
-    // product's own tie boundary), so float aggregation order is out of
-    // the contract entirely.
-    "q_x8_tpch_q3" ->
-      """SELECT l_orderkey,
-        |       CAST(floor(epoch(o_orderdate)) AS BIGINT) AS order_date,
-        |       o_orderpriority AS priority,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount), 4)
-        |         AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q_x9_tpch_q5" ->
-      """SELECT n_name,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount), 4)
-        |         AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1""".stripMargin,
-
-
-    "q_s2_cams_scan" -> {
-      import graft.io.VerifyFixtures.{camsPath, camsPreambleLines}
-      s"""WITH raw AS (
-         |  SELECT * FROM read_csv('$camsPath', delim=';', header=false,
-         |    skip=$camsPreambleLines, all_varchar=true,
-         |    names=['op', 'ghi', 'dhi', 'bni', 'cc'])),
-         |parsed AS (
-         |  SELECT TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) AS t,
-         |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
-         |         TRY_CAST(bni AS DOUBLE) AS bni, TRY_CAST(cc AS DOUBLE) AS cc
-         |  FROM raw
-         |  WHERE TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) IS NOT NULL)
-         |SELECT CAST(floor(epoch(t)/600)*600 AS BIGINT) AS bucket_start,
-         |       round(avg(ghi), 6) AS ghi, round(avg(dhi), 6) AS dhi,
-         |       round(avg(bni), 6) AS bni, round(avg(cc), 6) AS cloud_cover
-         |FROM parsed GROUP BY 1""".stripMargin
-    },
-
-    // identical oracle: the V2 source must agree with the csv path
-    "q_s2b_cams_dsv2" -> {
-      import graft.io.VerifyFixtures.{camsPath, camsPreambleLines}
-      s"""WITH raw AS (
-         |  SELECT * FROM read_csv('$camsPath', delim=';', header=false,
-         |    skip=$camsPreambleLines, all_varchar=true,
-         |    names=['op', 'ghi', 'dhi', 'bni', 'cc'])),
-         |parsed AS (
-         |  SELECT TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) AS t,
-         |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
-         |         TRY_CAST(bni AS DOUBLE) AS bni, TRY_CAST(cc AS DOUBLE) AS cc
-         |  FROM raw
-         |  WHERE TRY_CAST(split_part(op, '/', 1) AS TIMESTAMP) IS NOT NULL)
-         |SELECT CAST(floor(epoch(t)/600)*600 AS BIGINT) AS bucket_start,
-         |       round(avg(ghi), 6) AS ghi, round(avg(dhi), 6) AS dhi,
-         |       round(avg(bni), 6) AS bni, round(avg(cc), 6) AS cloud_cover
-         |FROM parsed GROUP BY 1""".stripMargin
-    },
-
-    "q_s5_compile_cube" -> {
-      import graft.io.VerifyFixtures.{locationPath, processedGlob}
-      val clean = (c: String) =>
-        s"trim(regexp_replace(regexp_replace(lower(regexp_replace($c, '_', ' ', 'g')), " +
-          s"'[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g'))"
-      s"""WITH loc AS (
-         |  SELECT station, latitude, longitude, elevation,
-         |         CAST(replace(timezone, 'UTC', '') AS INT) AS utc_offset,
-         |         ${clean("station")} AS station_key
-         |  FROM read_csv('$locationPath', header=true)),
-         |raw AS (
-         |  SELECT *, regexp_extract(filename,
-         |           'processed_10min_(.*?)_observed_cloud\\.csv', 1) AS station_raw
-         |  FROM read_csv('$processedGlob', delim=',', header=false, skip=1,
-         |    all_varchar=true, filename=true,
-         |    names=['tcol', 'ghi', 'dhi', 'bni', 'cc'])),
-         |parsed AS (
-         |  SELECT TRY_CAST(tcol AS TIMESTAMP) AS t,
-         |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
-         |         TRY_CAST(bni AS DOUBLE) AS dni,
-         |         ${clean("station_raw")} AS station_key
-         |  FROM raw
-         |  WHERE TRY_CAST(tcol AS TIMESTAMP) IS NOT NULL)
-         |SELECT p.station_key AS station, l.station AS station_original,
-         |       CAST(floor(epoch(p.t)) AS BIGINT) AS epoch_utc,
-         |       CAST(floor(epoch(p.t)) AS BIGINT) + l.utc_offset * 3600 AS epoch_local,
-         |       round(p.ghi, 6) AS ghi, round(p.dhi, 6) AS dhi, round(p.dni, 6) AS dni,
-         |       l.latitude, l.longitude, l.elevation
-         |FROM parsed p JOIN loc l USING (station_key)
-         |WHERE p.station_key <> 'sleman'""".stripMargin
-    },
-
-    // Same raw-CSV recomputation as q_s5_compile_cube, projected to the
-    // columns that survive the NetCDF container (no station_original /
-    // local time in the .nc).
-    "q_s1_validate" -> {
-      import graft.io.VerifyFixtures.{locationPath, malformedLocationPath}
-      s"""WITH req(c) AS (SELECT unnest(['elevation', 'latitude', 'longitude', 'station'])),
-         |cols AS (
-         |  SELECT 'good' AS fixture, column_name AS c
-         |  FROM (DESCRIBE SELECT * FROM read_csv('$locationPath', header=true))
-         |  UNION ALL
-         |  SELECT 'bad', column_name
-         |  FROM (DESCRIBE SELECT * FROM read_csv('$malformedLocationPath', header=true))),
-         |fx(fixture) AS (SELECT unnest(['good', 'bad'])),
-         |miss AS (
-         |  SELECT f.fixture, r.c FROM fx f, req r
-         |  WHERE NOT EXISTS (
-         |    SELECT 1 FROM cols WHERE cols.fixture = f.fixture AND cols.c = r.c))
-         |SELECT f.fixture,
-         |       CAST(NOT EXISTS (SELECT 1 FROM miss
-         |                        WHERE miss.fixture = f.fixture)
-         |            AS BIGINT) AS valid,
-         |       COALESCE((SELECT string_agg(c, ',' ORDER BY c)
-         |                 FROM miss WHERE miss.fixture = f.fixture), '') AS missing_cols
-         |FROM fx f""".stripMargin
-    },
-
-    "q_r4_cf_attrs" ->
-      """SELECT 'CF-1.8' AS "Conventions", 'Wh/m^2' AS "DHI_units",
-        |       'Wh/m^2' AS "DNI_units", 'Wh/m^2' AS "GHI_units",
-        |       'proleptic_gregorian' AS calendar, 'timeSeries' AS "featureType",
-        |       'timeseries_id' AS station_cf_role,
-        |       'seconds since 1970-01-01' AS time_units""".stripMargin,
-
-    "q_s8_netcdf_roundtrip" -> {
-      import graft.io.VerifyFixtures.{locationPath, processedGlob}
-      val clean = (c: String) =>
-        s"trim(regexp_replace(regexp_replace(lower(regexp_replace($c, '_', ' ', 'g')), " +
-          s"'[^a-z0-9 ]', '', 'g'), '\\s+', ' ', 'g'))"
-      s"""WITH loc AS (
-         |  SELECT station, latitude, longitude, elevation,
-         |         ${clean("station")} AS station_key
-         |  FROM read_csv('$locationPath', header=true)),
-         |raw AS (
-         |  SELECT *, regexp_extract(filename,
-         |           'processed_10min_(.*?)_observed_cloud\\.csv', 1) AS station_raw
-         |  FROM read_csv('$processedGlob', delim=',', header=false, skip=1,
-         |    all_varchar=true, filename=true,
-         |    names=['tcol', 'ghi', 'dhi', 'bni', 'cc'])),
-         |parsed AS (
-         |  SELECT TRY_CAST(tcol AS TIMESTAMP) AS t,
-         |         TRY_CAST(ghi AS DOUBLE) AS ghi, TRY_CAST(dhi AS DOUBLE) AS dhi,
-         |         TRY_CAST(bni AS DOUBLE) AS dni,
-         |         ${clean("station_raw")} AS station_key
-         |  FROM raw
-         |  WHERE TRY_CAST(tcol AS TIMESTAMP) IS NOT NULL)
-         |SELECT p.station_key AS station,
-         |       CAST(floor(epoch(p.t)) AS BIGINT) AS epoch_utc,
-         |       round(p.ghi, 6) AS ghi, round(p.dhi, 6) AS dhi, round(p.dni, 6) AS dni,
-         |       l.latitude, l.longitude, l.elevation
-         |FROM parsed p JOIN loc l USING (station_key)
-         |WHERE p.station_key <> 'sleman'""".stripMargin
-    },
-
-    "q_x2_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_x3_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_x1_asof_join" ->
-      """WITH r AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-        |         round(avg(value), 6) AS v
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |l AS (
-        |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-        |  FROM events WHERE event_type = 'click')
-        |SELECT l.event_id, l.user_id, l.sec, r.v AS asof_v
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.sec >= r.sec""".stripMargin,
-
-    "q_w1_topk" ->
-      """WITH rev AS (
-        |  SELECT l_returnflag, l_partkey,
-        |         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,4))) AS rev
-        |  FROM lineitem GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
-        |        ORDER BY rev DESC, l_partkey) AS rank FROM rev)
-        |SELECT l_returnflag, l_partkey, rank, CAST(rev AS DOUBLE) AS revenue
-        |FROM r WHERE rank <= 3""".stripMargin,
-
-    // The streamed tumbling mean must equal the batch aggregation.
-    "q_st1_stream_resample" ->
-      """SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start, event_type,
-        |       round(avg(value), 6) AS avg_value, count(*) AS n
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // Append-mode emission = the same resample restricted to windows
-    // whose end precedes the final watermark (max event time, floored
-    // to ms as Spark's event-time stats do, minus the 7200500 ms delay).
-    "q_st10_stream_late" ->
-      """WITH m AS (SELECT epoch_ms(max(ts)) AS mxms FROM events),
-        |w AS (
-        |  SELECT CAST(floor(epoch(ts)/600)*600 AS BIGINT) AS bucket_start,
-        |         event_type,
-        |         round(avg(value), 6) AS avg_value, count(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT w.bucket_start, w.event_type, w.avg_value, w.n
-        |FROM w, m
-        |WHERE (w.bucket_start + 600) * 1000 <= m.mxms - 7200500""".stripMargin,
-
-    // First-seen streaming dedup emits exactly the distinct fingerprints.
-    "q_st2_stream_dedup" ->
-      "SELECT DISTINCT substring(md5(text), 1, 16) AS fp FROM documents",
-
-    // The tracker's final state per key == the batch count/max/max-gap.
-    "q_st3_stream_tracker" ->
-      """WITH o AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS station,
-        |         date_trunc('second', ts) AS t
-        |  FROM events),
-        |g AS (
-        |  SELECT station, t,
-        |         epoch(t) - epoch(lag(t) OVER (PARTITION BY station ORDER BY t)) AS gap
-        |  FROM o)
-        |SELECT station, count(*) AS n,
-        |       CAST(floor(epoch(max(t))) AS BIGINT) AS last_sec,
-        |       CAST(coalesce(max(gap), 0) AS BIGINT) AS max_gap_s
-        |FROM g GROUP BY station""".stripMargin,
-
-    // The streamed gap events equal the batch operator's — one oracle,
-    // two engines (see q_ext_gaps in ExtQueries for the SQL).
-    "q_st9_stream_gaps" -> ExtQueries.oracleSql("q_ext_gaps"),
-    // the live PSI equals the batch PSI (exact integer bin counts)
-    "q_st18_stream_psi" -> ExtQueries.oracleSql("q_ext_psi"),
-
-    // streamed per-cell ingest counters equal the batch inverted-file
-    // build (same centroids, same rounded-cosine argmin, same
-    // tie-break)
-    "q_st21_stream_ann_ingest" ->
-      """WITH cent AS (
-        |  SELECT vec_id AS cent_id, CAST(embedding AS DOUBLE[]) AS cvec
-        |  FROM embeddings WHERE vec_id % 50 = 7 AND vec_id < 1000000000),
-        |corp AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |r AS (
-        |  SELECT vec_id, cent_id,
-        |         row_number() OVER (PARTITION BY vec_id
-        |           ORDER BY round(list_cosine_similarity(cv, cvec), 4) DESC,
-        |                    cent_id) AS rk
-        |  FROM corp, cent),
-        |asg AS (SELECT vec_id, cent_id AS cell FROM r WHERE rk = 1)
-        |SELECT CAST(cell AS BIGINT) AS cell, count(*) AS n,
-        |       CAST(sum(vec_id) AS BIGINT) AS id_sum
-        |FROM asg GROUP BY 1""".stripMargin,
-
-    // streamed count state + one DP release at emission equals the
-    // batch mechanism exactly (same keyed hash draw, same epsilon)
-    "q_st22_stream_dp_counts" -> ExtQueries.oracleSql("q_ext_dp_counts"),
-
-    // single-batch stream linkage == the batch operator: the oracle
-    // replays the batch linkage and folds the same BIGINT digest
-    "q_st23_stream_linkage" ->
-      (s"WITH lk AS (\n${ExtQueries.oracleSql("q_ext_record_linkage")}\n)" +
-        """
-          |SELECT count(*) AS n_pairs,
-          |       CAST(1 AS BIGINT) AS stream_matches_batch,
-          |       CAST(sum(score) AS BIGINT) AS score_sum,
-          |       CAST(sum(CASE WHEN verdict = 'match' THEN 1 ELSE 0 END)
-          |            AS BIGINT) AS n_match
-          |FROM lk""".stripMargin),
-
-    // streamed tombstone filter equals the batch anti-join
-    "q_st19_stream_tombstone" ->
-      """SELECT count(*) AS n_kept,
-        |       CAST(sum(doc_id) AS BIGINT) AS key_sum
-        |FROM documents WHERE doc_id % 37 <> 0""".stripMargin,
-
-    // Multi-batch near-dup ingest over the disjoint-vocabulary duplicate
-    // classes: batch-1 ids < batch-2 ids, so the greedy stream result
-    // (store probe + per-batch min-id canonical) IS the global min id
-    // per duplicate class. Classes are exact text groups by fixture
-    // construction (distinct vocabularies; no cross-class overlap).
-    "q_st20_stream_neardup_order" -> {
-      val d = graft.io.VerifyFixtures.streamNearDupDir
-      s"""SELECT min(CAST(id AS BIGINT)) AS doc_id,
-         |       substring(md5(text), 1, 16) AS fp
-         |FROM read_csv('$d/*.csv', header=true, all_varchar=true)
-         |GROUP BY text""".stripMargin
-    },
-
-    // The streamed MG summary satisfies the same order-independent
-    // contract as the batch aggregate — one oracle, two engines.
-    "q_st12_stream_heavy_hitters" -> ExtQueries.oracleSql("q_ext_heavy_hitters"),
-
-    // Stream-static anomaly scoring: live rows against the frozen batch
-    // climatology — must equal the batch join row-for-row.
-    "q_st14_stream_climatology" ->
-      """WITH p AS (
-        |  SELECT event_type, CAST(hour(ts) AS INT) AS hour,
-        |         round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
-        |                 AS DOUBLE) / count(*), 6) AS clim_mean
-        |  FROM events GROUP BY 1, 2),
-        |e AS (
-        |  SELECT event_type, event_id, CAST(hour(ts) AS INT) AS hour,
-        |         round(CAST(value AS DOUBLE), 6) AS value_r
-        |  FROM events WHERE event_id % 13 = 0)
-        |SELECT e.event_type, e.event_id, e.hour, e.value_r, p.clim_mean,
-        |       round(e.value_r - p.clim_mean, 6) AS anomaly
-        |FROM e JOIN p USING (event_type, hour)""".stripMargin,
-
-    // The streamed radius join equals the batch brute-force join: the
-    // grid only prefilters, the rounded haversine decides.
-    "q_st15_stream_radius" ->
-      """WITH pr AS (
-        |  SELECT event_id AS id,
-        |         -11.0 + (user_id * 43 % 2200) / 100.0 AS lat,
-        |         95.0 + (user_id * 61 % 4600) / 100.0 AS lon
-        |  FROM events WHERE event_id % 29 = 0),
-        |st AS (
-        |  SELECT s_suppkey AS station_id,
-        |         -11.0 + (s_suppkey * 37 % 2200) / 100.0 AS s_lat,
-        |         95.0 + (s_suppkey * 53 % 4600) / 100.0 AS s_lon
-        |  FROM supplier),
-        |d AS (
-        |  SELECT id, station_id,
-        |         round(12742.0176 * asin(sqrt(
-        |           sin(radians(s_lat - lat) / 2.0) * sin(radians(s_lat - lat) / 2.0)
-        |           + cos(radians(lat)) * cos(radians(s_lat))
-        |             * sin(radians(s_lon - lon) / 2.0)
-        |             * sin(radians(s_lon - lon) / 2.0))), 6) AS dist_km
-        |  FROM pr, st)
-        |SELECT id, station_id, dist_km FROM d WHERE dist_km <= 150.0""".stripMargin,
-
-    // The streamed complete-mode reliability curve equals the batch
-    // curve: same md5-noise score, same bins, same decimal sums.
-    "q_st16_stream_reliability" -> {
-      def hx(i: Int) =
-        s"(strpos('0123456789abcdef', substring(md5('rel' || CAST(event_id AS VARCHAR)), $i, 1)) - 1)"
-      s"""WITH sc AS (
-         |  SELECT CAST(${hx(1)} * 256 + ${hx(2)} * 16 + ${hx(3)}
-         |           AS DOUBLE) / 4096.0 AS score,
-         |         value >= 50.0 AS good
-         |  FROM events),
-         |j AS (
-         |  SELECT CAST(least(CAST(floor(score * 10) AS INT), 9) AS BIGINT)
-         |           AS bin,
-         |         CAST(round(score, 6) AS DECIMAL(18,6)) AS s,
-         |         CASE WHEN good THEN 1 ELSE 0 END AS pos
-         |  FROM sc)
-         |SELECT bin, count(*) AS n,
-         |       round(CAST(sum(s) AS DOUBLE) / count(*), 6) AS mean_score,
-         |       round(CAST(sum(pos) AS DOUBLE) / count(*), 6) AS pos_rate
-         |FROM j GROUP BY 1""".stripMargin
-    },
-
-    // The stream-ingested histogram store answers range quantiles
-    // identically to binning the raw rows in SQL (exact integer merge).
-    "q_st17_stream_quantile_ingest" ->
-      """WITH raw AS (
-        |  SELECT round(value, 6) AS v FROM events
-        |  WHERE value IS NOT NULL
-        |    AND CAST(ts AS DATE) BETWEEN DATE '2024-01-08' AND DATE '2024-01-22'),
-        |b AS (
-        |  SELECT CAST(least(greatest(floor((v - 0.0) / 2.0), 0), 249)
-        |    AS BIGINT) AS bin
-        |  FROM raw),
-        |agg AS (SELECT bin, count(*) AS cnt FROM b GROUP BY 1),
-        |cum AS (
-        |  SELECT a.bin, a.cnt, CAST(sum(b2.cnt) AS BIGINT) AS cum
-        |  FROM agg a JOIN agg b2 ON b2.bin <= a.bin GROUP BY 1, 2),
-        |nn AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM agg),
-        |q AS (SELECT CAST(unnest([50, 90, 99]) AS INT) AS q_pct),
-        |tg AS (
-        |  SELECT q_pct, nn.n,
-        |         (CAST(q_pct AS BIGINT) * nn.n + 99) // 100 AS t
-        |  FROM q, nn)
-        |SELECT tg.q_pct, tg.n,
-        |       round(0.0 + 2.0 * c.bin
-        |         + 2.0 * CAST(tg.t - (c.cum - c.cnt) AS DOUBLE) / c.cnt,
-        |         6) AS est
-        |FROM cum c JOIN tg ON c.cum >= tg.t AND c.cum - c.cnt < tg.t""".stripMargin,
-
-    // Streaming approx-distinct: exact per-window counts hash-checked;
-    // the sketch's accuracy contract asserted TRUE.
-    "q_st13_stream_distinct" ->
-      """SELECT CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS bucket_start,
-        |       event_type, count(DISTINCT user_id) AS n_exact,
-        |       CAST(1 AS BIGINT) AS est_ok
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // Left-outer interval join: matched pairs = the batch join;
-    // null-padded rows only for clicks whose match window closed below
-    // the final watermark. Spark's global watermark is the MINIMUM over
-    // each input stream's own max event time minus the delay — NOT the
-    // max over all events: a side whose events stop early holds the
-    // global watermark back, and its own tail rows never see their
-    // window close. The oracle must model the min-of-sides form or it
-    // over-evicts exactly when the two sides' maxima diverge by more
-    // than the join window (observed at sf0.001: the last click is
-    // 3.9 h older than the last purchase).
-    "q_st11_stream_join_outer" ->
-      """WITH m AS (SELECT least(
-        |  (SELECT epoch_ms(max(ts)) FROM events WHERE event_type = 'click'),
-        |  (SELECT epoch_ms(max(ts)) FROM events WHERE event_type = 'purchase')) AS mxms),
-        |c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-        |      FROM events WHERE event_type = 'click'),
-        |p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
-        |      FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        |  SELECT c.click_id, p.purchase_id, c.click_ts
-        |  FROM c LEFT JOIN p ON p.user_id = c.user_id
-        |    AND p.purchase_ts >= c.click_ts
-        |    AND p.purchase_ts <= c.click_ts + INTERVAL 600 SECONDS)
-        |SELECT click_id, purchase_id FROM j, m
-        |WHERE purchase_id IS NOT NULL
-        |   OR epoch_us(click_ts) + 600000000 < (mxms - 1800500) * 1000""".stripMargin,
-
-    // Stream-static broadcast enrichment == the batch join.
-    "q_st4_stream_enrich" ->
-      """SELECT event_id, n_name
-        |FROM events JOIN nation ON n_nationkey = user_id % 25""".stripMargin,
-
-    // The parquet-sink stream's committed output == the batch projection.
-    "q_st5_stream_file_sink" ->
-      "SELECT doc_id, substring(md5(text), 1, 16) AS fp FROM documents",
-
-    // Native session_window == batch gap-sessionization. The boundary
-    // rule, measured not assumed: Spark merges sessions whose intervals
-    // TOUCH (next.start <= current.end, inclusive — MergingSessions
-    // semantics), so an event at EXACTLY prev + gap stays in the SAME
-    // session and the batch spelling is `diff > 1800`, not `>=`. The
-    // `>=` spelling survived four rounds because no exact-1800 s pair
-    // existed below sf0.1 (user 511's pair there is the witness) —
-    // the q_st11 class again: distribution-dependent oracle bugs are
-    // invisible at a single SF; the 3-SF sweep is the defense.
-    // The streaming near-dup ingest's single-batch run must equal the
-    // one-shot batch pipeline; the in-plan comparison collapses to
-    // these pinned booleans (sketch values are not SQL-expressible).
-    "q_st8_stream_neardup" ->
-      """SELECT CAST(1 AS BIGINT) AS any_rows,
-        |       CAST(1 AS BIGINT) AS stream_matches_batch,
-        |       CAST(1 AS BIGINT) AS store_has_bands""".stripMargin,
-
-    "q_st7_session_window" ->
-      """WITH e AS (
-        |  SELECT user_id,
-        |         CAST(floor(epoch(date_trunc('second', ts))) AS BIGINT) AS sec
-        |  FROM events),
-        |m AS (
-        |  SELECT user_id, sec,
-        |         CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec)
-        |                   > 1800
-        |              THEN 1 ELSE 0 END AS brk
-        |  FROM e),
-        |s AS (
-        |  SELECT user_id, sec,
-        |         sum(brk) OVER (PARTITION BY user_id ORDER BY sec
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM m)
-        |SELECT user_id, min(sec) AS session_start, count(*) AS n_events
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-
-    // The stream-stream interval join's emitted set == the batch
-    // interval join (AvailableNow delivers everything in-watermark).
-    "q_st6_stream_join" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 600 SECONDS""".stripMargin,
-  )
 }

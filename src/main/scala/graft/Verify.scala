@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Driver-run correctness dump: each [[SparkEntry.registry]] query's
+  * result → parquet, plus oracle_sql.json, for the driver's DuckDB compare.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -20,45 +20,34 @@ object Verify {
       .map(_.split(",").map(_.trim).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val qs = SparkEntry.registry.values.filter(q => keep(q.name)).toSeq
+    qs.foreach { q =>
+      System.err.println(s"[verify] running ${q.name}")
+      try q.plan(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += q.name
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // Crash-loudness contract: a crashed query is simply ABSENT from the
     // driver's correctness JSON, and nothing downstream would notice the
     // declared surface silently shrank. Reconcile dumps against the
     // declared query map and leave a machine-readable diff in-tree.
-    val declared = SparkEntry.queries.keys.filter(keep).toSeq.sorted
+    val declared = qs.map(_.name).sorted
     val missing = declared.filterNot(n =>
       Files.exists(Paths.get(s"$outDir/$n/_SUCCESS")))
     Files.writeString(Paths.get(s"$outDir/_verify_manifest.json"),
       s"""{"declared": ${declared.size}, "dumped": ${declared.size - missing.size},""" +
-        s""" "missing": [${missing.map("\"" + _ + "\"").mkString(", ")}]}""")
+        s""" "missing": [${missing.map(Json.str).mkString(", ")}]}""")
     if (missing.nonEmpty)
       System.err.println(
         s"[verify] INCOMPLETE: ${missing.size}/${declared.size} declared " +
           s"queries wrote no output: ${missing.mkString(", ")}")
     else
       System.err.println(s"[verify] complete: ${declared.size}/${declared.size} dumped")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = qs.flatMap(q => q.oracle.map(sql => s"${Json.str(q.name)}: ${Json.str(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,7 +1,8 @@
 package graft.io
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -45,7 +46,9 @@ object Sinks {
   /** S8: long-format cube sink — parquet partitioned by station so
     * per-station reads prune partitions, with time carried both as
     * timestamp and epoch seconds (the NetCDF encoding), plus a JSON
-    * metadata sidecar holding the CF attributes.
+    * metadata sidecar holding the CF attributes. The sidecar is written
+    * through the path's Hadoop `FileSystem`, so it lands beside the part
+    * files for a `file:` URI or any other scheme the parquet write takes.
     */
   def writeCube(df: DataFrame, path: String, attrs: Map[String, String] = cfAttributes()): Unit = {
     val withEpoch = df
@@ -54,9 +57,10 @@ object Sinks {
     val json = attrs.toSeq.sortBy(_._1)
       .map { case (k, v) => s"""  "${k}": "${v}"""" }
       .mkString("{\n", ",\n", "\n}")
-    Files.createDirectories(Paths.get(path))
-    Files.write(Paths.get(s"$path/_attributes.json"), json.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    val sidecar = new Path(path, "_attributes.json")
+    val out = sidecar.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .create(sidecar, true)
+    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
   /** S8 binary-fidelity variant: the compiled cube as an actual NetCDF

@@ -42,24 +42,6 @@ object Funnel {
     acc
   }
 
-  /** Daily cohort retention: users grouped by first-active day, counted
-    * on each later active day — the classic retention triangle, long
-    * format (cohort, day_offset, n_users).
-    *
-    * Scale shape: activity is first reduced to distinct (user, day)
-    * pairs (the partial-aggregated distinct keeps the shuffle at one
-    * row per user-day), cohorts are one more aggregate on the same key,
-    * and the final count needs no distinct because (user, day) is
-    * already unique within each (cohort, offset) group.
-    */
-  def retention(df: DataFrame, userCol: String, tsCol: String): DataFrame = {
-    val acts = df.select(col(userCol).as("u"), to_date(col(tsCol)).as("d")).distinct()
-    val cohorts = acts.groupBy("u").agg(min(col("d")).as("cohort"))
-    acts.join(cohorts, "u")
-      .groupBy(col("cohort"), datediff(col("d"), col("cohort")).cast("long").as("day_offset"))
-      .agg(count(lit(1)).as("n_users"))
-  }
-
   /** The funnel report: one row per step with the user count that
     * reached it, in long format (step, event_type, n_users).
     */

@@ -27,6 +27,17 @@ class SinksSpec extends SparkTestBase {
     assert(pruned.select("time_epoch").as[Long].head() === 1704067200L)
   }
 
+  test("cube sink: a file: URI gets _attributes.json beside the part files") {
+    val cube = Seq(("aaa", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
+      .toDF("station", "time_utc", "GHI")
+    val dir = Files.createTempDirectory("graft-sink").resolve("cube")
+    Sinks.writeCube(cube, "file:" + dir)
+    assert(Files.isDirectory(dir.resolve("station=aaa")))
+    val attrs = dir.resolve("_attributes.json")
+    assert(Files.exists(attrs), s"no sidecar in $dir")
+    assert(Files.readString(attrs).contains("\"Conventions\": \"CF-1.8\""))
+  }
+
   /** Visible files of a sink directory with their lines (`part-` names
     * cut to the prefix, checksums skipped).
     */

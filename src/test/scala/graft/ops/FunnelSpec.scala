@@ -21,20 +21,6 @@ class FunnelSpec extends SparkTestBase {
     assert(got === Set((0, "view", 3L), (1, "click", 2L), (2, "purchase", 1L)))
   }
 
-  test("retention: cohort by first day, counted per later active day") {
-    val day = 86400L
-    val events = Seq(
-      (1L, ts(10)), (1L, ts(10 + day)), (1L, ts(15 + 2 * day)), // day0 cohort, 3 days
-      (2L, ts(20)), (2L, ts(25)),                               // day0 cohort, day0 only
-      (3L, ts(30 + day))                                        // day1 cohort
-    ).toDF("user_id", "ts")
-    val got = Funnel.retention(events, "user_id", "ts")
-      .collect().map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2))).toSet
-    assert(got === Set(
-      ("1970-01-01", 0L, 2L), ("1970-01-01", 1L, 1L), ("1970-01-01", 2L, 1L),
-      ("1970-01-02", 0L, 1L)))
-  }
-
   test("funnelTimes: same-timestamp events do not satisfy 'after'") {
     val events = Seq(
       (1L, "view", ts(5)), (1L, "click", ts(5))
