@@ -1186,7 +1186,7 @@ object ExtQueries {
 
     // Three chained iterations (k-means-3): the training PAYOFF query —
     // measured recall on this fixture rises 0.617 -> 0.717 vs the
-    // sampled quantizer (tools.LloydProbe; IvfTrainedSpec pins the
+    // sampled quantizer (IvfTrainedSpec pins the
     // strict improvement). Oracle = the same iteration chain unrolled
     // in generated SQL.
     Q("q_ext_ann_ivf_trained3", (s, dir) => {
@@ -1309,7 +1309,6 @@ object ExtQueries {
     // int8 embedding quantization: per-vector digests (step, code sum,
     // cosine of original vs dequantized — the ANN-relevant fidelity).
     Q("q_ext_quantize", (s, dir) => {
-      graft.functions.VectorExpressions.register(s)
       val emb = Tables.embeddings(s, dir)
       val q = Similarity.quantizeInt8(col("embedding"))
       emb.select(col("vec_id"), q.as("q"),
@@ -1741,9 +1740,8 @@ object ExtQueries {
     // The SQL entry point end-to-end: registered tables + the engine's
     // native vec_cosine expression driven purely from SQL text (the
     // extension registers it into every session via
-    // spark.sql.extensions; register() below covers bare sessions).
+    // spark.sql.extensions).
     Q("q_ext_sql_api", (s, dir) => {
-      graft.functions.VectorExpressions.register(s)
       Tables.embeddings(s, dir).createOrReplaceTempView("g_emb")
       s.sql("""
         SELECT a.vec_id,

@@ -39,13 +39,12 @@ object IvfStore {
     * oracle-replayable.
     */
   def assign(vecs: DataFrame, centroids: DataFrame, simScale: Int = 4): DataFrame = {
-    val cos = Similarity.safeCosine(vecs) _
     val cents = broadcast(centroids.select(col("id").as("cent_id"),
       Similarity.asDouble(col("vec")).as("cvec")))
     val w = Window.partitionBy("id").orderBy(col("csim").desc, col("cent_id"))
     vecs.select(col("id"), Similarity.asDouble(col("vec")).as("cv"))
       .crossJoin(cents)
-      .withColumn("csim", round(cos(col("cv"), col("cvec")), simScale))
+      .withColumn("csim", round(Similarity.safeCosine(col("cv"), col("cvec")), simScale))
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") <= 1)
       .select(col("id"), col("cv").as("vec"), col("cent_id").as("cell"))
@@ -88,7 +87,6 @@ object IvfStore {
   def searchStore(spark: SparkSession, queries: DataFrame, store: String,
       k: Int, nProbe: Int, simScale: Int = 4): DataFrame = {
     val postings = spark.table(s"${store}_postings")
-    val cos = Similarity.safeCosine(postings) _
     val cents = broadcast(spark.table(s"${store}_centroids")
       .select(col("id").as("cent_id"), col("vec").as("cvec")))
     val probeW = Window.partitionBy("query_id")
@@ -96,14 +94,14 @@ object IvfStore {
     val probes = broadcast(queries
       .select(col("id").as("query_id"), Similarity.asDouble(col("vec")).as("qv"))
       .crossJoin(cents)
-      .withColumn("csim", round(cos(col("qv"), col("cvec")), simScale))
+      .withColumn("csim", round(Similarity.safeCosine(col("qv"), col("cvec")), simScale))
       .withColumn("__r", row_number().over(probeW))
       .filter(col("__r") <= nProbe)
       .select(col("query_id"), col("qv"), col("cent_id").as("cell")))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("id"))
     postings.join(probes, "cell")
       .filter(col("query_id") =!= col("id"))
-      .withColumn("sim", round(cos(col("qv"), col("vec")), simScale))
+      .withColumn("sim", round(Similarity.safeCosine(col("qv"), col("vec")), simScale))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("id").as("neighbor_id"), col("rank"), col("sim"))

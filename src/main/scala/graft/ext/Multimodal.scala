@@ -24,10 +24,11 @@ object Multimodal {
       checksum: Long, width: Int, height: Int)
 
   /** Read real files as binary payloads via Spark's binaryFile source
-    * (path, modificationTime, length, content).
+    * (path, modificationTime, length, content). The glob is expanded on
+    * the driver ([[graft.io.Globs]]).
     */
   def readBinaryFiles(spark: SparkSession, pathGlob: String): DataFrame =
-    spark.read.format("binaryFile").load(pathGlob)
+    spark.read.format("binaryFile").load(graft.io.Globs.expand(spark, pathGlob): _*)
 
   /** Attach an opaque binary payload + metadata struct to a text frame —
     * the canonical "multimodal table" shape: id, binary, typed metadata.

@@ -73,7 +73,6 @@ object Pq {
   def encode(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, mSub: Int, subDim: Int,
       simScale: Int = 4): DataFrame = {
-    val cos = Similarity.safeCosine(corpus) _
     val subs = (0 until mSub).map { m =>
       corpus.select(col(idCol).as("vec_id"), lit(m).as("sub"),
         Similarity.asDouble(subVec(col(vecCol), m, subDim)).as("sv"))
@@ -81,7 +80,7 @@ object Pq {
     val w = Window.partitionBy("vec_id", "sub")
       .orderBy(col("csim").desc, col("cent_id"))
     subs.join(broadcast(codebooks), Seq("sub"))
-      .withColumn("csim", round(cos(col("sv"), col("cvec")), simScale))
+      .withColumn("csim", round(Similarity.safeCosine(col("sv"), col("cvec")), simScale))
       .withColumn("r", row_number().over(w))
       .filter(col("r") === 1)
       .select(col("vec_id"), col("sub"), col("cent_id").as("code"))
@@ -94,7 +93,6 @@ object Pq {
     */
   def adcTopK(queries: DataFrame, codes: DataFrame, codebooks: DataFrame,
       k: Int, mSub: Int, subDim: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
     val qsubs = (0 until mSub).map { m =>
       queries.select(col("id").as("query_id"), lit(m).as("sub"),
         Similarity.asDouble(subVec(col("vec"), m, subDim)).as("qsv"))

@@ -47,16 +47,8 @@ object Similarity {
     when(denom > 0.0, dot(a, b) / denom).otherwise(lit(-1.0))
   }
 
-  /** Codegen'd cosine; registers the native functions on the frame's
-    * session on first use.
-    */
-  private[ext] def fastCosine(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    graft.functions.VectorExpressions.vecCosine(a, b)
-  }
-
-  /** [[fastCosine]] with the zero-norm guard every RANKED cosine must
-    * use: a zero-norm operand gives 0/0 = NaN, and NaN ORDERS
+  /** The codegen'd native cosine with the zero-norm guard every RANKED
+    * cosine must use: a zero-norm operand gives 0/0 = NaN, and NaN ORDERS
     * DIFFERENTLY per argmin spelling — first under a `csim DESC`
     * window, last under `min(struct(-csim, …))`, ignored by a
     * strict-`>` fold — so one degenerate embedding would silently pick
@@ -68,8 +60,8 @@ object Similarity {
     * input — a zero vector ties all centroids at -1.0 and the
     * ascending-id tie-break resolves identically everywhere.
     */
-  private[ext] def safeCosine(df: DataFrame)(a: Column, b: Column): Column =
-    nanvl(fastCosine(df)(a, b), lit(-1.0))
+  private[ext] def safeCosine(a: Column, b: Column): Column =
+    nanvl(graft.functions.VectorExpressions.vecCosine(a, b), lit(-1.0))
 
   /** Sign-bit bucket from the first `bits` dimensions: the LSH family
     * h(v) = sign(v·e_i). Deterministic, no trained state; swap the
@@ -107,7 +99,7 @@ object Similarity {
     val c = corpus.select(col("id").as("neighbor_id"), asDouble(col("vec")).as("cv"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(safeCosine(corpus)(col("qv"), col("cv")), simScale))
+      .withColumn("sim", round(safeCosine(col("qv"), col("cv")), simScale))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -126,7 +118,6 @@ object Similarity {
       dotScale: Int = 4): DataFrame = {
     val q = queries.select(col("id").as("query_id"), asDouble(col("vec")).as("qv"))
     val c = corpus.select(col("id").as("neighbor_id"), asDouble(col("vec")).as("cv"))
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", round(
@@ -184,7 +175,7 @@ object Similarity {
       asDouble(col("vec")).as("cv"), col("label").as("__cl"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("__ql") =!= col("__cl"))
-      .withColumn("sim", round(safeCosine(corpus)(col("qv"), col("cv")), simScale))
+      .withColumn("sim", round(safeCosine(col("qv"), col("cv")), simScale))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -221,7 +212,7 @@ object Similarity {
       .withColumn("bucket", bucketOf(col("cv")))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(safeCosine(corpus)(col("qv"), col("cv")), simScale))
+      .withColumn("sim", round(safeCosine(col("qv"), col("cv")), simScale))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -252,7 +243,6 @@ object Similarity {
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       k: Int, nProbe: Int, simScale: Int = 4): DataFrame = {
-    val cos = safeCosine(corpus) _
     val cents = broadcast(
       centroids.select(col("id").as("cent_id"), asDouble(col("vec")).as("cvec")))
 
@@ -260,7 +250,7 @@ object Similarity {
     // row_number window so the engine's own TopKPerKey operator executes
     // it (bounded heap; ≤1 row per vector per map partition reaches the
     // exchange). Audited against the min(struct) SortAggregate argmin on
-    // a 10×-replicated sf0.1 corpus (tools.AssignProbe): 0.90 s vs
+    // a 10×-replicated sf0.1 corpus (SCALE.md, round 7): 0.90 s vs
     // 0.78 s warm, identical assignments — both map-side-bounded; kept
     // as the window form here to exercise the operator, semDeDup keeps
     // the argmin form.
@@ -269,7 +259,7 @@ object Similarity {
     val assigned = corpus
       .select(col("id").as("neighbor_id"), asDouble(col("vec")).as("cv"))
       .crossJoin(cents)
-      .withColumn("csim", round(cos(col("cv"), col("cvec")), simScale))
+      .withColumn("csim", round(safeCosine(col("cv"), col("cvec")), simScale))
       .withColumn("cent_rank", row_number().over(assignW))
       .filter(col("cent_rank") <= 1)
       .select(col("neighbor_id"), col("cv"), col("cent_id").as("cell"))
@@ -279,14 +269,14 @@ object Similarity {
     val probes = broadcast(queries
       .select(col("id").as("query_id"), asDouble(col("vec")).as("qv"))
       .crossJoin(cents)
-      .withColumn("csim", round(cos(col("qv"), col("cvec")), simScale))
+      .withColumn("csim", round(safeCosine(col("qv"), col("cvec")), simScale))
       .withColumn("probe_rank", row_number().over(probeW))
       .filter(col("probe_rank") <= nProbe)
       .select(col("query_id"), col("qv"), col("cent_id").as("cell")))
 
     val scored = assigned.join(probes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(cos(col("qv"), col("cv")), simScale))
+      .withColumn("sim", round(safeCosine(col("qv"), col("cv")), simScale))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -312,7 +302,6 @@ object Similarity {
   def lloydStep(
       corpus: DataFrame, centroids: DataFrame,
       simScale: Int = 4, dimScale: Int = 6): DataFrame = {
-    val cos = safeCosine(corpus) _
     val cents = broadcast(
       centroids.select(col("id").as("cent_id"), asDouble(col("vec")).as("cvec")))
     val assignW = Window.partitionBy("vid")
@@ -320,7 +309,7 @@ object Similarity {
     val assigned = corpus
       .select(col("id").as("vid"), asDouble(col("vec")).as("cv"))
       .crossJoin(cents)
-      .withColumn("csim", round(cos(col("cv"), col("cvec")), simScale))
+      .withColumn("csim", round(safeCosine(col("cv"), col("cvec")), simScale))
       .withColumn("cent_rank", row_number().over(assignW))
       .filter(col("cent_rank") <= 1)
       .select(col("vid"), col("cv"), col("cent_id").as("cell"))
@@ -340,7 +329,7 @@ object Similarity {
   /** `iters` chained [[lloydStep]]s (k-means-n), each materialized via
     * localCheckpoint so iteration N's plan does not replay 1..N-1 —
     * the bounded-iteration loop shape every distributed k-means uses.
-    * Measured on the sf0.01 fixture (`tools.LloydProbe`): IVF recall
+    * Measured on the sf0.01 fixture (IvfTrainedSpec pins it): IVF recall
     * vs brute force at nProbe=4 goes 0.617 (sampled) → 0.717 after 3
     * iterations.
     */
@@ -384,7 +373,7 @@ object Similarity {
       .withColumn("bucket", signBucket(col("v"), bits))
     v.as("a").join(v.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .withColumn("sim", round(safeCosine(df)(col("a.v"), col("b.v")), simScale))
+      .withColumn("sim", round(safeCosine(col("a.v"), col("b.v")), simScale))
       .filter(col("sim") >= minCosine)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("sim"))
   }
@@ -420,7 +409,6 @@ object Similarity {
       tau: Double, capPerCell: Int = 10000, simScale: Int = 4): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
     require(capPerCell > 1, s"capPerCell must exceed 1, got $capPerCell")
-    val cos = safeCosine(df) _
     val cents = broadcast(
       centroids.select(col("id").as("cent_id"), asDouble(col("vec")).as("cvec")))
     // Nearest-cell assignment as a partial-aggregable min(struct)
@@ -430,13 +418,13 @@ object Similarity {
     // ASC), the same deterministic tie-break the oracle spells with
     // row_number; the vector rides in the last field, never compared
     // (cent_id is unique). Measured vs the TopKPerKey-rewritten window
-    // form on a 10×-replicated sf0.1 corpus (tools.AssignProbe):
+    // form on a 10×-replicated sf0.1 corpus (SCALE.md, round 7):
     // 0.78 s vs 0.90 s warm, identical assignments — both bound the
     // shuffle; the argmin also skips the heap machinery.
     val assigned = df
       .select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
       .crossJoin(cents)
-      .withColumn("csim", round(cos(col("v"), col("cvec")), simScale))
+      .withColumn("csim", round(safeCosine(col("v"), col("cvec")), simScale))
       .groupBy(col("vec_id"))
       .agg(min(struct((-col("csim")).as("nsim"), col("cent_id").as("cell"),
         col("v").as("v"))).as("best"))
@@ -446,7 +434,7 @@ object Similarity {
     val scanned = ranked.filter(col("m_rank") <= capPerCell)
     val dropped = scanned.as("a").join(scanned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .filter(round(cos(col("a.v"), col("b.v")), simScale) >= tau)
+      .filter(round(safeCosine(col("a.v"), col("b.v")), simScale) >= tau)
       .select(col("b.vec_id").as("vec_id")).distinct()
     ranked.join(dropped.as("d"), ranked("vec_id") === col("d.vec_id"), "left")
       .select(ranked("vec_id"), col("cell"),
@@ -478,13 +466,12 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String, centroids: DataFrame,
       minCell: Long, simFloor: Double, simScale: Int = 4): DataFrame = {
     require(minCell >= 1, s"minCell must be >= 1, got $minCell")
-    val cos = safeCosine(df) _
     val cents = broadcast(
       centroids.select(col("id").as("cent_id"), asDouble(col("vec")).as("cvec")))
     val assigned = df
       .select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
       .crossJoin(cents)
-      .withColumn("csim", round(cos(col("v"), col("cvec")), simScale))
+      .withColumn("csim", round(safeCosine(col("v"), col("cvec")), simScale))
       .groupBy(col("vec_id"))
       .agg(min(struct((-col("csim")).as("nsim"), col("cent_id").as("cell")))
         .as("best"))
@@ -560,6 +547,6 @@ object Similarity {
         s => s.getField("centroid")).as("v"))
     vecs.as("a").join(broadcast(vecs.as("b")), col("a.key") < col("b.key"))
       .select(col("a.key").as("key_a"), col("b.key").as("key_b"),
-        round(safeCosine(df)(col("a.v"), col("b.v")), simScale).as("sim"))
+        round(safeCosine(col("a.v"), col("b.v")), simScale).as("sim"))
   }
 }

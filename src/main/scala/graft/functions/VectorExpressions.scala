@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expressions for the similarity-search hot path
@@ -110,16 +110,13 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Register SQL-callable names on a session (idempotent). Column-side
-    * helpers below route through the registry so they work on any
-    * session that called this.
+  /** Column wrappers via the classic Expression↔Column bridge: they
+    * work on any session, and the SQL names `vec_dot` / `vec_cosine`
+    * come only from [[GraftExtensions]].
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-  }
+  def vecDot(a: Column, b: Column): Column = GraftColumnBridge.column(
+    DotProduct(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
-  def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-  def vecCosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
+  def vecCosine(a: Column, b: Column): Column = GraftColumnBridge.column(
+    CosineSimilarity(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

@@ -36,7 +36,10 @@ object Experiments {
         df.select(col(idCol), col(pCol).as("p"))
           .withColumn("one", lit(1L))
           .withColumn("ps", col("p") * lit(4096.0)),
-        "ps", "one", "pfx", chunkSpan = 64L, tieBreak = Seq(idCol))
+        "ps", "one", "pfx", chunkSpan = 64L, tieBreak = Seq(idCol),
+        // one row per hypothesis — data-sized, so it streams through the
+        // scan instead of materializing
+        boundedInput = false)
       .withColumn("i", col("pfx") + lit(1L))
     val m = ranked.agg(count(lit(1)).as("m"))
     val flagged = ranked.crossJoin(broadcast(m))

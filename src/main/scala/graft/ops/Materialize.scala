@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Plan-truncation barrier for BOUNDED intermediates (optimization
   * guide §3.3: "very wide unions/joins of many inputs produce enormous
@@ -33,32 +36,37 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project
 object Materialize {
 
   /** Truncate lineage under a bounded derived frame. Idempotent: a
-    * frame that is already a materialized scan (its logical plan is a
-    * leaf — a prior checkpoint, an in-memory relation) passes through
-    * unchanged instead of being copied again. The same applies through
-    * a chain of DETERMINISTIC row-local operators (Project/Filter) over
-    * such a leaf: re-inlining a cheap projection of already-material
+    * frame whose plan is already material — a checkpointed or persisted
+    * RDD scan (a prior `localCheckpoint`), an in-memory (cached)
+    * relation or a local relation — passes through unchanged instead of
+    * being copied again. The same applies through a chain of
+    * DETERMINISTIC row-local operators (Project/Filter) over such a
+    * leaf: re-inlining a cheap projection of already-material
     * partitions into two consumers duplicates neither meaningful work
     * nor plan text, so paying a checkpoint job for it (r10 shape:
     * Kaplan-Meier re-checkpointed `perT.withColumn(...)` one job after
-    * checkpointing `perT`) is pure overhead. Non-deterministic
-    * projections still checkpoint — two inlined copies of those could
-    * disagree.
+    * checkpointing `perT`) is pure overhead. Any other leaf (a file
+    * scan, a range, an unpersisted RDD) is lazy — each consumer would
+    * re-read it — and non-deterministic projections differ per inlined
+    * copy, so both still checkpoint.
     */
   def bounded(df: DataFrame): DataFrame =
-    // the ANALYZED plan, not `.logical`: Spark 4's withColumn leaves an
-    // UnresolvedStarWithColumns in the raw plan whose contained
-    // unresolved function calls report deterministic=true — resolution
-    // is what reveals a rand()/udf projection as non-deterministic
-    if (cheapOverLeaf(df.queryExecution.analyzed)) df
+    // the ANALYZED plan (with cached frames substituted), not `.logical`:
+    // Spark 4's withColumn leaves an UnresolvedStarWithColumns in the raw
+    // plan whose contained unresolved function calls report
+    // deterministic=true — resolution is what reveals a rand()/udf
+    // projection as non-deterministic
+    if (cheapOverMaterial(df.queryExecution.withCachedData)) df
     else df.localCheckpoint()
 
-  private def cheapOverLeaf(p: LogicalPlan): Boolean = p match {
-    case _ if p.children.isEmpty => true
+  private def cheapOverMaterial(p: LogicalPlan): Boolean = p match {
+    case r: LogicalRDD =>
+      r.rdd.isCheckpointed || r.rdd.getStorageLevel != StorageLevel.NONE
+    case _: InMemoryRelation | _: LocalRelation => true
     case pr: Project =>
-      pr.projectList.forall(_.deterministic) && cheapOverLeaf(pr.child)
-    case f: Filter => f.condition.deterministic && cheapOverLeaf(f.child)
-    case a: SubqueryAlias => cheapOverLeaf(a.child)
+      pr.projectList.forall(_.deterministic) && cheapOverMaterial(pr.child)
+    case f: Filter => f.condition.deterministic && cheapOverMaterial(f.child)
+    case a: SubqueryAlias => cheapOverMaterial(a.child)
     case _ => false
   }
 }

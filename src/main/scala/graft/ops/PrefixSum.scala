@@ -69,8 +69,9 @@ object PrefixSum {
     * sums for the plan cost of one. (A cumulative quota usually needs
     * at least two: the running weight AND the running row count.)
     */
-  /** `boundedInput = true` (the default — every caller but [[graft.ext.Packing]]
-    * passes a domain-bounded value table, not corpus rows) materializes
+  /** `boundedInput = true` (the default — every caller but
+    * [[graft.ext.Packing]] and [[Experiments.bhFdr]] passes a
+    * domain-bounded value table, not corpus rows) materializes
     * the input once behind a plan-truncation barrier: the scan below
     * references it from BOTH the within-chunk window path and the chunk
     * -totals path, so a lazy input's producing subtree would be inlined

@@ -153,7 +153,8 @@ object SolarPipelines {
     * cube. One shuffle-free plan: the union is the multi-file scan, the
     * join is broadcast.
     *
-    * `locations` must carry `station` and `timezone` ('UTC+7') columns.
+    * `locations` must carry `station` and `timezone` ('UTC+7') columns;
+    * `processedGlob` is expanded on the driver ([[graft.io.Globs]]).
     */
   def compileCube(
       spark: SparkSession,
@@ -164,7 +165,7 @@ object SolarPipelines {
     val scanned = spark.read
       .option("header", "true")
       .schema(Schemas.processed10Min)
-      .csv(processedGlob)
+      .csv(graft.io.Globs.expand(spark, processedGlob): _*)
       .withColumn("station_raw", Stations.stationFromFileName(fileNamePattern))
     compileCubeDf(scanned, locations, excludeStations)
   }

@@ -1,6 +1,6 @@
 package org.apache.spark
 
-/** Test access to the listener bus drain (`private[spark]`): a listener's
+/** Access to the listener bus drain (`private[spark]`): a listener's
   * counts are read only after every event posted so far is delivered.
   */
 object ListenerBusDrain {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.io.{Sinks, VerifyFixtures}
+import graft.obs.Profile
 import graft.pipelines.SolarPipelines
 
 /** Job-count guardrail for the station-year ingest path (entry point 1:
@@ -18,8 +19,8 @@ class JobBudgetSpec extends SparkTestBase {
     val out = Files.createTempDirectory("graft-job-budget").resolve("out").toString
     // job 1: scan + partial aggregation; job 2: final aggregation, sort
     // and write in the one coalesced task. The sniff runs on the driver.
-    val (_, jobs) = JobCounter(spark)(
+    val (_, stats) = Profile(spark)(
       Sinks.writeCsv(SolarPipelines.resampleRaw(spark, path), out, Some("time")))
-    assert(jobs === 2)
+    assert(stats.jobs === 2)
   }
 }

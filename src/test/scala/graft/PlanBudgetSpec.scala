@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import graft.obs.Profile
 
 /** Shuffle-budget guardrail for flagship queries: each plan's
   * ShuffleExchange count is pinned to the number its design argues for
@@ -8,10 +8,11 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * hint, a window that stops sharing its sort, an aggregate split in
   * two — fails here long before it shows up as a slow bench at scale.
   *
-  * Counted on the NON-adaptive executed plan (AQE off in a sibling
-  * session): AQE wraps the plan before execution, and exchanges only
-  * exist after EnsureRequirements, so neither `sparkPlan` nor the
-  * adaptive wrapper exposes a stable count.
+  * Counted on the NON-adaptive executed plan by [[Profile.shuffles]].
+  * The queries are also BUILT with AQE off: a `localCheckpoint` taken
+  * while building keeps its plan's output partitioning, which AQE's
+  * final plan can drop (q_ext_entity_resolution's closure rounds then
+  * plan one more exchange).
   */
 class PlanBudgetSpec extends SparkTestBase {
 
@@ -320,10 +321,10 @@ class PlanBudgetSpec extends SparkTestBase {
 
   budgets.foreach { case (name, max, why) =>
     test(s"$name stays within $max shuffle(s): $why") {
-      val plan = SparkEntry.queries(name)(noAqe, sfDir).queryExecution.executedPlan
-      val shuffles = plan.collect { case s: ShuffleExchangeLike => s }
-      assert(shuffles.size <= max,
-        s"$name plans ${shuffles.size} shuffles (budget $max — $why):\n$plan")
+      val n = Profile.shuffles(SparkEntry.queries(name)(noAqe, sfDir))
+      assert(n <= max, s"$name plans $n shuffles (budget $max — $why); " +
+        s"`graft.tools.Probe $name $sfDir spark.sql.adaptive.enabled=false plans=<dir>` " +
+        "writes its plan")
     }
   }
 
@@ -388,15 +389,12 @@ class PlanBudgetSpec extends SparkTestBase {
     */
   test("runningTotals: exchange count is independent of the column count") {
     import org.apache.spark.sql.functions.col
-    def plan(pairs: Seq[(String, String)]) = {
+    def shuffles(pairs: Seq[(String, String)]) = {
       val df = noAqe.range(1000).select(
         col("id").as("ord"), (col("id") % 7).as("v1"),
         (col("id") % 5).as("v2"), (col("id") % 3).as("v3"))
-      graft.ops.PrefixSum.runningTotals(df, "ord", pairs, chunkSpan = 100L)
-        .queryExecution.executedPlan
+      Profile.shuffles(graft.ops.PrefixSum.runningTotals(df, "ord", pairs, chunkSpan = 100L))
     }
-    def shuffles(pairs: Seq[(String, String)]) =
-      plan(pairs).collect { case s: ShuffleExchangeLike => s }.size
     val one = shuffles(Seq("v1" -> "p1"))
     val three = shuffles(Seq("v1" -> "p1", "v2" -> "p2", "v3" -> "p3"))
     assert(three === one,

@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.{JobCounter, SparkTestBase}
+import graft.SparkTestBase
+import graft.obs.Profile
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkTestBase {
@@ -117,10 +118,10 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("wordJaccardPairs with maxDocFreq builds its plan without running a job") {
-    val (frame, jobs) = JobCounter(spark)(
+    val (frame, stats) = Profile(spark)(
       Dedup.wordJaccardPairs(docs, "doc_id", "text", 0.5, maxDocFreq = 0.9))
     assert(frame.columns.toSeq === Seq("id_a", "id_b", "jaccard"))
-    assert(jobs === 0, "operator construction must not run a Spark job")
+    assert(stats.jobs === 0, "operator construction must not run a Spark job")
     // and the pruned plan still finds the exact dup when materialized
     val keys = frame.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(keys.contains((1L, 2L)))

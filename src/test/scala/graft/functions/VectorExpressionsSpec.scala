@@ -14,7 +14,6 @@ class VectorExpressionsSpec extends SparkTestBase {
       Array.fill(64)(rnd.nextFloat() * 2 - 1)))
     val df = vecs.toDF("a", "b")
       .select(Similarity.asDouble($"a").as("a"), Similarity.asDouble($"b").as("b"))
-    VectorExpressions.register(spark)
     val got = df.select(
       VectorExpressions.vecDot($"a", $"b").as("nd"),
       Similarity.dot($"a", $"b").as("hd"),
@@ -27,7 +26,6 @@ class VectorExpressionsSpec extends SparkTestBase {
   }
 
   test("expressions survive codegen (no fallback crash) and SQL registration") {
-    VectorExpressions.register(spark)
     val r = spark.sql(
       "SELECT vec_cosine(CAST(array(1.0,0.0) AS ARRAY<DOUBLE>), CAST(array(1.0,0.0) AS ARRAY<DOUBLE>)) AS c")
       .head().getDouble(0)
@@ -59,8 +57,18 @@ class VectorExpressionsSpec extends SparkTestBase {
     }
   }
 
+  test("a cosine top-k leaves vec_dot's SQL arity check in place") {
+    // the Column API must not re-register the SQL names per session: a
+    // session function would replace the extension's arity-checked one
+    val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.6f, 0.8f))).toDF("id", "vec")
+    assert(Similarity.bruteForceTopK(vecs, vecs, k = 1).count() === 2)
+    val e = intercept[Exception] {
+      spark.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d), array(9.0d))").collect()
+    }
+    assert(e.getMessage.contains("vec_dot takes exactly 2 argument(s), got 3"), e.getMessage)
+  }
+
   test("null input yields null, not a crash") {
-    VectorExpressions.register(spark)
     val r = spark.sql("SELECT vec_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS d").head()
     assert(r.isNullAt(0))
   }

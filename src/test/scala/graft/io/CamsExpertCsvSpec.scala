@@ -2,7 +2,8 @@ package graft.io
 
 import java.nio.file.{Files, Path}
 
-import graft.{JobCounter, SparkTestBase}
+import graft.SparkTestBase
+import graft.obs.Profile
 
 /** The driver-side csv_expert header sniff: any preamble length, any
   * path form the reader accepts, a named error without a header, and no
@@ -58,8 +59,8 @@ class CamsExpertCsvSpec extends SparkTestBase {
 
   test("sniffHeader starts no Spark job") {
     val p = write(tmp, "raw_jobs.csv", "Observation period;GHI", preamble = 300)
-    val (cols, jobs) = JobCounter(spark)(CamsExpertCsv.sniffHeader(spark, p.toString))
+    val (cols, stats) = Profile(spark)(CamsExpertCsv.sniffHeader(spark, p.toString))
     assert(cols === Seq("Observation period", "GHI"))
-    assert(jobs === 0)
+    assert(stats.jobs === 0)
   }
 }

@@ -7,8 +7,9 @@ import graft.SparkTestBase
 /** Pins the r11 pass-through contract of [[Materialize.bounded]]: a
   * deterministic Project/Filter chain over an already-material leaf is
   * returned unchanged (no second checkpoint job), while anything with
-  * real work under it — or anything non-deterministic, which two
-  * inlined copies could evaluate differently — still checkpoints.
+  * real work under it — a lazy scan, an aggregate, or anything
+  * non-deterministic, which two inlined copies could evaluate
+  * differently — still checkpoints.
   */
 class MaterializeSpec extends SparkTestBase {
   import spark.implicits._
@@ -27,5 +28,27 @@ class MaterializeSpec extends SparkTestBase {
     assert(Materialize.bounded(agg).queryExecution.logical.children.isEmpty)
     val nondet = base.withColumn("r", rand(42))
     assert(!(Materialize.bounded(nondet) eq nondet))
+  }
+
+  test("a deterministic projection over a lazy scan still checkpoints") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-materialize").resolve("t").toString
+    Seq((1L, 2L), (3L, 4L)).toDF("a", "b").write.parquet(dir)
+    val scan = spark.read.parquet(dir).select((col("a") + col("b")).as("c"))
+    val kept = Materialize.bounded(scan)
+    assert(!(kept eq scan))
+    assert(kept.queryExecution.logical.children.isEmpty)
+    assert(kept.as[Long].collect().sorted.toSeq === Seq(3L, 7L))
+    val range = spark.range(4).select((col("id") * 2).as("d"))
+    assert(!(Materialize.bounded(range) eq range))
+  }
+
+  test("local and cached relations are material and pass through") {
+    val local = Seq((1L, 2L)).toDF("a", "b").filter(col("a") > 0)
+    assert(Materialize.bounded(local) eq local)
+    val cached = spark.range(4).toDF("a").cache()
+    try {
+      val derived = cached.withColumn("b", col("a") + 1)
+      assert(Materialize.bounded(derived) eq derived)
+    } finally cached.unpersist()
   }
 }

@@ -1,0 +1,28 @@
+package graft.tools
+
+import scala.collection.mutable.ArrayBuffer
+
+import graft.SparkTestBase
+
+/** Smoke case for the probe entry point: one query, one dir, one
+  * iteration gives one parseable line.
+  */
+class ProbeSpec extends SparkTestBase {
+
+  test("Probe prints one parseable line per query, dir and iteration") {
+    val dir = "/root/testdata/sf0.001"
+    val lines = ArrayBuffer[String]()
+    Probe.run(spark, Seq("q_a1_resample", dir, "1"))(lines += _)
+    val Line = ("""\[probe\] q_a1_resample (\S+) iter1 wall=([\d.]+)s heap=\d+M->\d+M """ +
+      """jobs=(\d+) stages=(\d+) tasks=(\d+) taskTime=[\d.]+s gc=[\d.]+s """ +
+      """shufR=[\d.]+MB shufW=[\d.]+MB shuffles=(\d+)""").r
+    lines.toSeq match {
+      case Seq(Line(d, wall, jobs, stages, tasks, shuffles)) =>
+        assert(d === dir)
+        assert(wall.toDouble > 0.0)
+        assert(jobs.toInt >= 1 && stages.toInt >= jobs.toInt && tasks.toInt >= stages.toInt)
+        assert(shuffles.toInt === 1)
+      case other => fail(s"unexpected probe output: $other")
+    }
+  }
+}

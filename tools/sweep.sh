@@ -20,4 +20,9 @@ for sf in sf0.001 sf0.01 sf0.1; do
   python3 tools/check_oracle.py "/root/testdata/$sf" "$out" \
     > "${out}.oracle.txt" 2>&1 || true
   echo "=== $sf: $(grep -c '^OK ' "${out}.oracle.txt" || true) OK / $(grep -c '^FAIL' "${out}.oracle.txt" || true) FAIL  (${out}.oracle.txt)"
+  # dumped/declared from Verify's manifest, and the Exception lines in the
+  # Verify log: a passing run logs none
+  python3 -c 'import json, sys; m = json.load(open(sys.argv[1])); print("    dumped %d/%d" % (m["dumped"], m["declared"]))' \
+    "$out/_verify_manifest.json" || echo "    no manifest in $out"
+  echo "    $(grep -c 'Exception' "${out}.log" || true) Exception lines  (${out}.log)"
 done
