@@ -166,21 +166,27 @@ object Bench {
       q.name -> timeQuery(q, spark, dir, cheapIters, expensiveIters))
 
   /** `{name: seconds}` of every query. */
-  private def secondsJson(timed: Seq[(String, Timed)]): String =
-    timed.map { case (k, t) => Json.str(k) + ":" + t.seconds }.mkString("{", ",", "}")
+  private def secondsJson(timed: Seq[(String, Timed)]): Json.Obj =
+    Json.Obj(timed.map { case (k, t) => k -> t.seconds })
 
   /** GC seconds seen during each query's REPORTED run (≥0.1 s only —
     * the quiet majority would triple the artifact for no signal).
     */
-  private def gcJson(timed: Seq[(String, Timed)]): String =
-    timed.filter(_._2.gc >= 0.1)
-      .map { case (k, t) => Json.str(k) + ":" + math.rint(t.gc * 100) / 100 }
-      .mkString("{", ",", "}")
+  private def gcJson(timed: Seq[(String, Timed)]): Json.Obj =
+    Json.Obj(timed.filter(_._2.gc >= 0.1).map { case (k, t) => k -> math.rint(t.gc * 100) / 100 })
 
   /** `{name: "Class: first line of message"}` of every failed query. */
-  private[graft] def errorsJson(timed: Seq[(String, Timed)]): String =
-    timed.collect { case (k, Timed(_, _, Some(e))) => Json.str(k) + ":" + Json.str(e) }
-      .mkString("{", ",", "}")
+  private[graft] def errorsJson(timed: Seq[(String, Timed)]): Json.Obj =
+    Json.Obj(timed.collect { case (k, Timed(_, _, Some(e))) => k -> e })
+
+  /** The per-query timing policy, recorded in the artifact so cross-round
+    * totals aren't silently compared across methodologies (round 6
+    * switched long queries from median-of-3 to min-of-<=2; round 10
+    * extended min-of-2 to the scaled leg's long queries — r9's
+    * single-measured leg let one GC storm write ±50% into the
+    * artifact, VERDICT r9 "What's wrong #2").
+    */
+  private val timing = "timing" -> s"min>=${LongQueryS}s/median<${LongQueryS}s/scaled-min-of-2"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -197,69 +203,66 @@ object Bench {
     val timed = timeAll(SparkEntry.registry.values.toSeq, spark, sfDir,
       cheapIters = iters, expensiveIters = 2)
     val results = timed.map { case (k, t) => k -> t.seconds }
-    val total = if (results.nonEmpty) results.map(_._2).filter(_ >= 0).sum else 0.0
     val (scaled, scaledResults, scaledGcs) = scaledBlock(spark, sfDir)
-    // record the per-query timing policy in the artifact so cross-round
-    // totals aren't silently compared across methodologies (round 6
-    // switched long queries from median-of-3 to min-of-<=2; round 10
-    // extended min-of-2 to the scaled leg's long queries — r9's
-    // single-measured leg let one GC storm write ±50% into the
-    // artifact, VERDICT r9 "What's wrong #2")
-    val timing = s""""timing":"min>=${LongQueryS}s/median<${LongQueryS}s/scaled-min-of-2""""
-    val prepJson = prepFailed.toSeq.sorted.map(Json.str).mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",$timing,"prep_failed":$prepJson,"queries":${secondsJson(timed)},"gc_sec":${gcJson(timed)},"errors":${errorsJson(timed)},"sf":"$sfDir"$scaled}"""
-    // The driver preserves only a ~2 KB TAIL of stdout, and the full
-    // line is ~11 KB — in rounds 1–5 the capture truncated it from the
-    // front and every parse came back null. So stdout gets a COMPACT
-    // line (the contract fields, `queries` restricted to failures + the
-    // slowest 12 — what a reader triages first) that fits whole inside
-    // a 2 KB tail, and the FULL line goes to the committed artifact.
-    val failures = results.filter(_._2 < 0).map(_._1)
-    val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
-    val compactQs = (slow ++ failures.map(_ -> -1.0))
-      .map { case (k, v) => Json.str(k) + ":" + math.rint(v * 1000) / 1000 }
-      .mkString("{", ",", "}")
-    val ratios = worstRatios(results.toMap, scaledResults)
+    val prep = prepFailed.toSeq.sorted
+    val json = Json.Obj(Seq("metric" -> "total", "value" -> total(results), "unit" -> "sec",
+      timing, "prep_failed" -> prep, "queries" -> secondsJson(timed),
+      "gc_sec" -> gcJson(timed), "errors" -> errorsJson(timed), "sf" -> sfDir) ++ scaled)
     // Per-run artifact name (r10 verdict "What's wrong #2"): the
     // driver's 32- and 8-core runs both defaulted to bench_last.json,
     // so the second run clobbered the first's gc evidence. The cpu
     // count is the axis the driver varies, so it keys the default.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_last_c$cpus.json")
-    // Worst GC-seconds entries IN the compact stdout line — the only
-    // artifact the driver durably preserves per run — so a storm's
-    // evidence survives even when the full JSON is overwritten.
-    def gcTop(gs: Seq[(String, Double)]): String = gs.filter(_._2 >= 0.1)
-      .sortBy(-_._2).take(5)
-      .map { case (k, g) => Json.str(k) + ":" + math.rint(g * 100) / 100 }
-      .mkString("{", ",", "}")
-    val gcCompact =
-      s""","gc_top":${gcTop(timed.map { case (k, t) => k -> t.gc })}""" +
-      s""","scaled_gc_top":${gcTop(scaledGcs)}"""
-    val compact = s"""{"metric":"total","value":${math.rint(total * 10) / 10},""" +
-      s""""unit":"sec",$timing,""" +
-      s""""n_queries":${results.size},"n_failed":${failures.size},""" +
-      s""""prep_failed":$prepJson,""" +
-      s""""queries":$compactQs,"sf":"$sfDir"$ratios$gcCompact,"full":"$out"}"""
-    println(compact)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
+    println(compactLine(results, timed.map { case (k, t) => k -> t.gc },
+      scaledResults, scaledGcs, prep, sfDir, out))
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), s"$json\n")
     catch { case _: Throwable => () }
     spark.stop()
+  }
+
+  private def total(results: Seq[(String, Double)]): Double =
+    results.map(_._2).filter(_ >= 0).sum
+
+  /** The stdout line. The driver preserves only a ~2 KB TAIL of stdout,
+    * and the full line is ~11 KB — in rounds 1–5 the capture truncated
+    * it from the front and every parse came back null. So stdout gets a
+    * COMPACT line (the contract fields, `queries` restricted to
+    * failures + the slowest 12 — what a reader triages first) that fits
+    * whole inside a 2 KB tail, and the FULL line goes to the committed
+    * artifact `out`. It also carries the scaled block's headline and
+    * the worst GC-seconds entries — the only artifact the driver
+    * durably preserves per run — so a storm's evidence survives even
+    * when the full JSON is overwritten.
+    */
+  private[graft] def compactLine(results: Seq[(String, Double)], gcs: Seq[(String, Double)],
+      scaled: Seq[(String, Double)], scaledGcs: Seq[(String, Double)],
+      prep: Seq[String], sfDir: String, out: String): String = {
+    val failures = results.filter(_._2 < 0).map(_._1)
+    val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
+    val queries = (slow ++ failures.map(_ -> -1.0))
+      .map { case (k, v) => k -> math.rint(v * 1000) / 1000 }
+    def gcTop(gs: Seq[(String, Double)]) = Json.Obj(gs.filter(_._2 >= 0.1)
+      .sortBy(-_._2).take(5).map { case (k, g) => k -> math.rint(g * 100) / 100 })
+    Json.Obj(Seq("metric" -> "total", "value" -> math.rint(total(results) * 10) / 10,
+      "unit" -> "sec", timing, "n_queries" -> results.size, "n_failed" -> failures.size,
+      "prep_failed" -> prep, "queries" -> Json.Obj(queries), "sf" -> sfDir) ++
+      scaledHeadline(results.toMap, scaled) ++
+      Seq("gc_top" -> gcTop(gcs), "scaled_gc_top" -> gcTop(scaledGcs), "full" -> out)).toString
   }
 
   /** The scaled block's headline for the compact line: total, count,
     * and the 5 worst scaled/base ratios (the sublinearity evidence the
     * judge audits first).
     */
-  private def worstRatios(base: Map[String, Double],
-      scaled: Seq[(String, Double)]): String = {
-    if (scaled.isEmpty) return ""
+  private def scaledHeadline(base: Map[String, Double],
+      scaled: Seq[(String, Double)]): Seq[(String, Any)] = {
+    if (scaled.isEmpty) return Nil
     val ok = scaled.filter(_._2 >= 0)
-    val total = math.rint(ok.map(_._2).sum * 10) / 10
     val rs = ok.flatMap { case (k, v) =>
       base.get(k).filter(_ > 0.05).map(b => k -> math.rint(v / b * 10) / 10)
     }.sortBy(-_._2).take(5)
-      .map { case (k, r) => Json.str(k) + ":" + r }.mkString("{", ",", "}")
-    s""","scaled_total":$total,"scaled_n":${ok.size},"scaled_fail":${scaled.size - ok.size},"worst_ratios":$rs"""
+    Seq("scaled_total" -> math.rint(ok.map(_._2).sum * 10) / 10, "scaled_n" -> ok.size,
+      "scaled_fail" -> (scaled.size - ok.size), "worst_ratios" -> Json.Obj(rs))
   }
 
   /** Measured scaling evidence: run every sf-table query (not the
@@ -277,9 +280,9 @@ object Bench {
     * failing the bench.
     */
   private def scaledBlock(spark: SparkSession, sfDir: String)
-      : (String, Seq[(String, Double)], Seq[(String, Double)]) = {
+      : (Seq[(String, Any)], Seq[(String, Double)], Seq[(String, Double)]) = {
     val x = sys.env.getOrElse("SPARK_GRAFT_SCALE_X", "10").toInt
-    if (x <= 1) return ("", Nil, Nil)
+    if (x <= 1) return (Nil, Nil, Nil)
     val scaledIters = sys.env.getOrElse("SPARK_GRAFT_SCALED_ITERS", "2").toInt.max(1)
     try {
       val dst = new java.io.File(s"target/scaled-${x}x").getAbsolutePath
@@ -294,10 +297,10 @@ object Bench {
       val timed = timeAll(SparkEntry.registry.values.filterNot(_.fixture).toSeq,
         spark, dst, cheapIters = scaledIters, expensiveIters = longIters)
       val results = timed.map { case (k, t) => k -> t.seconds }
-      val total = results.map(_._2).filter(_ >= 0).sum
-      (s""","scaled_x":$x,"scaled_total":$total,"scaled_queries":${secondsJson(timed)},""" +
-        s""""scaled_gc_sec":${gcJson(timed)},"scaled_errors":${errorsJson(timed)}""",
+      (Seq("scaled_x" -> x, "scaled_total" -> total(results),
+        "scaled_queries" -> secondsJson(timed), "scaled_gc_sec" -> gcJson(timed),
+        "scaled_errors" -> errorsJson(timed)),
         results, timed.map { case (k, t) => k -> t.gc })
-    } catch { case _: Throwable => ("", Nil, Nil) }
+    } catch { case _: Throwable => (Nil, Nil, Nil) }
   }
 }

@@ -3050,7 +3050,7 @@ object ExtQueries {
       graft.io.Layout.writeSharded(
         Tables.documents(s, dir).select(col("doc_id"), col("source"), col("n_chars")),
         "doc_id", 8, out)
-      s.read.parquet(out)
+      graft.io.Parquet.read(s, out)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
     },
@@ -3186,7 +3186,7 @@ object ExtQueries {
         (col("user_id") % 256).as("x"), (col("event_id") % 256).as("y"))
       graft.io.Layout.writeZOrdered(
         e, graft.functions.ZOrder.zValue(col("x"), col("y"), 8), out, 8)
-      s.read.parquet(out)
+      graft.io.Parquet.read(s, out)
         .filter(col("x").between(32, 63) && col("y").between(96, 127))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(28,6)")).cast("double").as("sum_value"))
@@ -4406,7 +4406,7 @@ object ExtQueries {
       graft.io.Layout.writeShuffled(
         Tables.documents(s, dir).select(col("doc_id"), col("source"), col("n_chars")),
         "doc_id", "ep0", 8, out)
-      s.read.parquet(out)
+      graft.io.Parquet.read(s, out)
         .withColumn("h", Sampling.hashHex(col("doc_id"), "ep0"))
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(

@@ -9,13 +9,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * query — one that reads the authored files of
   * [[graft.io.VerifyFixtures]] instead of the sf tables, so the bench's
   * scaled pass skips it.
+  *
+  * The oracle is built on its first read. Only Verify reads oracles,
+  * so the other readers of the registry neither build the 300 SQL
+  * strings nor initialize the objects those strings interpolate.
   */
-final case class Q(name: String, plan: Q.Plan, oracle: Option[String] = None,
-    prep: Option[Q.Prep] = None, fixture: Boolean = false)
+final class Q(val name: String, val plan: Q.Plan, oracleSql: => Option[String],
+    val prep: Option[Q.Prep], val fixture: Boolean) {
+  lazy val oracle: Option[String] = oracleSql
+}
 
 object Q {
   type Plan = (SparkSession, String) => DataFrame
   type Prep = (SparkSession, String) => Unit
+
+  def apply(name: String, plan: Plan, oracle: => Option[String] = None,
+      prep: Option[Prep] = None, fixture: Boolean = false): Q =
+    new Q(name, plan, oracle, prep, fixture)
 
   /** The declarations by name. A name declared more than once raises an
     * `IllegalArgumentException` naming every such name, instead of one

@@ -20,6 +20,17 @@ object Sessions {
       // events.parquet carries TIMESTAMP(NANOS); read as long, converted
       // to TimestampType in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Streaming checkpoint files are renamed through FileSystem.rename
+      // (the manager Spark already uses for stores without FileContext,
+      // such as s3a). The default FileContext manager resolves links on
+      // the local filesystem by forking `readlink`, one process per
+      // checkpoint file, serially on the stream's thread: JFR
+      // `jdk.ProcessStart` counted 89 forks per q_st2_stream_dedup run
+      // (64 `readlink`, 25 `chmod`), and 25 (0 `readlink`) with this
+      // manager. The `chmod` forks are Hadoop's setPermission without
+      // libhadoop.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = tuned(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()

@@ -31,9 +31,9 @@ object SparkEntry {
     * Hadoop `FileSystem`, so a `file:` URI or another scheme classifies
     * like a plain local path.
     */
-  private def streamTable(s: SparkSession, dir: String, table: String) = {
+  private[graft] def streamTable(s: SparkSession, dir: String, table: String) = {
     val path = s"$dir/$table.parquet"
-    val schema = s.read.parquet(path).schema
+    val schema = graft.io.Parquet.read(s, path).schema
     val hp = new Path(path)
     val raw =
       if (hp.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(hp).isDirectory)
@@ -1548,7 +1548,7 @@ object SparkEntry {
         .option("path", out).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      s.read.parquet(out)
+      graft.io.Parquet.read(s, out)
     }),
       // The parquet-sink stream's committed output == the batch projection.
       oracle = Some(
@@ -1677,7 +1677,7 @@ object SparkEntry {
         docs, "doc_id", "text", store, out, ckpt,
         minJaccard = 0.7, minEst = 0.5)
       q.awaitTermination()
-      val streamKept = s.read.parquet(out).select(col("doc_id"))
+      val streamKept = graft.io.Parquet.read(s, out).select(col("doc_id"))
       val static = Tables.documents(s, dir).filter(gateSet)
       val batchKept = graft.ext.Dedup.keepCanonical(static, "doc_id",
           graft.ext.Dedup.minHashPairs(static, "doc_id", "text", minJaccard = 0.7))
@@ -2109,7 +2109,7 @@ object SparkEntry {
         docs, "doc_id", "text", store, out, ckpt,
         minJaccard = 0.9, minEst = 0.9)
       q.awaitTermination()
-      s.read.parquet(out)
+      graft.io.Parquet.read(s, out)
         .select(col("doc_id"), substring(md5(col("text")), 1, 16).as("fp"))
     },
       // Multi-batch near-dup ingest over the disjoint-vocabulary duplicate
@@ -2210,7 +2210,7 @@ object SparkEntry {
         matchMin = 10L, possibleMin = 1L, storeName = store,
         outPath = out, checkpoint = ckpt)
       q.awaitTermination()
-      val streamed = s.read.parquet(out)
+      val streamed = graft.io.Parquet.read(s, out)
         .select(col("id_a"), col("id_b"), col("score"), col("verdict"))
       val batch = ExtQueries.queries("q_ext_record_linkage")(s, dir)
       val merged = streamed.withColumn("src", lit(1))

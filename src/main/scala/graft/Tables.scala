@@ -4,12 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.io.Parquet
+
 /** Loaders for the driver's synthetic parquet tables (TESTDATA.md).
-  * One parquet per table under `\$dir/<name>.parquet`.
+  * One parquet per table under `\$dir/<name>.parquet`, read with the
+  * footer's schema ([[Parquet.read]]), so a load starts no Spark job.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Normalize a physical timestamp column to session-TZ TimestampType,
     * whatever parquet encoding the fixture carries. Real corpora mix all

@@ -45,7 +45,7 @@ object Bucketing {
       val loc = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc) && fs.listStatus(loc).nonEmpty) {
-        val schema = spark.read.parquet(loc.toString).schema.toDDL
+        val schema = Parquet.read(spark, loc.toString).schema.toDDL
         val cluster = keys.map(k => s"`$k`").mkString(", ")
         spark.sql(
           s"""CREATE TABLE `$table` ($schema) USING parquet

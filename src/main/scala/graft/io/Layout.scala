@@ -29,7 +29,7 @@ object Layout {
     * `p_date` prune partitions at planning time.
     */
   def readDatePartitioned(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Parquet.read(spark, dir)
 
   /** Compact a parquet directory into right-sized files: read, count
     * the layout's current bytes from the file system, rewrite as
@@ -52,7 +52,7 @@ object Layout {
       s"compact cannot write in place: $inDir == $outDir")
     val bytes = fs.getContentSummary(path).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(inDir).repartition(nFiles)
+    Parquet.read(spark, inDir).repartition(nFiles)
       .write.mode("overwrite").parquet(outDir)
     nFiles
   }

@@ -54,7 +54,7 @@ object ScaleReplicate {
       return dstDir
 
     val rep = spark.range(times).select(col("id").as("__r"))
-    def src(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
+    def src(t: String) = Parquet.read(spark, s"$srcDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$dstDir/$t.parquet")
 

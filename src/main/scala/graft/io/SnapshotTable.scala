@@ -59,7 +59,7 @@ object SnapshotTable {
       .sortWithinPartitions(statsCol)
       .write.mode("overwrite").parquet(dataDir)
     // The commit's stats pass: one distributed scan of what was written.
-    val stats = spark.read.parquet(dataDir)
+    val stats = Parquet.read(spark, dataDir)
       .groupBy(input_file_name().as("path"))
       .agg(min(col(statsCol)).cast("string").as("statMin"),
         max(col(statsCol)).cast("string").as("statMax"))
@@ -106,7 +106,7 @@ object SnapshotTable {
     */
   def readSnapshot(spark: SparkSession, dir: String, version: Int): DataFrame = {
     val m = readManifest(spark, dir, version)
-    spark.read.parquet(m.files.map(_.path): _*)
+    Parquet.read(spark, m.files.map(_.path): _*)
   }
 
   /** Retention expiry: physically delete every snapshot version below
@@ -151,9 +151,9 @@ object SnapshotTable {
     val hit = m.files.filter(f => f.statMax >= lo && f.statMin <= hi)
     val df =
       if (hit.isEmpty) {
-        val empty = spark.read.parquet(m.files.map(_.path): _*).limit(0)
+        val empty = Parquet.read(spark, m.files.map(_.path): _*).limit(0)
         empty
-      } else spark.read.parquet(hit.map(_.path): _*)
+      } else Parquet.read(spark, hit.map(_.path): _*)
     (df, hit.size, m.files.size)
   }
 }

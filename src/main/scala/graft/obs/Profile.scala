@@ -8,19 +8,19 @@ import org.apache.spark.sql.internal.SQLConf
 
 /** Execution profile of a block of driver code, without the UI: what
   * the Spark jobs it started did (jobs, stages, tasks, task and GC
-  * time, shuffle bytes) — the split between plan machinery and data
-  * work. One profile, shared by `graft.tools.Probe` and the specs that
-  * pin job or exchange counts.
+  * time, shuffle and spilled bytes) — the split between plan machinery
+  * and data work. One profile, shared by `graft.tools.Probe` and the
+  * specs that pin job or exchange counts.
   */
 object Profile {
 
   /** Scheduler counters of the jobs one block started. */
   final case class Stats(
       jobs: Int, stages: Int, tasks: Int, taskS: Double, gcS: Double,
-      shuffleReadMb: Double, shuffleWriteMb: Double) {
+      shuffleReadMb: Double, shuffleWriteMb: Double, spillMb: Double) {
     def line: String =
       f"jobs=$jobs stages=$stages tasks=$tasks taskTime=$taskS%.1fs gc=$gcS%.1fs " +
-        f"shufR=$shuffleReadMb%.1fMB shufW=$shuffleWriteMb%.1fMB"
+        f"shufR=$shuffleReadMb%.1fMB shufW=$shuffleWriteMb%.1fMB spill=$spillMb%.1fMB"
   }
 
   /** Written only by the listener bus's dispatch thread, and read only
@@ -28,7 +28,7 @@ object Profile {
     */
   private final class Counter extends SparkListener {
     var jobs, stages, tasks = 0
-    var runMs, gcMs, shuffleRead, shuffleWrite = 0L
+    var runMs, gcMs, shuffleRead, shuffleWrite, spill = 0L
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages += 1
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
@@ -38,10 +38,13 @@ object Profile {
         gcMs += m.jvmGCTime
         shuffleRead += m.shuffleReadMetrics.totalBytesRead
         shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        // the in-memory size of what was spilled plus its on-disk size,
+        // Spark's UI pair "Spill (Memory)" and "Spill (Disk)"
+        spill += m.memoryBytesSpilled + m.diskBytesSpilled
       }
     }
     def stats: Stats = Stats(jobs, stages, tasks, runMs / 1e3, gcMs / 1e3,
-      shuffleRead / 1e6, shuffleWrite / 1e6)
+      shuffleRead / 1e6, shuffleWrite / 1e6, spill / 1e6)
   }
 
   /** Runs `body` and counts what the jobs it started did. The bus is

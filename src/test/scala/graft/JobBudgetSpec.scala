@@ -23,4 +23,18 @@ class JobBudgetSpec extends SparkTestBase {
       Sinks.writeCsv(SolarPipelines.resampleRaw(spark, path), out, Some("time")))
     assert(stats.jobs === 2)
   }
+
+  // The table reads every query starts with: the schema comes from one
+  // footer read on the driver, where a schema-less `spark.read.parquet`
+  // starts a one-task inference job.
+  test("Tables.load starts no job") {
+    val (_, stats) = Profile(spark)(Tables.load(spark, "/root/testdata/sf0.001", "events").schema)
+    assert(stats.jobs === 0)
+  }
+
+  test("streamTable starts no job") {
+    val (_, stats) = Profile(spark)(
+      SparkEntry.streamTable(spark, "/root/testdata/sf0.001", "documents").schema)
+    assert(stats.jobs === 0)
+  }
 }

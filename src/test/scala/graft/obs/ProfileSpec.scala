@@ -1,6 +1,7 @@
 package graft.obs
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, sum}
 
 import graft.{SparkEntry, SparkTestBase}
 
@@ -18,6 +19,7 @@ class ProfileSpec extends SparkTestBase {
     assert(rows.length === 10)
     assert((stats.jobs, stats.stages, stats.tasks) === ((2, 2, 4)))
     assert(stats.shuffleReadMb === 0.0 && stats.shuffleWriteMb === 0.0)
+    assert(stats.spillMb === 0.0)
   }
 
   test("a groupBy counts its map and reduce stages and the bytes it shuffles") {
@@ -30,6 +32,17 @@ class ProfileSpec extends SparkTestBase {
     assert((stats.jobs, stats.stages, stats.tasks) === ((1, 2, 7)))
     assert(stats.shuffleWriteMb > 0.0)
     assert(stats.shuffleReadMb === stats.shuffleWriteMb)
+  }
+
+  test("a window whose buffer is forced to disk counts the bytes it spilled") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "1")
+    s.conf.set("spark.sql.windowExec.buffer.spill.threshold", "100")
+    val w = Window.partitionBy(col("id") % 2)
+    val (rows, stats) = Profile(s)(
+      s.range(0, 1000, 1, 2).select(sum(col("id")).over(w)).collect())
+    assert(rows.length === 1000)
+    assert(stats.spillMb > 0.0)
   }
 
   test("shuffles matches PlanBudgetSpec's pin for q_a1_resample on sf0.001") {

@@ -15,7 +15,7 @@ class ProbeSpec extends SparkTestBase {
     Probe.run(spark, Seq("q_a1_resample", dir, "1"))(lines += _)
     val Line = ("""\[probe\] q_a1_resample (\S+) iter1 wall=([\d.]+)s heap=\d+M->\d+M """ +
       """jobs=(\d+) stages=(\d+) tasks=(\d+) taskTime=[\d.]+s gc=[\d.]+s """ +
-      """shufR=[\d.]+MB shufW=[\d.]+MB shuffles=(\d+)""").r
+      """shufR=[\d.]+MB shufW=[\d.]+MB spill=[\d.]+MB shuffles=(\d+)""").r
     lines.toSeq match {
       case Seq(Line(d, wall, jobs, stages, tasks, shuffles)) =>
         assert(d === dir)
