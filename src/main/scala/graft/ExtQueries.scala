@@ -3306,8 +3306,9 @@ object ExtQueries {
           unix_micros(col("gap_end")).as("gap_end_us"),
           col("gap_us"), col("gap_seconds")),
       // Integer-microsecond twin of Gaps.detect: lag ordering uses the
-      // same us-truncated instants Spark sees (events.ts is NANOS parquet;
-      // Spark reads us), so threshold and ordering can't drift apart.
+      // same microsecond instants Spark sees (events.ts is TIMESTAMP_NTZ
+      // parquet, read as TimestampNTZType and cast in Tables.events), so
+      // threshold and ordering can't drift apart.
       oracle = Some(
         """WITH e AS (
           |  SELECT event_type, event_id, epoch_us(ts) AS ts_us FROM events),

@@ -17,8 +17,9 @@ object Sessions {
       // dot-product rewrite, and the window-top-k operator rewrite +
       // strategy (graft.plans.TopKPerKey)
       .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
-      // events.parquet carries TIMESTAMP(NANOS); read as long, converted
-      // to TimestampType in Tables.events.
+      // A parquet TIMESTAMP(NANOS) column reads as a long (Tables.events
+      // converts one to TimestampType). The testdata's events.ts is
+      // TIMESTAMP_NTZ and reads as TimestampNTZType either way.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Streaming checkpoint files are renamed through FileSystem.rename
       // (the manager Spark already uses for stores without FileContext,
@@ -27,10 +28,13 @@ object Sessions {
       // checkpoint file, serially on the stream's thread: JFR
       // `jdk.ProcessStart` counted 89 forks per q_st2_stream_dedup run
       // (64 `readlink`, 25 `chmod`), and 25 (0 `readlink`) with this
-      // manager. The `chmod` forks are Hadoop's setPermission without
-      // libhadoop.
+      // manager; the `fs.file.impl` below removes the 25 `chmod`.
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      // Local files and directories get their permission through java.nio,
+      // not a forked `chmod` per file and per `.crc`
+      // (graft.io.NioLocalFileSystem).
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = tuned(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()

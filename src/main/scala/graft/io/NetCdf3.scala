@@ -1,9 +1,11 @@
 package graft.io
 
-import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream, RandomAccessFile}
+import java.io.{BufferedOutputStream, Closeable, DataOutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 
 /** Minimal NetCDF classic writer/reader — the 64-bit-offset variant
   * (magic `CDF\x02`), implemented from the public NetCDF file-format
@@ -20,11 +22,13 @@ import java.nio.file.{Files, Paths}
   *
   * Scale posture: NetCDF classic is a single sequential file — there is
   * no distributed write for it, by format definition. The writer
-  * therefore streams: time is the UNLIMITED record dimension, records
-  * are appended one time-slab at a time from an iterator, and `numrecs`
-  * is patched on close (the spec's STREAMING sentinel is used while
-  * writing). Driver memory is one time slice (n_stations doubles per
-  * variable), never the cube.
+  * therefore streams: time is the UNLIMITED record dimension, the caller
+  * declares `numrecs` up front so the header is final when it is
+  * written, and records are appended one time-slab at a time. The file
+  * is written front to back in one pass through the path's Hadoop
+  * `FileSystem` (no seek, so any scheme that can create a file can hold
+  * one) and read back through `FileSystem.open`. Writer memory is one
+  * time slice (n_stations doubles per variable), never the cube.
   *
   * Supported surface (what the cube needs, nothing speculative):
   * dims, char/double/int variables, char attributes, one record dim.
@@ -44,20 +48,19 @@ object NetCdf3 {
 
   case class Var(name: String, dimIds: Seq[Int], attrs: Seq[Attr], tpe: NcType)
 
-  private val StreamingNumrecs = 0xFFFFFFFF
-
   // ------------------------------------------------------------- writer
 
-  /** Streaming writer. Construction writes the header and the fixed
-    * (non-record) variables; [[writeRecord]] appends one record;
-    * [[close]] patches `numrecs`.
+  /** Streaming writer. Construction writes the header, with `numRecs`
+    * as the record count, and the fixed (non-record) variables;
+    * [[writeRecord]] appends one record; [[close]] closes the file and
+    * fails unless exactly `numRecs` records were written.
     *
     * `fixedData`: one entry per non-record variable — `Array[Double]`,
     * `Array[Int]`, or `Array[Byte]` (char), in row-major dim order.
     */
   final class Writer(
       path: String, dims: Seq[Dim], gattrs: Seq[Attr], vars: Seq[Var],
-      fixedData: Map[String, AnyRef]) {
+      fixedData: Map[String, AnyRef], numRecs: Int, conf: Configuration) extends Closeable {
 
     require(dims.count(_.isRecord) <= 1, "at most one record dimension")
     private val recordDimId = dims.indexWhere(_.isRecord)
@@ -133,7 +136,7 @@ object NetCdf3 {
       val out = new java.io.ByteArrayOutputStream()
       val d = new DataOutputStream(out)
       d.write("CDF".getBytes(StandardCharsets.US_ASCII)); d.writeByte(2)
-      d.writeInt(StreamingNumrecs)
+      d.writeInt(numRecs)
       if (dims.isEmpty) { d.writeInt(0); d.writeInt(0) }
       else {
         d.writeInt(0x0A); d.writeInt(dims.length)
@@ -163,21 +166,20 @@ object NetCdf3 {
       val rec = recordVars.map { v => val b = v.name -> recOff; recOff += vsize(v); b }
       (fixed ++ rec).toMap
     }
-    /** Bytes of one full record (all record vars' slabs). */
-    private val recSize: Long = recordVars.map(vsize).sum
-
-    private var numRecs = 0
+    require(numRecs >= 0, s"numRecs $numRecs")
+    private var written = 0
     private val stream: DataOutputStream = {
-      Files.createDirectories(Paths.get(path).getParent)
-      val d = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path), 1 << 16))
+      fixedVars.foreach(v => slabBytes(v, fixedData(v.name)))
+      val p = new Path(path)
+      val d = new DataOutputStream(
+        new BufferedOutputStream(p.getFileSystem(conf).create(p, true), 1 << 16))
       d.write(headerBytes(begins))
-      fixedVars.foreach { v => writeSlab(d, v, fixedData(v.name)) }
+      fixedVars.foreach(v => writeSlab(d, v, fixedData(v.name)))
       d
     }
 
-    private def writeSlab(d: DataOutputStream, v: Var, data: AnyRef): Unit = {
-      // Validate the slab BEFORE touching the stream — a partial write
-      // would silently misalign every subsequent record.
+    /** The payload bytes of a slab, once it is known to fill `vsize(v)`. */
+    private def slabBytes(v: Var, data: AnyRef): Long = {
       val bytes: Long = data match {
         case a: Array[Double] => a.length.toLong * 8
         case a: Array[Int]    => a.length.toLong * 4
@@ -187,6 +189,11 @@ object NetCdf3 {
       }
       require(bytes == vsize(v) || pad4(bytes) == vsize(v),
         s"var ${v.name}: slab of $bytes bytes does not fill vsize ${vsize(v)}")
+      bytes
+    }
+
+    private def writeSlab(d: DataOutputStream, v: Var, data: AnyRef): Unit = {
+      val bytes = slabBytes(v, data)
       data match {
         case a: Array[Double] => a.foreach(d.writeDouble)
         case a: Array[Int]    => a.foreach(d.writeInt)
@@ -195,17 +202,23 @@ object NetCdf3 {
       (0 until (vsize(v) - bytes).toInt).foreach(_ => d.writeByte(0))
     }
 
-    /** Append one record: a slab per record variable, in var order. */
+    /** Append one record: a slab per record variable, in var order. Every
+      * slab is checked before any byte is written — a partial record
+      * would silently misalign every later one.
+      */
     def writeRecord(data: Map[String, AnyRef]): Unit = {
+      if (written == numRecs) throw new IllegalStateException(
+        s"record ${written + 1} of a file declared with $numRecs")
+      recordVars.foreach(v => slabBytes(v, data(v.name)))
       recordVars.foreach(v => writeSlab(stream, v, data(v.name)))
-      numRecs += 1
+      written += 1
     }
 
-    /** Flush, then patch the streamed `numrecs` into the header. */
+    /** Close the file; the header's `numrecs` must match what was written. */
     def close(): Unit = {
       stream.close()
-      val raf = new RandomAccessFile(path, "rw")
-      try { raf.seek(4); raf.writeInt(numRecs) } finally raf.close()
+      if (written != numRecs) throw new IllegalStateException(
+        s"$path: $written records written, $numRecs declared in the header")
     }
   }
 
@@ -218,13 +231,15 @@ object NetCdf3 {
     */
   case class Nc(dims: Seq[Dim], gattrs: Seq[Attr], vars: Seq[(Var, AnyRef)])
 
-  def read(path: String): Nc = {
-    val buf = ByteBuffer.wrap(Files.readAllBytes(Paths.get(path)))
+  def read(path: String, conf: Configuration): Nc = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    val buf = try ByteBuffer.wrap(in.readAllBytes()) finally in.close()
     val magic = Array.fill(3)(buf.get()).map(_.toChar).mkString
     val version = buf.get()
     require(magic == "CDF" && (version == 1 || version == 2), s"not a classic NetCDF file: $path")
     val numRecs = buf.getInt()
-    require(numRecs != StreamingNumrecs, "unpatched STREAMING numrecs")
+    require(numRecs >= 0, s"$path: numrecs $numRecs (STREAMING files are not supported)")
 
     def readName(): String = {
       val n = buf.getInt()

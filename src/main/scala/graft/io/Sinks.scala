@@ -1,11 +1,17 @@
 package graft.io
 
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+
+import scala.collection.mutable
+import scala.util.Using
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sinks (SURVEY.md §2.1 S7, S8).
   *
@@ -72,89 +78,134 @@ object Sinks {
     *
     * Scale posture: a classic `.nc` is a single sequential file by
     * format definition, so this is an *export edge*, not a distributed
-    * sink. The station dimension is collected (it is the broadcast-small
-    * metadata side, ~dozens of rows); the time axis is streamed through
-    * `toLocalIterator` over a time-sorted frame — driver memory holds
-    * one time slab (`n_stations` doubles per variable), never the cube.
-    * Missing (time, station) cells become NaN, NetCDF's conventional
+    * sink. One Spark query brings the rows to the driver in (time,
+    * station) order (`repartition(1)` plus a sort inside the one
+    * partition: no range-sampling job, and the cube's input is scanned
+    * once). The driver spools them to a local temp file as (epoch,
+    * first-seen station id, values) while it collects the station →
+    * coordinates map and counts the time records; it then writes the
+    * header with the true `numrecs`, the station variables (names in
+    * sorted order) and the records front to back through the path's
+    * Hadoop `FileSystem`. Driver memory is the fetched partition's
+    * serialized rows, one time slab (`n_stations` doubles per variable)
+    * and the station map, never the decoded cube. Missing
+    * (time, station) cells become NaN, NetCDF's conventional
     * missing-value marker.
+    *
+    * A station that carries two coordinate sets raises
+    * `IllegalArgumentException` naming it: the file has one coordinate
+    * triple per station.
     */
   def writeNetCdf(
       cube: DataFrame, path: String,
       valueCols: Seq[String] = Seq("GHI", "DHI", "DNI"),
       attrs: Map[String, String] = cfAttributes()): Unit = {
     import NetCdf3._
-    val stations = cube
-      .select(col("station"), col("latitude").cast("double"),
-        col("longitude").cast("double"), col("elevation").cast("double"))
-      .distinct().orderBy("station").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-    require(stations.nonEmpty, "empty cube: no stations")
-    val names = stations.map(_._1)
-    val slot = names.zipWithIndex.toMap
-    val strlen = names.map(_.getBytes("UTF-8").length).max
-
-    val dims = Seq(Dim("time", 0), Dim("station", names.length), Dim("name_strlen", strlen))
-    val TimeD = 0; val StationD = 1; val StrlenD = 2
-    val vars =
-      Seq(
-        Var("time", Seq(TimeD), Seq(
-          Attr("units", attrs.getOrElse("time_units", "seconds since 1970-01-01")),
-          Attr("calendar", attrs.getOrElse("calendar", "proleptic_gregorian"))), NcDouble),
-        Var("station_name", Seq(StationD, StrlenD),
-          Seq(Attr("cf_role", attrs.getOrElse("station_cf_role", "timeseries_id"))), NcChar),
-        Var("latitude", Seq(StationD), Seq(Attr("units", "degrees_north")), NcDouble),
-        Var("longitude", Seq(StationD), Seq(Attr("units", "degrees_east")), NcDouble),
-        Var("elevation", Seq(StationD), Seq(Attr("units", "m")), NcDouble)) ++
-      valueCols.map(c =>
-        Var(c, Seq(TimeD, StationD),
-          Seq(Attr("units", attrs.getOrElse(s"${c}_units", "1"))), NcDouble))
-
-    val nameGrid = {
-      val g = Array.fill[Byte](names.length * strlen)(0)
-      names.zipWithIndex.foreach { case (n, i) =>
-        val b = n.getBytes("UTF-8"); System.arraycopy(b, 0, g, i * strlen, b.length)
-      }
-      g
-    }
-    val fixed = Map[String, AnyRef](
-      "station_name" -> nameGrid,
-      "latitude" -> stations.map(_._2),
-      "longitude" -> stations.map(_._3),
-      "elevation" -> stations.map(_._4))
-
-    val gattrs = attrs.toSeq.sortBy(_._1).map { case (k, v) => Attr(k, v) }
-    val w = new Writer(path, dims, gattrs, vars, fixed)
-
     val rows = cube
-      .select(unix_timestamp(col("time_utc")).as("epoch") +:
-        col("station") +: valueCols.map(c => col(c).cast("double")): _*)
-      .orderBy("epoch", "station")
+      .select(Seq(unix_timestamp(col("time_utc")).as("epoch"), col("station")) ++
+        (Seq("latitude", "longitude", "elevation") ++ valueCols).map(c => col(c).cast("double")): _*)
+      .repartition(1).sortWithinPartitions("epoch", "station")
       .toLocalIterator()
 
-    var curEpoch = Long.MinValue
-    var slabs: Array[Array[Double]] = null
-    def flush(): Unit = if (slabs != null) {
-      val rec = Map[String, AnyRef]("time" -> Array(curEpoch.toDouble)) ++
-        valueCols.zipWithIndex.map { case (c, i) => c -> (slabs(i): AnyRef) }
-      w.writeRecord(rec)
-    }
+    val spool = Files.createTempFile("graft-netcdf-", ".rec")
     try {
-      while (rows.hasNext) {
-        val r = rows.next()
-        val e = r.getLong(0)
-        if (e != curEpoch) {
-          flush()
-          curEpoch = e
-          slabs = Array.fill(valueCols.length)(Array.fill(names.length)(Double.NaN))
+      // pass 1: spool the rows, collecting the stations and the record count
+      // station -> (first-seen id, coordinates)
+      val seen = mutable.HashMap.empty[String, (Int, (Double, Double, Double))]
+      var numRecs = 0
+      var numRows = 0L
+      val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(spool), 1 << 16))
+      try {
+        var curEpoch = 0L
+        while (rows.hasNext) {
+          val r = rows.next()
+          val e = r.getLong(0)
+          if (numRecs == 0 || e != curEpoch) { numRecs += 1; curEpoch = e }
+          val name = r.getString(1)
+          // coordinates compare as Spark groups doubles: -0.0 is 0.0, NaN is NaN
+          val coords = (norm(r.getDouble(2)), norm(r.getDouble(3)), norm(r.getDouble(4)))
+          val (id, first) = seen.getOrElseUpdate(name, (seen.size, coords))
+          if (!sameCoords(first, coords)) throw new IllegalArgumentException(
+            s"station $name has two coordinate sets: $first and $coords")
+          numRows += 1
+          out.writeLong(e)
+          out.writeInt(id)
+          valueCols.indices.foreach { i =>
+            out.writeDouble(if (r.isNullAt(i + 5)) Double.NaN else r.getDouble(i + 5))
+          }
         }
-        val s = slot(r.getString(1))
-        valueCols.indices.foreach { i =>
-          slabs(i)(s) = if (r.isNullAt(i + 2)) Double.NaN else r.getDouble(i + 2)
+      } finally out.close()
+      require(seen.nonEmpty, "empty cube: no stations")
+
+      // Spark's string order (UTF-8 bytes), as the station dimension sorts
+      val stations = seen.toArray.sortBy(s => UTF8String.fromString(s._1))
+      val names = stations.map(_._1)
+      // first-seen id -> slot in the sorted station dimension
+      val slotOf = new Array[Int](names.length)
+      stations.zipWithIndex.foreach { case ((_, (id, _)), slot) => slotOf(id) = slot }
+      val strlen = names.map(_.getBytes("UTF-8").length).max
+
+      val dims = Seq(Dim("time", 0), Dim("station", names.length), Dim("name_strlen", strlen))
+      val TimeD = 0; val StationD = 1; val StrlenD = 2
+      val vars =
+        Seq(
+          Var("time", Seq(TimeD), Seq(
+            Attr("units", attrs.getOrElse("time_units", "seconds since 1970-01-01")),
+            Attr("calendar", attrs.getOrElse("calendar", "proleptic_gregorian"))), NcDouble),
+          Var("station_name", Seq(StationD, StrlenD),
+            Seq(Attr("cf_role", attrs.getOrElse("station_cf_role", "timeseries_id"))), NcChar),
+          Var("latitude", Seq(StationD), Seq(Attr("units", "degrees_north")), NcDouble),
+          Var("longitude", Seq(StationD), Seq(Attr("units", "degrees_east")), NcDouble),
+          Var("elevation", Seq(StationD), Seq(Attr("units", "m")), NcDouble)) ++
+        valueCols.map(c =>
+          Var(c, Seq(TimeD, StationD),
+            Seq(Attr("units", attrs.getOrElse(s"${c}_units", "1"))), NcDouble))
+
+      val nameGrid = {
+        val g = Array.fill[Byte](names.length * strlen)(0)
+        names.zipWithIndex.foreach { case (n, i) =>
+          val b = n.getBytes("UTF-8"); System.arraycopy(b, 0, g, i * strlen, b.length)
         }
+        g
       }
-      flush()
-    } finally w.close()
+      val fixed = Map[String, AnyRef](
+        "station_name" -> nameGrid,
+        "latitude" -> stations.map(_._2._2._1),
+        "longitude" -> stations.map(_._2._2._2),
+        "elevation" -> stations.map(_._2._2._3))
+
+      // pass 2: one time slab per record, from the spool
+      val gattrs = attrs.toSeq.sortBy(_._1).map { case (k, v) => Attr(k, v) }
+      val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(spool), 1 << 16))
+      try Using.resource(new Writer(path, dims, gattrs, vars, fixed, numRecs,
+          cube.sparkSession.sparkContext.hadoopConfiguration)) { w =>
+        var curEpoch = 0L
+        var slabs: Array[Array[Double]] = null
+        def flush(): Unit = if (slabs != null) {
+          w.writeRecord(Map[String, AnyRef]("time" -> Array(curEpoch.toDouble)) ++
+            valueCols.zip(slabs).map { case (c, slab) => c -> (slab: AnyRef) })
+        }
+        var left = numRows
+        while (left > 0) {
+          val e = in.readLong()
+          if (slabs == null || e != curEpoch) {
+            flush()
+            curEpoch = e
+            slabs = Array.fill(valueCols.length)(Array.fill(names.length)(Double.NaN))
+          }
+          val s = slotOf(in.readInt())
+          valueCols.indices.foreach(i => slabs(i)(s) = in.readDouble())
+          left -= 1
+        }
+        flush()
+      } finally in.close()
+    } finally Files.deleteIfExists(spool)
+  }
+
+  private def norm(d: Double): Double = if (d == 0.0) 0.0 else d
+  private def sameCoords(a: (Double, Double, Double), b: (Double, Double, Double)): Boolean = {
+    def same(x: Double, y: Double) = x == y || x.isNaN && y.isNaN
+    same(a._1, b._1) && same(a._2, b._2) && same(a._3, b._3)
   }
 
   /** Reader-side counterpart of [[writeNetCdf]]: re-assembles the classic
@@ -172,7 +223,7 @@ object Sinks {
   def readNetCdfCube(
       spark: SparkSession, path: String,
       valueCols: Seq[String] = Seq("GHI", "DHI", "DNI")): DataFrame = {
-    val nc = NetCdf3.read(path)
+    val nc = NetCdf3.read(path, spark.sparkContext.hadoopConfiguration)
     val byName = nc.vars.map { case (v, data) => v.name -> data }.toMap
     val nStations = nc.dims.find(_.name == "station").get.length
     val strlen = nc.dims.find(_.name == "name_strlen").get.length

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.io.{Sinks, VerifyFixtures}
+import graft.model.Schemas
 import graft.obs.Profile
 import graft.pipelines.SolarPipelines
 
@@ -36,5 +37,19 @@ class JobBudgetSpec extends SparkTestBase {
     val (_, stats) = Profile(spark)(
       SparkEntry.streamTable(spark, "/root/testdata/sf0.001", "documents").schema)
     assert(stats.jobs === 0)
+  }
+
+  // The NetCDF export is one query, one job each for the locations
+  // broadcast, the cube's scan into the single-partition exchange, and the
+  // sort of that partition streamed to the driver. The two-query writer (a
+  // distinct/orderBy for the station dimension, then a global orderBy for
+  // the records, each re-scanning and re-broadcasting) started 9.
+  test("writeNetCdf of the compile fixture's cube starts exactly 3 jobs") {
+    val (glob, locCsv) = VerifyFixtures.compileFixture()
+    val locations = spark.read.option("header", "true").schema(Schemas.station).csv(locCsv)
+    val cube = SolarPipelines.compileCube(spark, glob, locations)
+    val out = Files.createTempDirectory("graft-job-budget").resolve("cube.nc").toString
+    val (_, stats) = Profile(spark)(Sinks.writeNetCdf(cube, out))
+    assert(stats.jobs === 3)
   }
 }

@@ -25,4 +25,6 @@ for sf in sf0.001 sf0.01 sf0.1; do
   python3 -c 'import json, sys; m = json.load(open(sys.argv[1])); print("    dumped %d/%d" % (m["dumped"], m["declared"]))' \
     "$out/_verify_manifest.json" || echo "    no manifest in $out"
   echo "    $(grep -c 'Exception' "${out}.log" || true) Exception lines  (${out}.log)"
+  # q_s8_netcdf_roundtrip's cube: a writer change that moves a byte shows here
+  echo "    cube.nc sha256 $(sha256sum target/verify-fixtures/cube.nc 2>/dev/null | cut -d' ' -f1 || echo missing)"
 done
