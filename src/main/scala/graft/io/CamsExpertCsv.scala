@@ -19,11 +19,12 @@ import org.apache.spark.sql.types._
   *  1. sniff the header from the top of the file (only the commented
   *     prefix is examined — a bounded driver-side read, independent of
   *     file size);
-  *  2. one distributed `csv` scan with an explicit schema and
-  *     [[csvOptions]], so every metadata line is skipped by the parser and
-  *     column pruning / predicate pushdown work as usual.
-  * `spark.read.format("cams")` ([[CamsDataSource]]) is the same scan by
-  * short name, with the same schema rule and [[csvOptions]].
+  *  2. one distributed `format("cams")` scan ([[CamsDataSource]]) with
+  *     that schema and [[csvOptions]]: a Spark CSV file scan whose splits
+  *     are each tokenized as one stream, so every metadata line is
+  *     skipped and column pruning / predicate pushdown work as usual.
+  * A schema-less `spark.read.format("cams").load(...)` is the same scan,
+  * its schema read from the same header on the driver.
   */
 object CamsExpertCsv {
 
@@ -76,6 +77,6 @@ object CamsExpertCsv {
   /** Read one csv_expert file (or a glob of files sharing a layout). */
   def read(spark: SparkSession, path: String): DataFrame = {
     val cols = sniffHeader(spark, path)
-    spark.read.options(csvOptions).schema(schemaFor(cols)).csv(path)
+    spark.read.format("cams").schema(schemaFor(cols)).load(path)
   }
 }

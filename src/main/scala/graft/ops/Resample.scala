@@ -32,9 +32,15 @@ object Resample {
 
   /** Tumbling mean of `valueCols` (default: all numeric columns except
     * keys) bucketed on `timeCol` every `minutes`, optionally keyed by
-    * `extraKeys` (e.g. station); null times drop, as in `window()`.
-    * Output: `time` = bucket start timestamp, extra keys, one mean per
-    * value column (same name), plus `n_rows`.
+    * `extraKeys` (e.g. station). Output: `time` = bucket start timestamp,
+    * extra keys, one mean per value column (same name), plus `n_rows`.
+    *
+    * Rows with a null time drop, as in `window()`: they form one null
+    * bucket per key whose `n_rows` (a `count` of `timeCol`) is 0, and the
+    * filter `n_rows > 0` after the aggregate removes it. Every other
+    * bucket's `n_rows` is its row count. No row filter runs before the
+    * aggregate: Catalyst would push it below the projection that computes
+    * `timeCol`, and evaluate that expression once more per row.
     */
   def tumblingMean(
       df: DataFrame,
@@ -48,10 +54,10 @@ object Resample {
     val us = unix_micros(col(timeCol))
     val width = lit(minutes * 60L * 1000000L)
     val keyCols = (us - pmod(us, width)).as("__bucket_us") +: extraKeys.map(col)
-    val aggs = vals.map(c => avg(col(c)).as(c)) :+ count(lit(1)).as("n_rows")
-    df.where(col(timeCol).isNotNull)
-      .groupBy(keyCols: _*)
+    val aggs = vals.map(c => avg(col(c)).as(c)) :+ count(col(timeCol)).as("n_rows")
+    df.groupBy(keyCols: _*)
       .agg(aggs.head, aggs.tail: _*)
+      .where(col("n_rows") > 0)
       .select(timestamp_micros(col("__bucket_us")).as("time") +:
         (extraKeys ++ vals :+ "n_rows").map(col): _*)
   }

@@ -2,13 +2,16 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.{Sessions, SparkEntry}
+import graft.io.{Globs, Sinks}
 import graft.obs.Profile
 import graft.ops.Resample
+import graft.pipelines.SolarPipelines
 
 /** The probe entry point: builds each named driver query, runs it
   * through the noop sink (every output column evaluated) under
@@ -25,6 +28,14 @@ import graft.ops.Resample
   *    to `<outDir>/<query>_<dir name>.txt`;
   *  - the query name `year` is the reference's full yearly volume,
   *    generated (the dir is not read): see [[year]].
+  *
+  * {{{ runMain graft.tools.Probe ingest <csv_expert path or glob> [k=v ...] }}}
+  * runs the reference's raw-file loop instead: each matched file, one at
+  * a time in path order, through `SolarPipelines.resampleRaw` and
+  * `Sinks.writeCsv(…, Some("time"))` into a temporary directory, and
+  * prints one line per file: wall seconds, the file's MB and the
+  * profile's counters. The parse layer can then be profiled on any set
+  * of station-year files.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -35,8 +46,8 @@ object Probe {
 
   def run(root: SparkSession, args: Seq[String])(out: String => Unit): Unit = {
     require(args.length >= 2,
-      "usage: Probe <q1,q2,...> <dir>[,<dir2>] [iters] [k=v ...] [plans=<outDir>]")
-    val Seq(names, dirs) = args.take(2).map(_.split(",").toSeq)
+      "usage: Probe <q1,q2,...> <dir>[,<dir2>] [iters] [k=v ...] [plans=<outDir>] | " +
+        "Probe ingest <csv_expert path or glob> [k=v ...]")
     val (plans, opts) = args.drop(2).partition(_.startsWith("plans="))
     val (confs, iters) = opts.partition(_.contains("="))
     val spark = root.newSession()
@@ -44,10 +55,21 @@ object Probe {
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     }
-    val planDir = plans.lastOption.map(p => Files.createDirectories(Paths.get(p.stripPrefix("plans="))))
+    if (args.head == "ingest") ingest(spark, args(1))(out)
+    else queries(spark, args(0).split(",").toSeq, args(1).split(",").toSeq,
+      iters.lastOption.fold(1)(_.toInt), plans.lastOption)(out)
+  }
+
+  private def queries(
+      spark: SparkSession,
+      names: Seq[String],
+      dirs: Seq[String],
+      iters: Int,
+      plans: Option[String])(out: String => Unit): Unit = {
+    val planDir = plans.map(p => Files.createDirectories(Paths.get(p.stripPrefix("plans="))))
     val rt = Runtime.getRuntime
     def heapMb = (rt.totalMemory() - rt.freeMemory()) >> 20
-    for (name <- names; dir <- dirs; i <- 1 to iters.lastOption.fold(1)(_.toInt)) {
+    for (name <- names; dir <- dirs; i <- 1 to iters) {
       System.gc()
       val heap0 = heapMb
       val ((df, wall), stats) = Profile(spark) {
@@ -62,6 +84,26 @@ object Probe {
         Files.writeString(d.resolve(s"${name}_${Paths.get(dir).getFileName}.txt"),
           df.queryExecution.explainString(FormattedMode))
       }
+    }
+  }
+
+  /** The raw-file loop: each file `glob` matches, resampled and written. */
+  private def ingest(spark: SparkSession, glob: String)(out: String => Unit): Unit = {
+    val tmp = Files.createTempDirectory("graft-probe-ingest")
+    val dest = tmp.resolve("out").toString
+    try Globs.expand(spark, glob).sorted.foreach { file =>
+      val (wall, stats) = Profile(spark) {
+        val t0 = System.nanoTime()
+        Sinks.writeCsv(SolarPipelines.resampleRaw(spark, file), dest, Some("time"))
+        (System.nanoTime() - t0) / 1e9
+      }
+      val path = new Path(file)
+      val mb = path.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(path).getLen / 1048576.0
+      out(f"[probe] ingest $file wall=$wall%.3fs mb=$mb%.1f ${stats.line}")
+    } finally {
+      val dir = new Path(tmp.toUri)
+      dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
     }
   }
 

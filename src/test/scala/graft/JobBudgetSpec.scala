@@ -25,6 +25,15 @@ class JobBudgetSpec extends SparkTestBase {
     assert(stats.jobs === 2)
   }
 
+  // The schema-less load takes its schema from the header, read on the
+  // driver like the sniff: no inference scan of the data.
+  test("a schema-less format(\"cams\") load starts no job") {
+    val path = VerifyFixtures.camsExpertFixture()
+    val (schema, stats) = Profile(spark)(spark.read.format("cams").load(path).schema)
+    assert(schema.fieldNames.head === "Observation period")
+    assert(stats.jobs === 0)
+  }
+
   // The table reads every query starts with: the schema comes from one
   // footer read on the driver, where a schema-less `spark.read.parquet`
   // starts a one-task inference job.

@@ -112,6 +112,39 @@ class ResampleSpec extends SparkTestBase {
     assert(rows.map(_._3).sum === 7L)
   }
 
+  test("an input whose times are all null resamples to no rows") {
+    val df = Seq[(Option[Timestamp], Double)]((None, 1.0), (None, 2.0)).toDF("time", "v")
+    assert(Resample.tumblingMean(df, "time", 10).collect().isEmpty)
+  }
+
+  test("keyed input with null times: each key's null rows drop, n_rows counts each bucket") {
+    val df = Seq(
+      ("a", Some(ts("2024-01-01 00:00:00")), 1.0),
+      ("a", Some(ts("2024-01-01 00:05:00")), 3.0),
+      ("a", None, 100.0),
+      ("a", Some(ts("2024-01-01 00:10:00")), 5.0),
+      ("b", None, 200.0),
+      ("b", None, 300.0),
+      ("b", Some(ts("2024-01-01 00:01:00")), 7.0),
+      ("c", None, 400.0)
+    ).toDF("k", "time", "v")
+    val got = Resample.tumblingMean(df, "time", 10, extraKeys = Seq("k"))
+    val rows = got.orderBy("k", "time").collect()
+      .map(r => (r.getString(1), r.getTimestamp(0), r.getDouble(2), r.getLong(3))).toSeq
+    assert(rows === Seq(
+      ("a", ts("2024-01-01 00:00:00"), 2.0, 2L),
+      ("a", ts("2024-01-01 00:10:00"), 5.0, 1L),
+      ("b", ts("2024-01-01 00:00:00"), 7.0, 1L)))
+    val counts = df.where(col("time").isNotNull)
+      .groupBy(col("k"), window(col("time"), "10 minutes").as("w"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("k"), col("w.start").as("time"), col("n"))
+    val joined = got.join(counts, Seq("k", "time"), "full_outer")
+    assert(joined.count() === 3)
+    assert(joined.where(col("n_rows") =!= col("n") || col("n").isNull || col("n_rows").isNull)
+      .count() === 0)
+  }
+
   test("resample of a union equals resample over concatenated input") {
     val a = Seq((ts("2024-01-01 00:00:00"), 2.0)).toDF("time", "v")
     val b = Seq((ts("2024-01-01 00:01:00"), 4.0)).toDF("time", "v")

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 
 import graft.SparkTestBase
 import graft.io.{CamsExpertCsv, Sinks}
+import org.apache.spark.sql.catalyst.expressions.SubstringIndex
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end fixtures for the three reference pipelines (FIXTURES.md),
@@ -43,6 +45,21 @@ class SolarPipelinesSpec extends SparkTestBase {
     assert(df.columns.toSeq ===
       Seq("Observation period", "GHI", "DHI", "BNI", "Cloud coverage"))
     assert(df.count() === 20)
+  }
+
+  // Catalyst pushes a row filter on `time` below the projection that
+  // computes it, and evaluates the parse once more per row for each one
+  // (three `substring_index` with the two null-time filters the pipeline
+  // once had): only the projection may hold it.
+  test("resampleRaw parses the interval start once per row") {
+    val plan = SolarPipelines.resampleRaw(spark, rawPath).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val parses = plan.collect { case p => p.expressions.map(_.collect {
+      case s: SubstringIndex => s
+    }.size).sum }.sum
+    assert(parses === 1, plan.toString)
   }
 
   test("S2 failure isolation: corrupt data line yields nulls, not an abort") {

@@ -1,11 +1,14 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import scala.collection.mutable.ArrayBuffer
 
 import graft.SparkTestBase
+import graft.io.VerifyFixtures
 
-/** Smoke case for the probe entry point: one query, one dir, one
-  * iteration gives one parseable line.
+/** Smoke cases for the probe entry point: one query, one dir, one
+  * iteration gives one parseable line; `ingest` gives one per file.
   */
 class ProbeSpec extends SparkTestBase {
 
@@ -24,5 +27,23 @@ class ProbeSpec extends SparkTestBase {
         assert(shuffles.toInt === 1)
       case other => fail(s"unexpected probe output: $other")
     }
+  }
+
+  test("Probe ingest prints one parseable line per matched csv_expert file") {
+    val dir = Files.createTempDirectory("graft-probe-ingest-spec")
+    Seq("raw_b.csv", "raw_a.csv").foreach(n =>
+      Files.copy(Paths.get(VerifyFixtures.camsExpertFixture()), dir.resolve(n)))
+    val lines = ArrayBuffer[String]()
+    Probe.run(spark, Seq("ingest", s"$dir/raw_*.csv"))(lines += _)
+    val Line = ("""\[probe\] ingest (\S+) wall=([\d.]+)s mb=[\d.]+ jobs=(\d+) stages=\d+ """ +
+      """tasks=\d+ taskTime=[\d.]+s gc=[\d.]+s shufR=[\d.]+MB shufW=[\d.]+MB spill=[\d.]+MB""").r
+    val files = lines.toSeq.map {
+      case Line(file, wall, jobs) =>
+        assert(wall.toDouble > 0.0)
+        assert(jobs.toInt === 2)
+        new org.apache.hadoop.fs.Path(file).getName
+      case other => fail(s"unexpected probe output: $other")
+    }
+    assert(files === Seq("raw_a.csv", "raw_b.csv"))
   }
 }
